@@ -13,11 +13,17 @@ one declarative plan:
       → round(2)                             # AFTER aggregation (F3)
       → orderBy                              # monthly only (O1/O3)
 
-Scale: the fact table never shuffles for the join (450-row dim broadcast);
-the single shuffle is the final groupBy. The annual+monthly pair shares one
-scan via ROLLUP. At 100 TB (imagine hourly global 0.01° grids) the same plan
-holds: partition parquet by year, snap keys prune nothing but join stays
-broadcast, AQE coalesces the small aggregate output.
+Scale: the fact table never shuffles for the join (450-row dim broadcast).
+Before that join the grid is cut to the cells some municipality snaps to,
+and Catalyst pushes the cut down to the scans as a broadcast LeftSemi join
+(see ``daily_enriched``), so every exchange carries municipality cells
+only: on the raw path, the two of the long→wide pivot
+(``sources.ingest.pivot_grid_wide``), then the groupBy and the output
+sort. The annual+monthly pair shares one scan via ROLLUP. At 100 TB
+(imagine hourly global 0.01° grids) the same plan holds: partition parquet
+by year; the snap keys prune no files, but the cut drops every
+non-municipality cell inside the scan task; both broadcasts stay
+municipality-sized; AQE coalesces the small aggregate output.
 
 The ``queries()`` entries derive a deterministic grid_daily/municipalities
 pair from the driver's testdata (lineitem/nation) with engine-portable
@@ -52,6 +58,23 @@ def daily_enriched(
     Mirrors process_climate_amazon_annual.py:256-343: nearest-cell selection
     (sel method='nearest' → snap arithmetic on the dim side), 7-measure
     assembly (already wide here), and VPD on daily rows.
+
+    Before the join the grid is cut to the cells some municipality snaps
+    to, the reference's read-only-the-nearest-cell. The cut is a
+    correlated ``EXISTS``, not a ``left_semi`` join: Catalyst pushes a
+    predicate through Project, Aggregate and Union before rewriting it
+    into a (broadcast) LeftSemi join, so when ``grid_daily`` is the
+    long→wide pivot of per-variable scans (``pivot_grid_wide``) the cut
+    lands on every scan and the pivot shuffle carries only municipality
+    cells. A ``left_semi`` join is already a join when the optimizer
+    sees it and stays above the pivot. The subquery is built from
+    ``municipalities`` (not from ``dim``) with columns named
+    ``cell_lat``/``cell_lon`` on purpose: were ``grid_lat``/``grid_lon``
+    anywhere in its plan, ``.outer()`` would resolve inside the subquery
+    and the filter would become an uncorrelated, always-true ``EXISTS``
+    (the raw-pipeline plan test catches this). The cut holds at most one
+    row per municipality (5,570 for all of Brazil), so its broadcast is
+    never corpus-sized.
     """
     dim = municipalities.select(
         "CD_MUN",
@@ -60,7 +83,17 @@ def daily_enriched(
         grid_snap(F.col("lat"), step).alias("grid_lat"),
         grid_snap(F.col("lon"), step).alias("grid_lon"),
     )
+    cells = municipalities.select(
+        grid_snap(F.col("lat"), step).alias("cell_lat"),
+        grid_snap(F.col("lon"), step).alias("cell_lon"),
+    )
     fact = grid_daily.withColumnsRenamed({"lat": "grid_lat", "lon": "grid_lon"})
+    fact = fact.where(
+        cells.where(
+            (F.col("cell_lat") == F.col("grid_lat").outer())
+            & (F.col("cell_lon") == F.col("grid_lon").outer())
+        ).exists()
+    )
     return fact.join(F.broadcast(dim), ["grid_lat", "grid_lon"]).withColumn(
         "VPD", vpd_column(F.col("Tmax"), F.col("Tmin"), F.col("RH"))
     )

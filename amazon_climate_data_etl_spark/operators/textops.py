@@ -1827,7 +1827,7 @@ def _write_warc_segments(
     # n_files-way write fan-out. The exchange then also carries the raw
     # text instead of the larger marked-up page. Spark does not push
     # projections back down through a repartition, so the placement is
-    # stable (asserted against the plan in test_plan_quality).
+    # stable.
     if derive_after_shuffle:
         for name, col in derive_after_shuffle.items():
             shuffled = shuffled.withColumn(name, col)

@@ -31,7 +31,7 @@ from amazon_climate_data_etl_spark.sources.ingest import (
 
 
 def make_fixture(seed: int = 7):
-    """grid_daily (2 years daily, 6×6 cells) + 12 municipalities, FIXTURES.md A1/A2."""
+    """grid_daily (2 years daily, 6×6 cells) + 14 municipalities, FIXTURES.md A1/A2."""
     rng = np.random.default_rng(seed)
     dates = pd.date_range("2001-01-01", "2002-12-31", freq="D")
     lats = np.arange(-10.0, -8.5, 0.25)
@@ -60,7 +60,19 @@ def make_fixture(seed: int = 7):
             "lat": [-10.0 + 0.25 * (i // 2) - 0.04 for i in range(12)],
         }
     )
-    return grid, muns
+    # join semantics under the grid's municipality-cell cut: a second
+    # municipality on municipality 0's cell (-10.0, -65.0) must keep its
+    # own rows (fan-out), and one off the grid must produce none
+    extra = pd.DataFrame(
+        {
+            "CD_MUN": ["1100120", "1100121"],
+            "NM_MUN": ["Shared Cell", "Off Grid"],
+            "UF": ["PA", "RO"],
+            "lon": [-64.97, -60.0],
+            "lat": [-10.02, -12.0],
+        }
+    )
+    return grid, pd.concat([muns, extra], ignore_index=True)
 
 
 def pandas_reference(grid: pd.DataFrame, muns: pd.DataFrame, monthly: bool):

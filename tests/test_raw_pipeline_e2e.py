@@ -22,6 +22,7 @@ flavors the reference stack accepts:
 from __future__ import annotations
 
 import math
+import re
 
 import numpy as np
 import pandas as pd
@@ -31,6 +32,7 @@ from amazon_climate_data_etl_spark.operators.climate import (
     annual_pipeline,
     daily_enriched,
 )
+from amazon_climate_data_etl_spark.plans import inspect as I
 from amazon_climate_data_etl_spark.sources.ingest import (
     ingest_netcdf_to_parquet,
     municipalities_from_shapefile,
@@ -170,8 +172,8 @@ def _expected_annual(cd_mun, nm_mun, uf, la_idx, lo_idx):
 import pytest
 
 
-@pytest.mark.parametrize("flavor", ["classic", "netcdf4_utm", "zarr"])
-def test_reference_pipeline_from_raw_inputs(spark, tmp_path, flavor):
+def _raw_annual(spark, tmp_path, flavor):
+    """Ingest the raw fixture and build (wide grid, annual output)."""
     raw_dir, shp_path = _write_raw_inputs(tmp_path, flavor)
 
     # S1: one distributed ingest job per variable (file- or chunk-parallel)
@@ -195,17 +197,19 @@ def test_reference_pipeline_from_raw_inputs(spark, tmp_path, flavor):
 
     # J2: 7-way assembly as one pivot
     wide = pivot_grid_wide(long)
-    assert set(wide.columns) == {"date", "lat", "lon", *VARS}
 
     # S2: real shapefile → centroid dimension
     dim = municipalities_from_shapefile(spark, shp_path)
 
     # J-NN + F1 + A1/F3
-    out = (
-        annual_pipeline(daily_enriched(wide, dim, step=0.25))
-        .toPandas()
-        .set_index("CD_MUN")
-    )
+    return wide, annual_pipeline(daily_enriched(wide, dim, step=0.25))
+
+
+@pytest.mark.parametrize("flavor", ["classic", "netcdf4_utm", "zarr"])
+def test_reference_pipeline_from_raw_inputs(spark, tmp_path, flavor):
+    wide, annual = _raw_annual(spark, tmp_path, flavor)
+    assert set(wide.columns) == {"date", "lat", "lon", *VARS}
+    out = annual.toPandas().set_index("CD_MUN")
     assert len(out) == 2
 
     exp_a = _expected_annual("1100015", "MunA", "RO", la_idx=0, lo_idx=0)
@@ -216,3 +220,50 @@ def test_reference_pipeline_from_raw_inputs(spark, tmp_path, flavor):
         assert row["year"] == 2001
         for v in ("pr", "ETo", "Rs", "Tmax", "Tmin", "RH", "VPD", "u2"):
             assert abs(row[v] - exp[v]) < 1e-9, (exp["CD_MUN"], v, row[v], exp[v])
+
+
+def _plan_ancestors(plan: str):
+    """(node line, its ancestor lines nearest first) for every node of an
+    explain("simple") tree: a node's parent is the closest line above it
+    whose operator name starts further left."""
+    lines = [ln for ln in plan.splitlines() if ln.strip()]
+    col = []
+    for ln in lines:
+        m = re.search(r"[+:]- ", ln)
+        col.append(m.end() if m else len(ln) - len(ln.lstrip()))
+    out = []
+    for i, line in enumerate(lines):
+        chain, c = [], col[i]
+        for j in range(i - 1, -1, -1):
+            if col[j] < c:
+                chain.append(lines[j])
+                c = col[j]
+        out.append((line, chain))
+    return out
+
+
+def test_municipality_cell_cut_reaches_every_variable_scan(spark, tmp_path):
+    """``daily_enriched``'s correlated EXISTS must land on each
+    per-variable parquet scan as a broadcast LeftSemi join, below the
+    pivot's first shuffle, so the pivot moves municipality cells only.
+    An uncorrelated EXISTS (inner and outer column names colliding) or a
+    left_semi join above the pivot both fail here."""
+    _, annual = _raw_annual(spark, tmp_path, "classic")
+    plan = I.plan_string(annual, "simple")
+    scans = [
+        (node, chain)
+        for node, chain in _plan_ancestors(plan)
+        if "FileScan parquet" in node  # the dimension is a local table
+    ]
+    assert len(scans) == len(VARS), plan
+    for node, chain in scans:
+        semi = next(
+            (k for k, a in enumerate(chain) if "BroadcastHashJoin" in a and "LeftSemi" in a),
+            None,
+        )
+        shuffle = next(
+            (k for k, a in enumerate(chain) if re.search(r"\bExchange hashpartitioning", a)),
+            None,
+        )
+        assert semi is not None, node
+        assert shuffle is not None and semi < shuffle, node
