@@ -537,8 +537,9 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The r14 form broadcast the per-print ``collect_list(doc_id)`` group
     frame — its row count is print-bounded but its doc-list payload is
     O(corpus), a memory wall at 100 TB. Now the only broadcast frames are
-    PRINT-SPACE-bounded (≤ 2¹⁶ rows at 16 bits, independent of corpus
-    size):
+    PRINT-SPACE-bounded, independent of corpus size: the print-pair frame
+    holds at most |prints| × |ham≤3 neighbourhood| / 2 rows — at 16 bits
+    2¹⁶ × (1 + 16 + 120 + 560) / 2 ≈ 23M:
     1. print pairs: distinct prints × distinct prints under hamming ≤ 3 —
        a broadcast nested-loop over two bounded sides (at 64-bit prints
        this one step becomes the pigeonhole-banded equi-join on 16-bit

@@ -1,4 +1,4 @@
-"""Dependency-free Blosc1 container codec (the Zarr ecosystem's default).
+"""Blosc1 container codec (the Zarr ecosystem's default), no python-blosc.
 
 numcodecs' ``Blosc`` — the compressor most real Zarr v2 climate archives
 were written with (default ``cname='lz4', shuffle=SHUFFLE``) — wraps every
@@ -9,7 +9,9 @@ reference implementation at github.com/Blosc/c-blosc); this module
 implements the subset those archives actually use so the chunk-parallel
 Zarr ingest (``zarr_min.py`` → ``ingest.ingest_zarr_to_parquet``) can
 decode them in containers without python-blosc — the same clean-room
-pattern as ``hdf5_min.py``.
+pattern as ``hdf5_min.py``. The container is parsed here; the entropy
+codecs inside it are not: ``decode_exact`` hands each split to pyarrow's
+C++ codecs or the stdlib and proves the decoded length.
 
 Implemented:
 - the 16-byte header (version/versionlz/flags/typesize + nbytes/blocksize/
@@ -20,12 +22,11 @@ Implemented:
   header flags bit 4 (``dont_split``, c-blosc >= 1.14) is clear — the
   decoder recomputes this deterministically from the header, so both
   pre- and post-1.14 writers decode correctly;
-- inner codecs: LZ4 (codec id 1 — block format, both directions, pure
-  Python), snappy (codec id 2, decode only — raw block format per split,
-  cross-checked against pyarrow's snappy codec), zlib (codec id 3 —
-  stdlib), and zstd (codec id 4, decode only — one RFC 8878 frame per
-  split, via the dependency-free ``zstd_min``); per-split stored-raw
-  fallback (``csize == neblock``);
+- inner codecs: LZ4 (codec id 1 — block format, both directions, via
+  pyarrow's ``lz4_raw``), snappy (codec id 2, decode only — one raw block
+  per split, via pyarrow's ``snappy``), zlib (codec id 3 — stdlib), and
+  zstd (codec id 4, decode only — one frame per split, via pyarrow's
+  ``zstd``); per-split stored-raw fallback (``csize == neblock``);
 - byte-shuffle (flags bit 0): numpy transpose per block, trailing
   non-multiple-of-typesize bytes carried verbatim (c-blosc
   ``shuffle_generic`` semantics).
@@ -33,9 +34,7 @@ Implemented:
 FAILS LOUDLY (pointer at the ``blosc`` library) on: bit-shuffle (flags
 bit 2), blosclz (codec 0 — blosc's own codec, no in-container reference
 implementation to validate a clean-room decoder against), snappy/zstd
-WRITING, and blosc2 frames. The LZ4 hot loops are pure Python —
-correct-but-slow; a throughput deployment installs python-blosc and this
-boundary steps aside (same posture as the NetCDF/HDF5 fallbacks).
+WRITING, and blosc2 frames.
 
 Format cross-checks live in ``tests/test_blosc.py``: hand-built byte
 vectors written straight from the published format (independent of the
@@ -49,6 +48,7 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
 
 _VERSION_FORMAT = 2  # c-blosc1 BLOSC_VERSION_FORMAT
 _MAX_SPLITS = 16  # c-blosc MAX_SPLITS
@@ -76,241 +76,68 @@ def _gate(msg: str) -> NotImplementedError:
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block format (lz4.org block spec: token, literal run, LE16 offset,
-# match run; 255-extension bytes; last sequence literals-only)
+# inner codecs: pyarrow's C++ lz4_raw / snappy / zstd, the stdlib for zlib
 # ---------------------------------------------------------------------------
 
-
-def lz4_decompress(src: bytes, dst_size: int) -> bytes:
-    """Decode one LZ4 block into exactly ``dst_size`` bytes.
-
-    Truncated or otherwise corrupt input always raises ``ValueError`` —
-    every read is bounds-checked before it happens, so a short literal
-    run can never silently shrink ``out`` and shift later back-references.
-    """
-    out = bytearray(dst_size)
-    n = len(src)
-    ip = 0
-    op = 0
-    while ip < n:
-        token = src[ip]
-        ip += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                if ip >= n:
-                    raise ValueError("corrupt LZ4 block: truncated literal length")
-                c = src[ip]
-                ip += 1
-                lit += c
-                if c != 255:
-                    break
-        if lit:
-            if ip + lit > n:
-                raise ValueError(
-                    f"corrupt LZ4 block: literal run of {lit} bytes at {ip} "
-                    f"overruns {n}-byte input"
-                )
-            if op + lit > dst_size:
-                raise ValueError("corrupt LZ4 block: literals overrun output")
-            out[op : op + lit] = src[ip : ip + lit]
-            ip += lit
-            op += lit
-        if ip >= n:  # last sequence carries literals only
-            break
-        if ip + 2 > n:
-            raise ValueError("corrupt LZ4 block: truncated match offset")
-        offset = src[ip] | (src[ip + 1] << 8)
-        ip += 2
-        if offset == 0 or offset > op:
-            raise ValueError(f"corrupt LZ4 block: offset {offset} at {op}")
-        mlen = (token & 0xF) + 4
-        if mlen == 19:
-            while True:
-                if ip >= n:
-                    raise ValueError("corrupt LZ4 block: truncated match length")
-                c = src[ip]
-                ip += 1
-                mlen += c
-                if c != 255:
-                    break
-        if op + mlen > dst_size:
-            raise ValueError("corrupt LZ4 block: match overruns output")
-        ref = op - offset
-        if offset >= mlen:  # disjoint: one slice copy
-            out[op : op + mlen] = out[ref : ref + mlen]
-            op += mlen
-        else:  # overlapping run: the match reads bytes it just wrote
-            for _ in range(mlen):
-                out[op] = out[ref]
-                op += 1
-                ref += 1
-    if op != dst_size:
-        raise ValueError(f"LZ4 block decoded {op} bytes, expected {dst_size}")
-    return bytes(out)
+_PA_CODECS = {
+    "lz4": pa.Codec("lz4_raw"),
+    "snappy": pa.Codec("snappy"),
+    "zstd": pa.Codec("zstd"),
+}
 
 
-def lz4_compress(src: bytes) -> bytes:
-    """Greedy single-pass LZ4 block encoder (hash-chain-free: last match
-    position per 4-byte prefix). Honors the spec's end conditions: the
-    final 5 bytes are literals and no match starts within the last 12."""
-    n = len(src)
-    out = bytearray()
-
-    def emit(anchor: int, end: int, mlen: int = 0, offset: int = 0) -> None:
-        lit = end - anchor
-        lit_tok = 15 if lit >= 15 else lit
-        m_tok = 0
-        if mlen:
-            m = mlen - 4
-            m_tok = 15 if m >= 15 else m
-        out.append((lit_tok << 4) | m_tok)
-        if lit >= 15:
-            rest = lit - 15
-            while rest >= 255:
-                out.append(255)
-                rest -= 255
-            out.append(rest)
-        out.extend(src[anchor:end])
-        if mlen:
-            out.append(offset & 0xFF)
-            out.append(offset >> 8)
-            m = mlen - 4
-            if m >= 15:
-                rest = m - 15
-                while rest >= 255:
-                    out.append(255)
-                    rest -= 255
-                out.append(rest)
-
-    if n < 13:  # too small for any spec-legal match
-        emit(0, n)
-        return bytes(out)
-
-    table: dict[bytes, int] = {}
-    anchor = 0
-    i = 0
-    mflimit = n - 12  # no match may start past here
-    matchlimit = n - 5  # ...or extend past here
-    while i < mflimit:
-        key = src[i : i + 4]
-        cand = table.get(key)
-        table[key] = i
-        if cand is not None and i - cand <= 65535 and src[cand : cand + 4] == key:
-            mlen = 4
-            while i + mlen < matchlimit and src[cand + mlen] == src[i + mlen]:
-                mlen += 1
-            emit(anchor, i, mlen, i - cand)
-            i += mlen
-            anchor = i
-        else:
-            i += 1
-    emit(anchor, n)
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Snappy raw block format (google/snappy format_description.txt: varint32
-# uncompressed-length preamble, then literal / 1-2-4-byte-offset copy
-# elements; copies may overlap). c-blosc compresses each split with
-# snappy_compress — one raw block per split, same wire bytes pyarrow's
-# 'snappy' codec produces, which is the in-container reference the tests
-# cross-check against.
-# ---------------------------------------------------------------------------
-
-
-def snappy_decompress(src: bytes, max_len: int | None = None) -> bytes:
-    """Decode one raw snappy block. Corrupt or truncated input always
-    raises ``ValueError`` — every read is bounds-checked first, and the
-    output buffer is allocated only after the preamble length passes the
-    caller-known ``max_len`` bound (a ~6-byte corrupt preamble could
-    otherwise trigger a transient 2 GB allocation per task — the same
-    dst-size contract lz4_decompress enforces)."""
-    n = len(src)
+def _snappy_preamble(src: bytes) -> int:
+    """The varint32 uncompressed length that opens a raw snappy block."""
     ulen = 0
-    shift = 0
-    ip = 0
-    while True:
-        if ip >= n:
-            raise ValueError("corrupt snappy block: truncated length preamble")
-        b = src[ip]
-        ip += 1
-        ulen |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            break
-        shift += 7
-        if shift > 28:
-            raise ValueError("corrupt snappy block: preamble varint too long")
-    if ulen >= 1 << 31:
-        raise ValueError(f"corrupt snappy block: implausible length {ulen}")
-    if max_len is not None and ulen > max_len:
-        raise ValueError(
-            f"corrupt snappy block: preamble claims {ulen} bytes, caller "
-            f"expects at most {max_len}"
-        )
-    out = bytearray(ulen)
-    op = 0
-    while ip < n:
-        tag = src[ip]
-        ip += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            l6 = tag >> 2
-            if l6 < 60:
-                length = l6 + 1
-            else:
-                nb = l6 - 59  # 1..4 trailing little-endian length bytes
-                if ip + nb > n:
-                    raise ValueError(
-                        "corrupt snappy block: truncated literal length"
-                    )
-                length = int.from_bytes(src[ip : ip + nb], "little") + 1
-                ip += nb
-            if ip + length > n:
-                raise ValueError(
-                    f"corrupt snappy block: literal run of {length} bytes "
-                    f"at {ip} overruns {n}-byte input"
-                )
-            if op + length > ulen:
-                raise ValueError("corrupt snappy block: literals overrun output")
-            out[op : op + length] = src[ip : ip + length]
-            ip += length
-            op += length
-            continue
-        if kind == 1:  # copy, 11-bit offset, 4-11 byte length
-            if ip >= n:
-                raise ValueError("corrupt snappy block: truncated 1-byte offset")
-            length = ((tag >> 2) & 0x7) + 4
-            offset = ((tag >> 5) << 8) | src[ip]
-            ip += 1
-        elif kind == 2:  # copy, 16-bit offset
-            if ip + 2 > n:
-                raise ValueError("corrupt snappy block: truncated 2-byte offset")
-            length = (tag >> 2) + 1
-            offset = src[ip] | (src[ip + 1] << 8)
-            ip += 2
-        else:  # copy, 32-bit offset
-            if ip + 4 > n:
-                raise ValueError("corrupt snappy block: truncated 4-byte offset")
-            length = (tag >> 2) + 1
-            offset = int.from_bytes(src[ip : ip + 4], "little")
-            ip += 4
-        if offset == 0 or offset > op:
-            raise ValueError(f"corrupt snappy block: offset {offset} at {op}")
-        if op + length > ulen:
-            raise ValueError("corrupt snappy block: copy overruns output")
-        ref = op - offset
-        if offset >= length:  # disjoint: one slice copy
-            out[op : op + length] = out[ref : ref + length]
-            op += length
-        else:  # overlapping run (RLE-style): reads bytes it just wrote
-            for _ in range(length):
-                out[op] = out[ref]
-                op += 1
-                ref += 1
-    if op != ulen:
-        raise ValueError(f"snappy block decoded {op} bytes, expected {ulen}")
-    return bytes(out)
+    for i, b in enumerate(src[:5]):
+        ulen |= (b & 0x7F) << (7 * i)
+        if not b & 0x80:
+            return ulen
+    raise ValueError("corrupt snappy block: bad length preamble")
+
+
+def decode_exact(cname: str, src: bytes, size: int) -> bytes:
+    """Decode one ``cname`` block (lz4/snappy/zlib/zstd) into exactly
+    ``size`` bytes — the one place that knows which library decodes an
+    inner codec.
+
+    pyarrow hands back a buffer of the REQUESTED size, so a block that
+    decodes short comes back padded with uninitialized memory that no
+    later length check can see. The length is proven here instead:
+    snappy's varint preamble must equal ``size`` (checked before any
+    allocation); an lz4 block must NOT fit in ``size - 1`` bytes; arrow's
+    zstd path already fails unless the frames fill ``size`` exactly (and
+    libzstd verifies content checksums); zlib's output length is compared.
+    Corrupt input always raises ``ValueError`` — pyarrow's ``OSError`` is
+    mapped — so callers keep a ValueError/NotImplementedError-only contract.
+    """
+    if cname == "zlib":
+        try:
+            out = zlib.decompress(src)
+        except zlib.error as exc:
+            raise ValueError(f"corrupt zlib data: {exc}") from exc
+        if len(out) != size:
+            raise ValueError(f"zlib data decoded {len(out)} bytes, expected {size}")
+        return out
+    if cname == "snappy":
+        claimed = _snappy_preamble(src)
+        if claimed != size:
+            raise ValueError(
+                f"corrupt snappy block: preamble claims {claimed} bytes, "
+                f"caller expects {size}"
+            )
+    codec = _PA_CODECS[cname]
+    try:
+        out = codec.decompress(src, size, asbytes=True)
+    except (OSError, pa.ArrowInvalid) as exc:
+        raise ValueError(f"corrupt {cname} data: {exc}") from exc
+    if cname == "lz4" and size:
+        try:
+            codec.decompress(src, size - 1)
+        except OSError:
+            return out
+        raise ValueError(f"lz4 block decodes to fewer than {size} bytes")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -390,36 +217,12 @@ def decompress(buf: bytes) -> bytes:
         raise ValueError(f"corrupt blosc header: blocksize={blocksize}")
     if flags & _FLAG_BITSHUFFLE:
         raise _gate("bit-shuffle (flags bit 2)")
+    # c-blosc compresses each split with one whole inner-codec call: an
+    # LZ4 block, a raw snappy block, a zlib stream or a complete zstd frame
     codec = (flags >> 5) & 0x7
-    if codec == _CODEC_LZ4:
-        dec = lz4_decompress
-    elif codec == _CODEC_ZLIB:
-
-        def dec(b: bytes, size: int) -> bytes:  # noqa: ARG001
-            try:
-                return zlib.decompress(b)
-            except zlib.error as exc:
-                raise ValueError(f"corrupt zlib split: {exc}") from exc
-
-    elif codec == _CODEC_ZSTD:
-        # c-blosc compresses each split with ZSTD_compress, i.e. one
-        # complete zstd frame per split — decoded by the dependency-free
-        # RFC 8878 decoder (round 8; the most common real-world Zarr
-        # compressor, previously the top-ranked missing format)
-        from amazon_climate_data_etl_spark.sources import zstd_min
-
-        def dec(b: bytes, size: int) -> bytes:  # noqa: ARG001
-            return zstd_min.decompress(b)
-
-    elif codec == _CODEC_SNAPPY:
-        # c-blosc compresses each split with snappy_compress — one raw
-        # snappy block (varint preamble + elements) per split; the
-        # expected split size bounds the preamble before allocation
-        def dec(b: bytes, size: int) -> bytes:
-            return snappy_decompress(b, max_len=size)
-
-    else:
-        raise _gate(f"blosc inner codec {_CODEC_NAMES.get(codec, codec)!r}")
+    cname = _CODEC_NAMES.get(codec, codec)
+    if cname not in ("lz4", "snappy", "zlib", "zstd"):
+        raise _gate(f"blosc inner codec {cname!r}")
 
     nblocks = -(-nbytes // blocksize)
     if len(buf) < 16 + 4 * nblocks:
@@ -453,12 +256,7 @@ def decompress(buf: bytes) -> bytes:
             if csize == neblock:  # stored-raw split
                 block += payload
             else:
-                piece = dec(payload, neblock)
-                if len(piece) != neblock:
-                    raise ValueError(
-                        f"split decoded {len(piece)} bytes, expected {neblock}"
-                    )
-                block += piece
+                block += decode_exact(cname, payload, neblock)
         if flags & _FLAG_SHUFFLE and typesize > 1:
             block = unshuffle(bytes(block), typesize)
         out += block
@@ -486,7 +284,11 @@ def compress(
     aligned to ``typesize``; falls back to memcpy mode when compression
     does not pay."""
     if cname == "lz4":
-        codec, enc = _CODEC_LZ4, lz4_compress
+
+        def enc(piece: bytes) -> bytes:
+            return _PA_CODECS["lz4"].compress(piece, asbytes=True)
+
+        codec = _CODEC_LZ4
     elif cname == "zlib":
         codec, enc = _CODEC_ZLIB, zlib.compress
     else:

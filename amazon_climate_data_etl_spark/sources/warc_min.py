@@ -19,7 +19,7 @@ files are exactly this task unit; at 100 TB the fan-out is the file
 count). Corrupt input FAILS LOUDLY — truncated blocks, missing
 Content-Length, a bad version line, or a missing record separator raise
 with offsets rather than yielding silently-truncated corpora (the same
-contract as zstd_min/blosc_min).
+contract as blosc_min/zarr_min).
 
 Task-memory contract (r12): decoding is MEMBER-AT-A-TIME — the
 decompressor is fed bounded 1 MiB slices of a memoryview, so no step

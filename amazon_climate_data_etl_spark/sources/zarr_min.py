@@ -1,4 +1,4 @@
-"""Dependency-free Zarr v2 + v3 chunked-array reader + writer (spec subset).
+"""Zarr v2 + v3 chunked-array reader + writer (spec subset, no zarr package).
 
 Zarr is the cloud-native chunk-store format climate archives are moving
 to — the same logical model as the reference's NetCDF inputs (named N-D
@@ -20,9 +20,10 @@ Implemented subset of the public spec
 - C order, numeric dtypes, raw (null), zlib/gzip, bare lz4 (numcodecs
   LZ4: LE32 size prefix + raw block), or blosc compression
   (the numcodecs default — lz4/lz4hc/snappy/zlib/zstd cnames with
-  byte-shuffle, via the dependency-free ``blosc_min`` container codec,
-  the RFC 8878 ``zstd_min`` decoder, and the raw-block snappy decoder;
-  the blosclz cname and bit-shuffle stay gated at the ``blosc`` library)
+  byte-shuffle, via the ``blosc_min`` container codec), or bare zstd
+  (numcodecs Zstd: one frame per chunk); every lz4/snappy/zstd block goes
+  through ``blosc_min.decode_exact`` (pyarrow's C++ codecs, length-checked);
+  the blosclz cname and bit-shuffle stay gated at the ``blosc`` library
 - missing chunk keys read as ``fill_value`` (the spec's sparse-write rule)
 - edge chunks stored full-size (written padded with fill_value, trimmed on
   read), per spec
@@ -30,7 +31,7 @@ Implemented subset of the public spec
   attributes (including xarray's public ``_ARRAY_DIMENSIONS`` convention
   for dimension naming)
 
-Round 7 adds the Zarr **v3** read subset (the spec is final and cloud
+The Zarr **v3** read subset (the spec is final and cloud
 archives are migrating; https://zarr-specs.readthedocs.io/, v3 core):
 - per-node ``zarr.json`` metadata (``node_type`` array/group), inline
   ``attributes``, first-class ``dimension_names`` (mapped onto the same
@@ -39,7 +40,7 @@ archives are migrating; https://zarr-specs.readthedocs.io/, v3 core):
   (``c/0/1`` keys, '/' or '.' separator) and ``v2`` (bare ``0.1`` keys)
 - codec chains ``[bytes]``, ``[bytes, gzip]``, ``[bytes, blosc]``
   (same blosc subset as v2), and ``[bytes, zstd]`` — zarr-python v3's
-  DEFAULT codec (round 8); both endians
+  DEFAULT codec; both endians
 - the ``sharding_indexed`` codec (ZEP 2): each stored object is one
   SHARD of many inner chunks behind a crc32c-checked ``(offset, nbytes)``
   index (start- or end-located) — the layout cloud archives use to keep
@@ -67,7 +68,7 @@ from itertools import product
 
 import numpy as np
 
-from amazon_climate_data_etl_spark.sources import blosc_min, zstd_min
+from amazon_climate_data_etl_spark.sources import blosc_min
 
 _ZARR_FORMAT = 2
 
@@ -98,10 +99,10 @@ class ZarrMeta:
     # chunk needs none — the container header is self-describing
     blosc_cfg: tuple | None = None
     # v2 storage order: "C" (default) or "F" — xarray writes F-order
-    # stores for transposed data (round 8)
+    # stores for transposed data
     order: str = "C"
     # v2 filter chain, innermost-first as stored in .zarray: tuples of
-    # ("delta", dtype, astype) / ("shuffle", elementsize) (round 8)
+    # ("delta", dtype, astype) / ("shuffle", elementsize)
     filters: tuple = ()
 
 
@@ -135,9 +136,8 @@ def parse_zarray(raw: bytes) -> ZarrMeta:
         if comp_id == "blosc":
             cname = comp.get("cname", "blosclz")
             # lz4hc shares the lz4 block format, so reading is identical;
-            # zstd (numcodecs' most common modern cname) decodes via
-            # zstd_min inside the blosc container, snappy via the raw-block
-            # decoder (both round 8)
+            # zstd (numcodecs' most common modern cname) and snappy decode
+            # inside the blosc container like lz4
             if cname not in ("lz4", "lz4hc", "zlib", "zstd", "snappy"):
                 raise _gate(f"blosc cname {cname!r}")
             sh = comp.get("shuffle", 1)
@@ -147,7 +147,7 @@ def parse_zarray(raw: bytes) -> ZarrMeta:
             # typesize > 1; harmless either way — decode is header-driven
             blosc_cfg = ("lz4" if cname == "lz4hc" else cname, sh != 0)
         elif comp_id not in ("zlib", "gzip", "zstd", "lz4"):
-            # "zstd" = numcodecs Zstd: one bare RFC 8878 frame per chunk;
+            # "zstd" = numcodecs Zstd: one bare zstd frame per chunk;
             # "lz4" = numcodecs LZ4: LE32 size prefix + one raw block
             raise _gate(f"compressor {comp_id!r}")
     try:
@@ -341,8 +341,17 @@ def _decode_inner(raw: bytes, meta: ZarrMeta) -> bytes:
         return zlib.decompress(raw, 16 + zlib.MAX_WBITS)
     if meta.compressor_id == "blosc":
         return blosc_min.decompress(raw)
-    if meta.compressor_id == "zstd":  # v3 standalone zstd codec (the default)
-        return zstd_min.decompress(raw)
+    if meta.compressor_id == "zstd":
+        # one bare frame (numcodecs Zstd, or the v3 zstd codec — the
+        # default): it holds the payload BEFORE the decode filters run, so
+        # its size is the element count at the itemsize the first decode
+        # filter reads (a delta filter stores its differences as astype)
+        itemsize = meta.dtype.itemsize
+        for f in meta.filters:
+            if f[0] == "delta":
+                itemsize = f[2].itemsize
+        size = int(np.prod(meta.chunks)) * itemsize
+        return blosc_min.decode_exact("zstd", raw, size)
     if meta.compressor_id == "lz4":
         # bare numcodecs LZ4: LE32 uncompressed size, then one raw block
         if len(raw) < 4:
@@ -350,7 +359,7 @@ def _decode_inner(raw: bytes, meta: ZarrMeta) -> bytes:
                 f"lz4 chunk of {len(raw)} bytes lacks its size prefix"
             )
         n = int.from_bytes(raw[:4], "little")
-        return blosc_min.lz4_decompress(raw[4:], n)
+        return blosc_min.decode_exact("lz4", raw[4:], n)
     return raw
 
 

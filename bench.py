@@ -27,11 +27,12 @@ Env knobs (driver contract):
     BENCH_COOLDOWN      seconds to sleep between queries after the cache
                         clear + GC (default 0)
     BENCH_ISOLATED      how many of the slowest queries to re-measure after
-                        the sweep under quiesced conditions (default 5 for
-                        full runs, 0 for BENCH_QUERIES subsets); the payload
-                        records sweep-vs-isolated per query, so cross-query
-                        interference is quantified instead of misread as a
-                        regression
+                        the sweep under quiesced conditions (default 5);
+                        BENCH_local.json records sweep-vs-isolated per
+                        query, so cross-query interference is quantified
+                        instead of misread as a regression. BENCH_QUERIES
+                        subset runs skip the isolated pass whatever this
+                        says: they write no BENCH_local.json to hold it
     BENCH_MOVER_PCT     additionally re-measure in isolation every query
                         whose sweep time moved more than this fraction vs
                         the previous round's committed BENCH_r*.json
@@ -219,9 +220,7 @@ def main() -> None:
     # misreport by ~2× under cross-query memory/GC pressure (r4 finding);
     # recording both numbers per round makes interference visible instead
     # of masquerading as a plan regression
-    n_isolated = int(
-        os.environ.get("BENCH_ISOLATED", "0" if subset else "5")
-    )
+    n_isolated = 0 if subset else int(os.environ.get("BENCH_ISOLATED", "5"))
     iso_names = set(sorted(timings, key=lambda k: -timings[k])[:n_isolated])
 
     # pinned watchlist (r7 review item 7; r8 item 3 added the two sweep

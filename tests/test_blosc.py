@@ -15,6 +15,7 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -22,47 +23,55 @@ from hypothesis import strategies as st
 from amazon_climate_data_etl_spark.sources import blosc_min as B
 
 # --- LZ4 block format: spec-derived hand vectors ---------------------------
+# decoded through B.decode_exact (pyarrow's lz4_raw); pyarrow's encoder
+# writes the round-trip blocks
+
+
+def _lz4(data: bytes) -> bytes:
+    return pa.Codec("lz4_raw").compress(data, asbytes=True)
 
 
 def test_lz4_literals_only():
     # token 0x50: 5 literals, no match (legal last sequence)
-    assert B.lz4_decompress(bytes([0x50]) + b"abcde", 5) == b"abcde"
+    assert B.decode_exact("lz4", bytes([0x50]) + b"abcde", 5) == b"abcde"
 
 
 def test_lz4_simple_match():
-    # 4 literals 'abcd', match offset 4 len 4, then final 5 literals
-    blk = bytes([0x40]) + b"abcd" + bytes([4, 0]) + bytes([0x50]) + b"vwxyz"
-    assert B.lz4_decompress(blk, 13) == b"abcdabcdvwxyz"
+    # 4 literals 'abcd', match offset 4 len 4, then final 8 literals (the
+    # spec's end condition: the last match starts >= 12 bytes before the end)
+    blk = bytes([0x40]) + b"abcd" + bytes([4, 0]) + bytes([0x80]) + b"stuvwxyz"
+    assert B.decode_exact("lz4", blk, 16) == b"abcdabcdstuvwxyz"
 
 
 def test_lz4_overlapping_match_is_a_run():
     # 1 literal 'a', match offset 1 len 8 -> 'a' * 9 (RLE via overlap)
     blk = bytes([0x14]) + b"a" + bytes([1, 0]) + bytes([0x50]) + b"bcdef"
-    assert B.lz4_decompress(blk, 14) == b"a" * 9 + b"bcdef"
+    assert B.decode_exact("lz4", blk, 14) == b"a" * 9 + b"bcdef"
 
 
 def test_lz4_length_extension_bytes():
     # literal run of 15+255+3 = 273 'x's encoded with two extension bytes
     lits = b"x" * 273
     blk = bytes([0xF0, 255, 3]) + lits
-    assert B.lz4_decompress(blk, 273) == lits
+    assert B.decode_exact("lz4", blk, 273) == lits
     # match-length extension: token mlen=15 -> 15+4+extension(2) = 21
     blk = (
         bytes([0x1F]) + b"q" + bytes([1, 0]) + bytes([2])
         + bytes([0x50]) + b"abcde"
     )
-    assert B.lz4_decompress(blk, 27) == b"q" * 22 + b"abcde"
+    assert B.decode_exact("lz4", blk, 27) == b"q" * 22 + b"abcde"
 
 
 def test_lz4_corrupt_offset_fails_loudly():
-    with pytest.raises(ValueError, match="offset"):
-        B.lz4_decompress(bytes([0x10]) + b"a" + bytes([9, 0]), 6)
+    # offset 9 reaches before the start of the output
+    with pytest.raises(ValueError, match="corrupt lz4"):
+        B.decode_exact("lz4", bytes([0x10]) + b"a" + bytes([9, 0]), 6)
 
 
 @settings(max_examples=120, deadline=None)
 @given(data=st.binary(min_size=0, max_size=4096))
 def test_lz4_roundtrip_arbitrary(data):
-    assert B.lz4_decompress(B.lz4_compress(data), len(data)) == data
+    assert B.decode_exact("lz4", _lz4(data), len(data)) == data
 
 
 @settings(max_examples=40, deadline=None)
@@ -73,8 +82,8 @@ def test_lz4_roundtrip_arbitrary(data):
 )
 def test_lz4_roundtrip_repetitive(n, alphabet, seed):
     data = bytes(np.random.default_rng(seed).integers(0, alphabet, n, dtype=np.uint8))
-    comp = B.lz4_compress(data)
-    assert B.lz4_decompress(comp, n) == data
+    comp = _lz4(data)
+    assert B.decode_exact("lz4", comp, n) == data
     if n > 600:  # repetitive data must actually compress
         assert len(comp) < n
 
@@ -117,7 +126,7 @@ def test_container_split_shuffled_lz4_hand_built():
     splits = []
     for k in range(4):
         piece = planes[k].tobytes()
-        comp = B.lz4_compress(piece)
+        comp = _lz4(piece)
         if len(comp) >= len(piece):  # stored-raw split
             comp = piece
         splits.append(struct.pack("<i", len(comp)) + comp)
@@ -134,14 +143,14 @@ def test_container_split_shuffled_lz4_hand_built():
 def test_container_gates_fail_loudly():
     with pytest.raises(NotImplementedError, match="bit-shuffle"):
         B.decompress(_header(B._FLAG_BITSHUFFLE | (1 << 5), 4, 64, 64, 16))
-    # zstd (codec 4) is SUPPORTED since round 8 — a header-only buffer
-    # with no valid frame now fails as corrupt, not as a gate
+    # zstd (codec 4) is supported — a header-only buffer with no valid
+    # frame fails as corrupt, not as a gate
     with pytest.raises(ValueError):
         B.decompress(_header(B._CODEC_ZSTD << 5, 4, 64, 64, 16))
     with pytest.raises(NotImplementedError, match="blosclz"):
         B.decompress(_header(0, 4, 64, 64, 16))
-    # snappy (codec 2) is SUPPORTED since round 8 — a header-only buffer
-    # with no valid block now fails as corrupt, not as a gate
+    # snappy (codec 2) is supported — a header-only buffer with no valid
+    # block fails as corrupt, not as a gate
     with pytest.raises(ValueError):
         B.decompress(_header(B._CODEC_SNAPPY << 5, 4, 64, 64, 16))
     with pytest.raises(ValueError, match="header"):
@@ -219,49 +228,49 @@ def test_writer_gates_unsupported_cnames():
 
 
 # --- snappy raw block format (codec 2) ---------------------------------------
-# pyarrow's 'snappy' codec is the in-container reference implementation
-# (raw block format, the same wire bytes c-blosc's snappy_compress emits);
-# spec vectors below are hand-built from google/snappy
-# format_description.txt, independent of both implementations.
+# pyarrow's 'snappy' codec writes the reference blocks (raw block format, the
+# same wire bytes c-blosc's snappy_compress emits) and decodes them behind
+# B.decode_exact; spec vectors below are hand-built from google/snappy
+# format_description.txt, independent of any implementation.
 
 
 def _pa_snappy(data: bytes) -> bytes:
-    import pyarrow as pa
-
     return pa.compress(data, codec="snappy", asbytes=True)
+
+
+def _unsnappy(src: bytes, size: int) -> bytes:
+    return B.decode_exact("snappy", src, size)
 
 
 def test_snappy_spec_vectors_hand_built():
     # literal only: preamble varint 5, tag (5-1)<<2 | 0, then bytes
-    assert B.snappy_decompress(b"\x05\x10hello") == b"hello"
+    assert _unsnappy(b"\x05\x10hello", 5) == b"hello"
     # empty block: preamble 0, no elements
-    assert B.snappy_decompress(b"\x00") == b""
+    assert _unsnappy(b"\x00", 0) == b""
     # 1-byte-offset copy: 4 literals then len-4 copy at offset 4
     # tag = (len-4)<<2 | 1 with offset high bits in tag>>5: len 4, off 4
     assert (
-        B.snappy_decompress(b"\x08\x0cabcd" + bytes([0b000_000_01, 4]))
+        _unsnappy(b"\x08\x0cabcd" + bytes([0b000_000_01, 4]), 8)
         == b"abcdabcd"
     )
     # 2-byte-offset copy: tag (len-1)<<2|2 + LE16 offset
     assert (
-        B.snappy_decompress(b"\x08\x0cwxyz" + bytes([((4 - 1) << 2) | 2, 4, 0]))
+        _unsnappy(b"\x08\x0cwxyz" + bytes([((4 - 1) << 2) | 2, 4, 0]), 8)
         == b"wxyzwxyz"
     )
     # 4-byte-offset copy
     assert (
-        B.snappy_decompress(
-            b"\x08\x0cmnop" + bytes([((4 - 1) << 2) | 3, 4, 0, 0, 0])
-        )
+        _unsnappy(b"\x08\x0cmnop" + bytes([((4 - 1) << 2) | 3, 4, 0, 0, 0]), 8)
         == b"mnopmnop"
     )
     # overlapping copy = RLE: one literal, then len-8 copy at offset 1
     assert (
-        B.snappy_decompress(b"\x09\x00Q" + bytes([((8 - 4) << 2) | 1, 1]))
+        _unsnappy(b"\x09\x00Q" + bytes([((8 - 4) << 2) | 1, 1]), 9)
         == b"Q" * 9
     )
     # 61-byte literal: tag 60<<2 marks a 1-byte extended length (len-1=60)
     body = bytes(range(61))
-    assert B.snappy_decompress(b"\x3d" + bytes([60 << 2, 60]) + body) == body
+    assert _unsnappy(b"\x3d" + bytes([60 << 2, 60]) + body, 61) == body
 
 
 def test_snappy_decodes_pyarrow_reference_blocks():
@@ -277,7 +286,7 @@ def test_snappy_decodes_pyarrow_reference_blocks():
         bytes(70_000),  # long zero run: exercises extended lengths
     ]
     for data in cases:
-        assert B.snappy_decompress(_pa_snappy(data)) == data
+        assert _unsnappy(_pa_snappy(data), len(data)) == data
 
 
 def test_snappy_junk_fails_cleanly():
@@ -285,12 +294,14 @@ def test_snappy_junk_fails_cleanly():
     for size in (0, 1, 2, 7, 33, 200):
         for _ in range(40):
             junk = bytes(rng.integers(0, 256, size, dtype=np.uint8))
+            # ask for the one-byte preamble's value so the body decodes too
+            want = junk[0] & 0x7F if junk else 0
             try:
-                out = B.snappy_decompress(junk)
+                out = _unsnappy(junk, want)
             except (ValueError, NotImplementedError):
                 continue
             # junk that happens to parse must still honor the preamble
-            assert isinstance(out, bytes)
+            assert len(out) == want
 
 
 def test_snappy_bitflipped_reference_never_wrong_size():
@@ -302,7 +313,7 @@ def test_snappy_bitflipped_reference_never_wrong_size():
         i = int(rng.integers(0, len(buf)))
         buf[i] ^= 1 << int(rng.integers(0, 8))
         try:
-            out = B.snappy_decompress(bytes(buf))
+            out = _unsnappy(bytes(buf), len(data))
         except ValueError:
             continue
         assert len(out) == len(data)  # preamble-honoring decode or a raise
@@ -363,9 +374,9 @@ def test_container_blosc_snappy_split_mode():
 def test_decompress_junk_fails_cleanly(junk):
     """Arbitrary bytes must raise ValueError / NotImplementedError (or
     decode, for the rare junk that parses) — never hang, never IndexError,
-    never return silently-wrong sizes. Every read in ``decompress`` and
-    the LZ4 block decoder is bounds-checked, so truncation surfaces as
-    ValueError, not IndexError/struct.error/zlib.error."""
+    never return silently-wrong sizes. Every read in ``decompress`` is
+    bounds-checked and ``decode_exact`` maps codec errors, so truncation
+    surfaces as ValueError, not IndexError/struct.error/OSError."""
     try:
         B.decompress(junk)
     except (ValueError, NotImplementedError):
@@ -396,11 +407,16 @@ def test_decompress_bitflipped_container_never_wrong_size(data, flip, seed):
 def test_truncated_literal_run_raises_not_shrinks():
     # token promises 5 literals but only 2 are present: must raise, never
     # silently shrink the output (the pre-hardening failure mode)
-    with pytest.raises(ValueError, match="literal run"):
-        B.lz4_decompress(bytes([0x50]) + b"ab", 5)
+    with pytest.raises(ValueError, match="corrupt lz4"):
+        B.decode_exact("lz4", bytes([0x50]) + b"ab", 5)
     # truncated offset: literals consumed, then only 1 offset byte
-    with pytest.raises(ValueError, match="truncated match offset"):
-        B.lz4_decompress(bytes([0x10]) + b"a" + bytes([1]), 6)
+    with pytest.raises(ValueError, match="corrupt lz4"):
+        B.decode_exact("lz4", bytes([0x10]) + b"a" + bytes([1]), 6)
+    # a VALID block that is shorter than asked for: pyarrow pads the
+    # requested size with uninitialized memory, the helper must raise
+    data = bytes(range(250)) * 4
+    with pytest.raises(ValueError, match="fewer than 1200"):
+        B.decode_exact("lz4", _lz4(data), 1200)
 
 
 def test_version_gate_is_strict():
@@ -458,15 +474,18 @@ class TestNumcodecsInterop:
 
 
 def test_snappy_preamble_bounded_by_expected_size():
-    """A corrupt preamble claiming a huge output must fail BEFORE
-    allocation when the caller knows the expected split size (r8 ADVICE:
-    a ~6-byte corrupt split could otherwise trigger a transient 2 GB
-    bytearray per task)."""
+    """A preamble that disagrees with the caller's expected split size
+    must fail BEFORE allocation: a claim above it (a ~6-byte corrupt split
+    could otherwise trigger a transient 2 GB buffer per task) or below it
+    (pyarrow would pad the output up to the requested size)."""
     # varint preamble claiming 2^30 bytes, no body
     huge = bytes([0x80, 0x80, 0x80, 0x80, 0x04])
     with pytest.raises(ValueError, match="caller expects"):
-        B.snappy_decompress(huge, max_len=4096)
-    # honest blocks still decode under the bound
-    assert B.snappy_decompress(b"\x05\x10hello", max_len=5) == b"hello"
+        _unsnappy(huge, 4096)
+    # honest blocks still decode at their size
+    assert _unsnappy(b"\x05\x10hello", 5) == b"hello"
     with pytest.raises(ValueError, match="caller expects"):
-        B.snappy_decompress(b"\x05\x10hello", max_len=4)
+        _unsnappy(b"\x05\x10hello", 4)
+    # short preamble: the block holds 5 bytes, the caller expects 6
+    with pytest.raises(ValueError, match="caller expects"):
+        _unsnappy(b"\x05\x10hello", 6)

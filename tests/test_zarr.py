@@ -117,6 +117,14 @@ def test_v2_bare_lz4_store_reads(tmp_path):
         block = pa.compress(raw, codec="lz4_raw", asbytes=True)
         (p / str(k)).write_bytes(len(raw).to_bytes(4, "little") + block)
     np.testing.assert_array_equal(read_zarr_array(str(p)), arr)
+    # a size prefix that exceeds its block: the block holds 31 elements,
+    # the prefix claims the full 32-element chunk, so a decoder that pads
+    # up to the prefix would pass the chunk-length check with garbage
+    raw = arr[32:63].tobytes()
+    block = pa.compress(raw, codec="lz4_raw", asbytes=True)
+    (p / "1").write_bytes((len(raw) + 8).to_bytes(4, "little") + block)
+    with pytest.raises(ValueError, match="(?i)lz4"):
+        read_zarr_array(str(p))
 
 
 def test_roundtrip_slash_separator(tmp_path):
@@ -181,11 +189,11 @@ def _meta(**over):
     "over",
     [
         {"zarr_format": 3},
-        # order="F" and delta/shuffle filter chains are SUPPORTED since
-        # round 8; vlen filters and unknown ids still gate
+        # order="F" and delta/shuffle filter chains are supported; vlen
+        # filters and unknown ids still gate
         {"filters": [{"id": "vlen-utf8"}]},
-        # snappy is SUPPORTED since round 8; blosclz stays gated (blosc's
-        # own codec, no in-container reference to validate against)
+        # snappy is supported; blosclz stays gated (blosc's own codec, no
+        # in-container reference to validate against)
         {"compressor": {"id": "blosc", "cname": "blosclz"}},
         {"compressor": {"id": "blosc", "cname": "lz4", "shuffle": 2}},
         {"compressor": {"id": "lzma"}},
@@ -422,7 +430,7 @@ def test_ingest_zarr_matches_netcdf_twin(spark, tmp_path):
     assert _ingested_rows(spark, out_z) == _ingested_rows(spark, out_n)
 
 
-# --- Zarr v3 (round 7) ------------------------------------------------------
+# --- Zarr v3 ----------------------------------------------------------------
 
 
 def _v3_meta(**over):
@@ -505,8 +513,8 @@ def test_v3_nan_fill_json_roundtrip(tmp_path):
         {"codecs": []},
         {"codecs": [{"name": "gzip"}]},  # missing the bytes codec
         {"codecs": [{"name": "bytes"}, {"name": "bz2"}]},
-        # configless blosc now defaults to cname=zstd and is SUPPORTED
-        # (round 8), as is snappy; blosclz remains gated
+        # configless blosc defaults to cname=zstd and is supported, as is
+        # snappy; blosclz remains gated
         {"codecs": [{"name": "bytes"},
                     {"name": "blosc", "configuration": {"cname": "blosclz"}}]},
         {"codecs": [{"name": "transpose"}, {"name": "bytes"}]},
@@ -618,7 +626,7 @@ def test_ingest_zarr_v2_v3_cross_version_twin(spark, tmp_path):
     ingest_zarr_to_parquet(spark, str(s3), out3, "tmax")
     assert _ingested_rows(spark, out2) == _ingested_rows(spark, out3)
 
-# --- Zarr v3 sharding_indexed codec (round 7) -------------------------------
+# --- Zarr v3 sharding_indexed codec -----------------------------------------
 
 
 def test_crc32c_known_vectors():
@@ -743,7 +751,7 @@ def test_ingest_zarr_v3_sharded_chunk_parallel(spark, tmp_path):
     assert got == exp
 
 
-# --- v2 F-order + filter chains (round 8) ----------------------------------
+# --- v2 F-order + filter chains ---------------------------------------------
 
 
 def test_v2_f_order_store_roundtrip(tmp_path):

@@ -1,17 +1,18 @@
-"""Zstandard decoder tests (``sources/zstd_min.py``).
+"""Zstandard decode tests (``blosc_min.decode_exact("zstd", ...)``, which
+runs pyarrow's libzstd codec).
 
-Four independent attack angles, so the decoder is never merely fit to one
-producer: (1) hand-built byte vectors written straight from RFC 8878 —
+Four independent attack angles on the one decode path the Blosc and Zarr
+readers use: (1) hand-built byte vectors written straight from RFC 8878 —
 frame headers, raw/RLE blocks, skippable frames — that never touch any
 encoder; (2) COMMITTED vectors written by the reference ``zstd`` CLI
-(base64-embedded, so conformance against the reference implementation is
-proven even in containers without the binary) covering FSE-described
-sequences, Huffman literals (1- and 4-stream), repcodes, and the xxh64
-content checksum; (3) live round-trips against the ``zstd`` CLI across
-levels/sizes/options — auto-unskip wherever the binary exists; (4)
-adversarial junk + bitflip fuzz with a ValueError/NotImplementedError-only
-contract. Integration: blosc-zstd containers (the numcodecs cname) and
-Zarr v2/v3 stores in tests/test_zarr.py + below.
+(base64-embedded, so they decode even in containers without the binary)
+covering FSE-described sequences, Huffman literals (1- and 4-stream),
+repcodes, and the xxh64 content checksum; (3) live round-trips against the
+``zstd`` CLI across levels/sizes/options — auto-unskip wherever the binary
+exists; (4) adversarial junk + bitflip fuzz with a
+ValueError/NotImplementedError-only contract. Integration: blosc-zstd
+containers (the numcodecs cname) and Zarr v2/v3 stores in
+tests/test_zarr.py + below.
 """
 
 from __future__ import annotations
@@ -28,9 +29,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from amazon_climate_data_etl_spark.sources import blosc_min as B
-from amazon_climate_data_etl_spark.sources import zstd_min as Z
 
 _ZSTD_CLI = shutil.which("zstd")
+
+
+def _unzstd(src: bytes, size: int) -> bytes:
+    return B.decode_exact("zstd", src, size)
 
 
 # --- hand-built spec vectors (no encoder anywhere) -------------------------
@@ -48,14 +52,14 @@ def test_raw_block_frame():
     payload = b"raw zstd payload"
     bh = (len(payload) << 3) | 1
     frame = _frame(bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16]) + payload)
-    assert Z.decompress(frame) == payload
+    assert _unzstd(frame, len(payload)) == payload
 
 
 def test_rle_block_frame():
     # RLE block: size = regenerated count, content = 1 byte
     bh = (1000 << 3) | (1 << 1) | 1
     frame = _frame(bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16]) + b"x")
-    assert Z.decompress(frame) == b"x" * 1000
+    assert _unzstd(frame, 1000) == b"x" * 1000
 
 
 def test_multi_block_frame():
@@ -66,7 +70,7 @@ def test_multi_block_frame():
         bytes([bh1 & 0xFF, (bh1 >> 8) & 0xFF, bh1 >> 16]) + p1
         + bytes([bh2 & 0xFF, (bh2 >> 8) & 0xFF, bh2 >> 16]) + p2
     )
-    assert Z.decompress(frame) == p1 + p2
+    assert _unzstd(frame, len(p1 + p2)) == p1 + p2
 
 
 def test_single_segment_with_content_size():
@@ -79,59 +83,44 @@ def test_single_segment_with_content_size():
         + bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16])
         + payload
     )
-    assert Z.decompress(frame) == payload
+    assert _unzstd(frame, 4) == payload
     # wrong declared size must fail
     bad = bytearray(frame)
     bad[5] = 9
-    with pytest.raises(ValueError, match="header said"):
-        Z.decompress(bytes(bad))
+    with pytest.raises(ValueError, match="corruption"):
+        _unzstd(bytes(bad), 4)
 
 
 def test_skippable_frame_alone_and_concatenated():
     skip = struct.pack("<II", 0x184D2A5F, 3) + b"xyz"
-    assert Z.decompress(skip) == b""
+    assert _unzstd(skip, 0) == b""
     payload = b"data"
     bh = (4 << 3) | 1
     real = _frame(bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16]) + payload)
-    assert Z.decompress(skip + real + skip + real) == payload * 2
+    assert _unzstd(skip + real + skip + real, 8) == payload * 2
 
 
 def test_reserved_block_type_rejected():
     bh = (4 << 3) | (3 << 1) | 1
     frame = _frame(bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16]) + b"abcd")
-    with pytest.raises(ValueError, match="reserved block"):
-        Z.decompress(frame)
+    with pytest.raises(ValueError, match="corruption"):
+        _unzstd(frame, 4)
 
 
 def test_bad_magic_rejected():
-    with pytest.raises(ValueError, match="magic"):
-        Z.decompress(b"\x00\x01\x02\x03rest")
+    with pytest.raises(ValueError, match="corrupt zstd"):
+        _unzstd(b"\x00\x01\x02\x03rest", 4)
+    # past the minimum frame-header size libzstd names the magic's failure
+    with pytest.raises(ValueError, match="Unknown frame descriptor"):
+        _unzstd(b"\x00\x01\x02\x03" + b"rest" * 10, 40)
 
 
 def test_dictionary_gated():
-    # dictionary-ID flag 01 with a nonzero 1-byte id must gate
+    # dictionary-ID flag 01 with a nonzero 1-byte id: no dictionary is
+    # ever loaded, so libzstd refuses the frame
     frame = struct.pack("<I", 0xFD2FB528) + bytes([0x01, 0x00, 7])
-    with pytest.raises(NotImplementedError, match="dictionary"):
-        Z.decompress(frame + b"\x01\x00\x00")
-
-
-def test_content_checksum_verified():
-    payload = b"checksummed"
-    bh = (len(payload) << 3) | 1
-    body = bytes([bh & 0xFF, (bh >> 8) & 0xFF, bh >> 16]) + payload
-    csum = struct.pack("<I", Z.xxh64(payload) & 0xFFFFFFFF)
-    frame = _frame(body, fhd=0x04) + csum
-    assert Z.decompress(frame) == payload
-    with pytest.raises(ValueError, match="checksum"):
-        Z.decompress(frame[:-1] + bytes([frame[-1] ^ 1]))
-
-
-def test_xxh64_known_answers():
-    # reference vectors from the xxHash specification
-    assert Z.xxh64(b"") == 0xEF46DB3751D8E999
-    assert Z.xxh64(b"abc") == 0x44BC2CF5AD770999
-    # >32-byte path (vector cross-checked against the CLI's checksum at
-    # generation time via the committed V1 frame below)
+    with pytest.raises(ValueError, match="Dictionary mismatch"):
+        _unzstd(frame + b"\x01\x00\x00", 0)
 
 
 # --- committed reference-CLI vectors (decode without the binary) -----------
@@ -176,9 +165,17 @@ _V2 = base64.b64decode(
 
 
 def test_committed_cli_vector_level19_with_checksum():
-    out = Z.decompress(_V1)
+    out = _unzstd(_V1, 120 * 55)
     assert zlib.crc32(out) == _V1_CRC
     assert len(out) == 120 * 55
+
+
+def test_content_checksum_verified():
+    # the level-19 CLI vector ends in its 4-byte xxh64 content checksum:
+    # flipping a checksum bit must fail the decode, not return the data
+    assert zlib.crc32(_unzstd(_V1, 120 * 55)) == _V1_CRC
+    with pytest.raises(ValueError, match="checksum"):
+        _unzstd(_V1[:-1] + bytes([_V1[-1] ^ 1]), 120 * 55)
 
 
 def _v2_expected() -> bytes:
@@ -189,7 +186,7 @@ def test_committed_cli_vector_level3_nocheck():
     # regenerate the plaintext from its formula; CRC pins the vector
     want = _v2_expected()
     assert zlib.crc32(want) == _V2_CRC
-    assert Z.decompress(_V2) == want
+    assert _unzstd(_V2, len(want)) == want
 
 
 # --- blosc-zstd container (numcodecs Blosc cname='zstd') -------------------
@@ -262,22 +259,25 @@ class TestCliRoundTrip:
             np.arange(30000, dtype="<f8").tobytes(),
         ]
         for data in cases:
-            assert Z.decompress(self._enc(data, f"-{level}")) == data
-            assert Z.decompress(self._enc(data, f"-{level}", "--no-check")) == data
+            enc = self._enc(data, f"-{level}")
+            assert _unzstd(enc, len(data)) == data
+            enc = self._enc(data, f"-{level}", "--no-check")
+            assert _unzstd(enc, len(data)) == data
 
     def test_multiblock_and_long_mode(self):
         data = (b"climate chunk payload %08d|" * 30000) % tuple(range(30000))
         assert len(data) > 4 * 128 * 1024  # forces several blocks
-        assert Z.decompress(self._enc(data, "-19")) == data
-        assert Z.decompress(self._enc(data, "-6", "--long=25")) == data
+        assert _unzstd(self._enc(data, "-19"), len(data)) == data
+        assert _unzstd(self._enc(data, "-6", "--long=25"), len(data)) == data
 
     def test_bitflips_never_leak_low_level_errors(self):
-        enc = self._enc(b"flip target " * 50, "-3")
+        data = b"flip target " * 50
+        enc = self._enc(data, "-3")
         for bit in range(len(enc) * 8):
             b = bytearray(enc)
             b[bit // 8] ^= 1 << (bit % 8)
             try:
-                Z.decompress(bytes(b))
+                _unzstd(bytes(b), len(data))
             except (ValueError, NotImplementedError):
                 continue
 
@@ -286,24 +286,24 @@ class TestCliRoundTrip:
 
 
 @settings(max_examples=200, deadline=None)
-@given(junk=st.binary(min_size=0, max_size=300))
-def test_junk_fails_cleanly(junk):
+@given(junk=st.binary(min_size=0, max_size=300), size=st.integers(0, 4096))
+def test_junk_fails_cleanly(junk, size):
     """Arbitrary bytes: ValueError / NotImplementedError only (or a valid
-    decode for junk that legitimately parses) — never IndexError,
+    decode for junk that legitimately parses) — never OSError, IndexError,
     struct.error, KeyError, or a hang."""
     try:
-        Z.decompress(junk)
+        _unzstd(junk, size)
     except (ValueError, NotImplementedError):
         pass
 
 
 @settings(max_examples=60, deadline=None)
-@given(junk=st.binary(min_size=0, max_size=200))
-def test_junk_after_valid_magic_fails_cleanly(junk):
+@given(junk=st.binary(min_size=0, max_size=200), size=st.integers(0, 4096))
+def test_junk_after_valid_magic_fails_cleanly(junk, size):
     """Force the parser past the magic so the fuzz reaches the frame
     header, block, and entropy layers."""
     try:
-        Z.decompress(struct.pack("<I", 0xFD2FB528) + junk)
+        _unzstd(struct.pack("<I", 0xFD2FB528) + junk, size)
     except (ValueError, NotImplementedError):
         pass
 
@@ -434,42 +434,3 @@ def test_v2_bare_zstd_compressor_store(tmp_path):
     ).stdout
     (p / "0.0").write_bytes(enc)
     np.testing.assert_array_equal(ZM.read_zarr_array(str(p)), arr)
-
-
-def test_huffman_overweight_rejected():
-    """A direct-representation weight table whose max explicit weight
-    exceeds the implied max_bits must raise cleanly — without the guard
-    the rank bookkeeping silently negative-indexes (weights 1,1,11: kraft
-    total 2+... -> max_bits stays small while w=11 demands a <=0-bit
-    code)."""
-    from amazon_climate_data_etl_spark.sources.zstd_min import (
-        _read_huffman_table,
-    )
-
-    # direct weights: header byte 127+n, then 4-bit pairs (hi nibble first)
-    data = bytes([127 + 3, (1 << 4) | 1, (11 << 4)])
-    with pytest.raises(ValueError, match="weight"):
-        _read_huffman_table(data, 0)
-
-
-def test_huffman_stream_exhaustion_rejected():
-    """A Huffman literal stream that consumes MORE bits than exist must
-    raise, not decode zero-padded symbols (r8 ADVICE): the back-stream
-    pads past-start reads, so only the bitpos == 0 end-of-stream check —
-    the same one libzstd applies — distinguishes a truncated
-    checksum-less stream from a valid one."""
-    import pytest
-
-    from amazon_climate_data_etl_spark.sources.zstd_min import _HufTable
-
-    # direct-representation weight table: two symbols, weight 1 each ->
-    # 1-bit codes (the smallest valid tree)
-    table, _ = __import__(
-        "amazon_climate_data_etl_spark.sources.zstd_min", fromlist=["x"]
-    )._read_huffman_table(bytes([127 + 1, 0x10]), 0)
-    # one data byte = sentinel + 7 payload bits; asking for 50 symbols
-    # over-consumes and must fail loudly
-    with pytest.raises(ValueError, match="Huffman stream"):
-        table.decode_stream(b"\x81", 50)
-    # the exact boundary still decodes: 7 symbols consume every bit
-    assert len(table.decode_stream(b"\x81", 7)) == 7
