@@ -17,13 +17,14 @@ Scale: the fact table never shuffles for the join (450-row dim broadcast).
 Before that join the grid is cut to the cells some municipality snaps to,
 and Catalyst pushes the cut down to the scans as a broadcast LeftSemi join
 (see ``daily_enriched``), so every exchange carries municipality cells
-only: on the raw path, the two of the long→wide pivot
-(``sources.ingest.pivot_grid_wide``), then the groupBy and the output
-sort. The annual+monthly pair shares one scan via ROLLUP. At 100 TB
-(imagine hourly global 0.01° grids) the same plan holds: partition parquet
-by year; the snap keys prune no files, but the cut drops every
-non-municipality cell inside the scan task; both broadcasts stay
-municipality-sized; AQE coalesces the small aggregate output.
+only: on the raw path, the long→wide pivot's one
+(``sources.ingest.pivot_grid_wide``, a single conditional aggregate),
+then the groupBy and the output sort. The annual+monthly pair shares one
+scan via ROLLUP. At 100 TB (imagine hourly global 0.01° grids) the same
+plan holds: partition parquet by year; the snap keys prune no files, but
+the cut drops every non-municipality cell inside the scan task; both
+broadcasts stay municipality-sized; AQE coalesces the small aggregate
+output.
 
 The ``queries()`` entries derive a deterministic grid_daily/municipalities
 pair from the driver's testdata (lineitem/nation) with engine-portable

@@ -6,17 +6,19 @@ Reference inputs (``/root/reference/scripts/process_climate_amazon_annual.py``):
 - an IBGE municipality shapefile reduced to centroids (:125-168) — S2.
 
 Spark-first design: both become **one-time ingest jobs** producing Parquet;
-the query layer never touches NetCDF/SHP. The NetCDF job distributes via
-``spark.read.format("binaryFile")`` + ``mapInPandas`` (one file per task,
-xarray inside the Arrow batch iterator); at 100 TB of grids you'd partition
-output by (var, year) so downstream year filters prune partitions.
+the query layer never touches NetCDF/SHP. Each NetCDF variable is one
+Spark job: ``spark.read.format("binaryFile")`` + ``mapInPandas`` decodes
+one file per task, and that task writes the file's years straight into a
+per-variable output partitioned by year, so downstream year filters prune
+partitions. ``pivot_grid_wide`` then assembles the variables into one wide
+row per (date, cell).
 
-Decode backends: xarray when importable (any NetCDF flavor, including
-NetCDF-4/HDF5); otherwise the dependency-free classic-format reader in
-``netcdf_classic.py`` — so the REAL decode path for CDF-1/CDF-2 files runs
-and is tested in this container (the same pattern as the minimal PNG
-decoder in ``multimodal.py``). Shapefile ingest (geopandas) remains
-import-gated with the precomputed-centroid fallback.
+Decode backends: xarray when importable (any NetCDF flavor); otherwise the
+dependency-free readers, ``netcdf_classic.py`` for CDF-1/CDF-2 and, through
+it, ``netcdf4_min.py`` for NetCDF-4/HDF5 — so the REAL decode path runs and
+is tested without optional libraries (the same pattern as the minimal PNG
+decoder in ``multimodal.py``). Shapefile ingest uses geopandas when
+importable, else the dependency-free ``shapefile_min.py`` path.
 """
 
 from __future__ import annotations
@@ -59,6 +61,10 @@ IBGE_PREFIX_TO_UF = {
 }
 
 NORTHERN_STATES = ("AC", "AM", "AP", "PA", "RO", "RR", "TO")
+
+# the reference's 7 Xavier (BR-DWGD) variables, one NetCDF file each
+# (process_climate_amazon_annual.py:188-253): the columns of the wide grid
+GRID_VARIABLES = ("Tmax", "Tmin", "pr", "RH", "ETo", "u2", "Rs")
 
 
 def probe_coord_dims(
@@ -362,6 +368,8 @@ def ingest_geotiff_to_parquet(
         lambda it: _decode_geotiff_batch(it, var_name, bounds),
         schema=GRID_DAILY_SCHEMA,
     )
+    # one task per day: the shuffle keeps it to one file per year, not one
+    # file per day
     (
         grid.withColumn("year", F.year("date"))
         .repartition("year")
@@ -524,6 +532,8 @@ def ingest_zarr_to_parquet(
                 )
 
     grid = raw.mapInPandas(worker, schema=GRID_DAILY_SCHEMA)
+    # one task per chunk: the shuffle keeps it to one file per year, not one
+    # file per chunk and year
     (
         grid.withColumn("year", F.year("date"))
         .repartition("year")
@@ -546,7 +556,14 @@ def ingest_netcdf_to_parquet(
     time-ranged query prunes partitions (the reference's manual time-chunk
     logic, annual.py:58-62, becomes storage layout). ``bounds`` (lon_min /
     lon_max / lat_min / lat_max) clips each file to the region of interest
-    before relationalizing, the reference's load_clipped_netcdf behavior."""
+    before relationalizing, the reference's load_clipped_netcdf behavior.
+
+    The decode task writes its rows itself, with no shuffle by year in
+    front of the write: a task holds one whole file, so it already writes
+    each year of that file exactly once, and a shuffle would only
+    re-serialize every row in a second job. (The GeoTIFF and Zarr ingests
+    keep theirs: they run one task per day or per chunk, and without it
+    would write one file per task per year.)"""
     from amazon_climate_data_etl_spark.session import ship_package_to_workers
 
     ship_package_to_workers(spark)
@@ -557,7 +574,6 @@ def ingest_netcdf_to_parquet(
     )
     (
         grid.withColumn("year", F.year("date"))
-        .repartition("year")
         .write.partitionBy("year")
         .mode("overwrite")
         .parquet(out_path)
@@ -566,11 +582,30 @@ def ingest_netcdf_to_parquet(
 
 def pivot_grid_wide(grid_long: DataFrame) -> DataFrame:
     """long (date, lat, lon, var, value) → wide (date, lat, lon, <var> …),
-    the 7-way series assembly (J2, annual.py:324-333) as one pivot."""
+    the 7-way series assembly (J2, annual.py:324-333) as one aggregate
+    with one column per ``GRID_VARIABLES`` entry.
+
+    Each column is a conditional ``first`` over its variable's rows, not
+    ``.pivot("var")``: without a value list the pivot runs an eager
+    ``distinct(var)`` job while the plan is built, and with one
+    ``ResolvePivot`` still plans two Aggregates (two exchanges per
+    output). The fixed list makes this a static aggregate that Catalyst
+    plans with no job and one exchange. A ``var`` outside the list fails
+    the query when it runs, naming the value; a variable with no row for
+    some (date, cell) is null there, as in a ragged grid."""
+    var = F.col("var")
+    checked = F.when(var.isin(*GRID_VARIABLES), var).otherwise(
+        F.raise_error(F.format_string("unknown grid variable: %s", var))
+    )
     return (
-        grid_long.groupBy("date", "lat", "lon")
-        .pivot("var")
-        .agg(F.first("value"))
+        grid_long.withColumn("var", checked)
+        .groupBy("date", "lat", "lon")
+        .agg(
+            *(
+                F.first(F.when(var == v, F.col("value")), ignorenulls=True).alias(v)
+                for v in GRID_VARIABLES
+            )
+        )
     )
 
 

@@ -60,6 +60,19 @@ def spark():
     yield s
 
 
+def jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts: the status tracker's job ids
+    after the call less those before it. The listener bus is drained on
+    both sides, because a job reaches the tracker asynchronously."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -8,11 +8,15 @@ from collections.abc import Iterator
 from datetime import date
 
 import pandas as pd
+import pytest
+from conftest import jobs_started
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from amazon_climate_data_etl_spark.session import ship_package_to_workers
 from amazon_climate_data_etl_spark.sources.ingest import (
     GRID_DAILY_SCHEMA,
+    GRID_VARIABLES,
     lat_ordered_slice,
     normalize_grid_long,
     pivot_grid_wide,
@@ -113,8 +117,7 @@ def test_normalize_grid_long_renamed_dims():
 def test_fake_decoder_with_renamed_dims_through_spark(spark, tmp_path):
     """End-to-end plumbing with a fake decoder that emits RENAMED axes and
     a north-up latitude order, normalized by the same helper the real
-    decoder uses — the file shape the round-3 verdict flagged (a BR-DWGD
-    file with longitude/latitude dims)."""
+    decoder uses — the BR-DWGD file shape (longitude/latitude dims)."""
 
     def _fake_decode(batches):
         for pdf in batches:
@@ -148,7 +151,7 @@ def test_fake_decoder_with_renamed_dims_through_spark(spark, tmp_path):
 
 def _write_classic_fixture(path, var="Tmax", lat_name="latitude",
                            lon_name="longitude", time_name="time",
-                           packed=False):
+                           packed=False, time_units="days since 2001-01-01"):
     """A REAL classic-NetCDF file: descending latitude, CF time units,
     optionally int16-packed values with scale/offset + fill."""
     import numpy as np
@@ -175,7 +178,7 @@ def _write_classic_fixture(path, var="Tmax", lat_name="latitude",
         dims={time_name: 2, lat_name: 3, lon_name: 2},
         variables={
             time_name: NcVar(time_name, (time_name,), time,
-                             {"units": "days since 2001-01-01"}),
+                             {"units": time_units}),
             lat_name: NcVar(lat_name, (lat_name,), lat),
             lon_name: NcVar(lon_name, (lon_name,), lon),
             var: NcVar(var, (time_name, lat_name, lon_name), data, attrs),
@@ -211,6 +214,25 @@ def test_real_classic_netcdf_ingest_end_to_end(spark, tmp_path):
     assert got[("2001-01-01", 5.0, -65.0)] == vals[0, 0, 0]
     assert got[("2001-01-02", 4.5, -64.75)] == vals[1, 2, 1]
     assert all(r["var"] == "Tmax" for r in rows)
+
+
+def test_netcdf_ingest_runs_one_job(spark, tmp_path):
+    """One ingest call on one file is one Spark job: the decode task writes
+    its year partitions itself, with no shuffle in front of the write. The
+    file spans a new year, and each year still gets exactly one file."""
+    from amazon_climate_data_etl_spark.sources.ingest import (
+        ingest_netcdf_to_parquet,
+    )
+
+    _write_classic_fixture(tmp_path / "tmax.nc", time_units="days since 2000-12-31")
+    out = tmp_path / "out_parquet"
+    n = jobs_started(
+        spark,
+        lambda: ingest_netcdf_to_parquet(spark, str(tmp_path / "tmax.nc"), str(out), "Tmax"),
+    )
+    assert n == 1
+    per_year = {p.name: len(list(p.glob("*.parquet"))) for p in out.glob("year=*")}
+    assert per_year == {"year=2000": 1, "year=2001": 1}
 
 
 def test_classic_cdf2_offset64_roundtrip():
@@ -352,9 +374,35 @@ def test_pivot_long_to_wide(spark):
     )
     wide = pivot_grid_wide(long).orderBy("date")
     rows = wide.collect()
-    assert set(wide.columns) == {"date", "lat", "lon", "Tmax", "Tmin"}
+    # every known variable is a column, present in the input or not
+    assert wide.columns == ["date", "lat", "lon", *GRID_VARIABLES]
     assert rows[0]["Tmax"] == 30.0 and rows[0]["Tmin"] == 20.0
-    assert rows[1]["Tmin"] is None
+    assert rows[1]["Tmin"] is None  # ragged grid: no Tmin row that day
+    assert all(rows[0][v] is None for v in ("pr", "RH", "ETo", "u2", "Rs"))
+
+
+def test_pivot_unknown_variable_fails_at_collect(spark):
+    """A variable outside GRID_VARIABLES (here a lower-case ``tmax``) must
+    fail the query naming the value, never vanish from the wide grid."""
+    long = spark.createDataFrame(
+        [
+            (date(2001, 1, 1), -10.0, -65.0, "Tmax", 30.0),
+            (date(2001, 1, 1), -10.0, -65.0, "tmax", 31.0),
+        ],
+        GRID_DAILY_SCHEMA,
+    )
+    wide = pivot_grid_wide(long)  # building does not check the data
+    with pytest.raises(PySparkException, match="unknown grid variable: tmax"):
+        wide.collect()
+
+
+def test_pivot_build_starts_no_job(spark):
+    """With a fixed variable list the pivot is a static aggregate: building
+    it runs no ``distinct(var)`` discovery job."""
+    long = spark.createDataFrame(
+        [(date(2001, 1, 1), -10.0, -65.0, "Tmax", 30.0)], GRID_DAILY_SCHEMA
+    )
+    assert jobs_started(spark, lambda: pivot_grid_wide(long)) == 0
 
 
 def test_classic_netcdf_roundtrip_property():

@@ -14,7 +14,7 @@ flavors the reference stack accepts:
 - ``classic``: CDF-1 files + a geographic-CRS shapefile;
 - ``netcdf4_utm``: NetCDF-4/HDF5 files (chunked, shuffled+deflated)
   + a PROJECTED (SIRGAS 2000 / UTM 20S) shapefile that the minimal CRS
-  path inverse-projects — the round-5 ingest-boundary closures proven
+  path inverse-projects — the ingest-boundary closures proven
   on the reference's actual end-to-end data path
   (process_climate_amazon_annual.py), zero optional libraries.
 """
@@ -267,3 +267,16 @@ def test_municipality_cell_cut_reaches_every_variable_scan(spark, tmp_path):
         )
         assert semi is not None, node
         assert shuffle is not None and semi < shuffle, node
+
+
+def test_pivot_is_one_aggregate_pair(spark, tmp_path):
+    """Between the per-variable scans' Union and the dimension join the
+    long→wide pivot is one hash Aggregate pair (partial + final) around
+    one exchange, not PivotFirst's two Aggregates."""
+    _, annual = _raw_annual(spark, tmp_path, "classic")
+    plan = I.plan_string(annual, "simple")
+    union = next(chain for node, chain in _plan_ancestors(plan) if "Union" in node)
+    join = next(k for k, a in enumerate(union) if "BroadcastHashJoin" in a and "Inner" in a)
+    between = union[:join]
+    assert sum("HashAggregate" in a for a in between) == 2, plan
+    assert sum(bool(re.search(r"\bExchange hashpartitioning", a)) for a in between) == 1, plan
