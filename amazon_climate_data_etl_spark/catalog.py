@@ -13,12 +13,9 @@ scan (SURVEY.md §4 — the reference's hand-written clip/column-open logic,
 from __future__ import annotations
 
 import os
-import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_KEYS_OVERRIDE_LOGGED = False
 
 TABLES = (
     "region",
@@ -140,28 +137,18 @@ def rebalance_for_compute(
       before tokenize/shingle/decode, embeddings 2k rows before numpy
       kernels): round-robin's PERFECT balance beats the trivial sort —
       keyless (documents-family A/B total 7.06 vs 8.81 s median keyed;
-      ngram_jaccard_pairs 1.45 vs 2.22). ``SPARK_GRAFT_REBALANCE_KEYS=0``
-      forces the keyless arm for A/B reproduction. NOTE: ``keys`` only takes effect when
-    the fan-out actually happens — an input already at >= target
-    partitions takes the early return with NO exchange at all (which is
-    also deterministic: the scan itself is reused). Callers must not rely
-    on the output being hash-partitioned by ``keys`` for downstream
-    co-location; the contract is "deterministic + spread", never "keyed".
+      ngram_jaccard_pairs 1.45 vs 2.22).
+
+    NOTE: ``keys`` only takes effect when the fan-out actually happens —
+    an input already at >= target partitions takes the early return with
+    NO exchange at all (which is also deterministic: the scan itself is
+    reused). Callers must not rely on the output being hash-partitioned by
+    ``keys`` for downstream co-location; the contract is "deterministic +
+    spread", never "keyed".
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
-    if os.environ.get("SPARK_GRAFT_REBALANCE_KEYS", "1") == "0":  # A/B aid
-        global _KEYS_OVERRIDE_LOGGED
-        if not _KEYS_OVERRIDE_LOGGED:  # once per process: a stray env var
-            # silently changing every plan's shape must be diagnosable
-            print(
-                "[catalog] SPARK_GRAFT_REBALANCE_KEYS=0: keyless round-robin "
-                "rebalance forced for A/B",
-                file=sys.stderr,
-            )
-            _KEYS_OVERRIDE_LOGGED = True
-        keys = ()
     if keys:
         # Guard: hash-by-key spreads over at most |distinct key values|
         # partitions, so keys need cardinality ≫ target (the call sites

@@ -466,6 +466,9 @@ ORDER BY doc_a, doc_b
 # ---------------------------------------------------------------------------
 
 _N_BITS = 16
+# XOR masks of popcount ≤ 3: print p's hamming-≤3 neighbours are p ^ m for
+# each m (1 + 16 + 120 + 560 = 697 masks)
+_HAM3_MASKS = [m for m in range(1 << _N_BITS) if bin(m).count("1") <= 3]
 
 
 def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,108 +525,44 @@ FROM votes
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicates: Hamming distance ≤ 3 on the 16-bit prints.
 
-    Pairing happens in FINGERPRINT space, not document space: docs collapse
-    onto far fewer distinct 16-bit prints (877 for 5,000 docs on the test
-    corpus; ≤ 65,536 always), qualifying print-pairs come from a broadcast
-    nested-loop over the distinct prints, and doc pairs are recovered by two
-    equi-joins back onto the doc→print table. The quadratic term is
-    |distinct prints|², independent of corpus size — at 100 TB the doc→print
-    map stays a linear scan. (With 64-bit prints the print space itself gets
-    large; there the print-pair step becomes a banded-LSH equi-join on
-    16-bit sub-bands — pigeonhole-exact for hamming ≤ 3 — with the same
-    doc expansion afterwards.)
+    Candidates are enumerated, not searched: each document's print ``fp_a``
+    is XORed with every mask in ``_HAM3_MASKS``, giving the neighbour prints
+    ``fp_b`` it can pair with, and one equi-join on ``fp_b`` against the
+    doc→print frame recovers the documents. The cost is a map-side
+    |docs| × 697 explode, where a print-space self-join would cost |prints|²
+    comparisons (up to 2³² at 16 bits). Each unordered pair meets exactly
+    once: across prints via ``fp_a < fp_b``, within a print via ``da < db``.
 
-    r15 (r14 verdict item 3): NOTHING corpus-sized is ever broadcast.
-    The r14 form broadcast the per-print ``collect_list(doc_id)`` group
-    frame — its row count is print-bounded but its doc-list payload is
-    O(corpus), a memory wall at 100 TB. Now the only broadcast frames are
-    PRINT-SPACE-bounded, independent of corpus size: the print-pair frame
-    holds at most |prints| × |ham≤3 neighbourhood| / 2 rows — at 16 bits
-    2¹⁶ × (1 + 16 + 120 + 560) / 2 ≈ 23M:
-    1. print pairs: distinct prints × distinct prints under hamming ≤ 3 —
-       a broadcast nested-loop over two bounded sides (at 64-bit prints
-       this one step becomes the pigeonhole-banded equi-join on 16-bit
-       sub-bands; the doc expansion below is unchanged);
-    2. each doc attaches its qualifying neighbor prints from the
-       broadcast print-pair frame (map-side, keeps the scan spread);
-    3. doc pairs come from an equi-join of that candidate stream against
-       the per-doc print map on (neighbor print, salt) — nothing
-       corpus-sized is ever broadcast BY HINT (see the strategy note
-       below). The deterministic salt (``pmod(xxhash64(da), S)`` on the
-       candidate stream, the doc map exploded 0..S-1 — §2.5's
-       derived-not-random rule) splits every giant print group's pair
-       production S ways, so the r14 skew fix's spread-by-document
-       property survives the move off the group broadcast: a hot print's
-       pairs are produced by up to S tasks, and AQE's skew-join split
-       subdivides further at real scale. S multiplies only the LIGHT
-       one-row-per-doc print map (20-byte proxy rows, guide §8), never
-       the pair payload or the larger candidate stream.
-    Pair semantics are identical to r14: each unordered (da, db) meets
-    exactly once — cross-group pairs once via the fp_a ≤ fp_b normalized
-    print pair, in-group pairs once via da < db. The per-doc print frame
-    is persisted (the declared branch-point cache, same lifetime contract
-    as every other operator persist in the entry docstring): it feeds
-    three consumers (distinct prints, candidate stream, doc side).
+    The doc→print frame is widened by a round-robin repartition: at fixture
+    scale AQE coalesces the vote aggregate to one partition, and pair
+    production would otherwise run on one task. It is not keyed on doc_id:
+    when the shuffle partitions equal the parallelism (the session default)
+    the planner drops that as already satisfied by the aggregate's own
+    exchange, which AQE then coalesces. Both join sides read the widened
+    frame, so the planner reuses its exchange and each document is
+    tokenized once.
 
-    Join strategy is left to the ENGINE's size statistics — nothing here
-    hints a broadcast of anything corpus-sized: at fixture scale the
-    (db, fp_b, salt) side is tiny and Spark picks a broadcast-hash join
-    (pair production then runs map-side over the persisted partitions);
-    past the autoBroadcast threshold it degrades to the salted shuffle
-    equi-join, with the salt + AQE skew split spreading hot prints —
-    the same engine-decides contract as _rep_docs' semi join.
+    Nothing is hinted broadcast: the join strategy, and the skew split of a
+    hot print's pairs, are left to the engine's statistics (AQE).
 
-    The persisted frame is WIDENED before it materializes (keyed
-    repartition to the session's parallelism): the vote aggregate that
-    produces the prints AQE-coalesces to one partition at fixture scale,
-    and a 1-partition branch point would serialize the whole downstream
-    map pipeline — candidate attach, salt explode, and (in the broadcast
-    regime) the entire quadratic pair production — on ONE task
-    (profiled: a 0.75 s single-task job, ~40% of the query). A keyed
-    repartition pays no pre-sort (r14 rule) and the 2-column frame is
-    print-map-sized, so the extra exchange is noise at any scale."""
-    fp = (
-        _simhash_frame(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    At 64-bit prints enumeration is infeasible (~44k masks); there the
+    candidate step becomes a banded-LSH equi-join on 16-bit sub-bands,
+    pigeonhole-exact for hamming ≤ 3, with the same doc join afterwards."""
+    fp = _simhash_frame(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism
     )
-    p = fp.select("simhash").distinct()
-    ham = F.expr("bit_count(fp_a ^ fp_b)")
-    ppairs = p.select(F.col("simhash").alias("fp_a")).join(
-        F.broadcast(p.select(F.col("simhash").alias("fp_b"))),
-        (F.col("fp_a") <= F.col("fp_b")) & (ham <= 3),
-    )
-    # salt width: enough lanes to spread one giant print group across the
-    # executors' cores, capped so the explode amplification stays bounded
-    # (the cap is a fan-out floor, not a tuning constant — at cluster
-    # scale AQE's skew split takes over past it)
-    n_salt = max(8, min(64, spark.sparkContext.defaultParallelism))
-    # The EXPLODED side is the one-row-per-doc print map (S light rows
-    # per doc); the candidate stream carries ONE deterministic salt
-    # derived from its own doc id (§2.5's derived-not-random rule). The
-    # first cut exploded the CANDIDATE stream instead, and prints of a
-    # near-dup corpus cluster so hard that |cand| ≈ 90×|docs| at sf0.1
-    # (446k rows, ×32 salt = 14.3M probe rows — measured ~1 s of pure
-    # explode+probe). Salting the doc map bounds the amplification at
-    # S×|docs| — 24× less salted volume here, and the same ratio at any
-    # scale where prints cluster. Pair coverage is unchanged: doc db
-    # rides in EVERY lane, candidate (da, fp_b) probes exactly lane
-    # salt(da), so each (da, db) meets exactly once.
     cand = (
-        fp.select(F.col("doc_id").alias("da"), F.col("simhash").alias("fp_a"))
-        .join(F.broadcast(ppairs), "fp_a")
-        .withColumn(
-            "salt", F.pmod(F.xxhash64("da"), F.lit(n_salt)).cast("int")
+        fp.select(
+            F.col("doc_id").alias("da"),
+            F.col("simhash").alias("fp_a"),
+            F.explode(F.lit(_HAM3_MASKS)).alias("mask"),
         )
+        .select("da", "fp_a", F.col("fp_a").bitwiseXOR(F.col("mask")).alias("fp_b"))
+        .filter(F.col("fp_a") <= F.col("fp_b"))
     )
-    docs = fp.select(
-        F.col("doc_id").alias("db"), F.col("simhash").alias("fp_b")
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+    docs = fp.select(F.col("doc_id").alias("db"), F.col("simhash").alias("fp_b"))
     return (
-        cand.join(docs, ["fp_b", "salt"])
-        # fp_a < fp_b: every (da,db) combo appears exactly once, order
-        # normalized below; fp_a = fp_b: keep da < db so in-group pairs
-        # emit exactly once.
+        cand.join(docs, "fp_b")
         .filter((F.col("fp_a") < F.col("fp_b")) | (F.col("da") < F.col("db")))
         .select(
             F.least("da", "db").alias("doc_a"),

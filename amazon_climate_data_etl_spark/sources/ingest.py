@@ -13,11 +13,11 @@ per-variable output partitioned by year, so downstream year filters prune
 partitions. ``pivot_grid_wide`` then assembles the variables into one wide
 row per (date, cell).
 
-Decode backends: xarray when importable (any NetCDF flavor); otherwise the
-dependency-free readers, ``netcdf_classic.py`` for CDF-1/CDF-2 and, through
-it, ``netcdf4_min.py`` for NetCDF-4/HDF5 — so the REAL decode path runs and
-is tested without optional libraries (the same pattern as the minimal PNG
-decoder in ``multimodal.py``). Shapefile ingest uses geopandas when
+Decode backend: the dependency-free readers, ``netcdf_classic.py`` for
+CDF-1/CDF-2/CDF-5 and, through it, ``netcdf4_min.py`` for NetCDF-4/HDF5 —
+so the one decode path that runs is the one that is tested (the same
+pattern as the minimal PNG decoder in ``multimodal.py``); layouts they do
+not read fail loudly by name. Shapefile ingest uses geopandas when
 importable, else the dependency-free ``shapefile_min.py`` path.
 """
 
@@ -77,7 +77,7 @@ def probe_coord_dims(
     (last match wins, as in the reference loop), then coordinates (first
     match fills a still-missing slot), then fall back to
     ``longitude``/``latitude`` if present among dims/coords, else
-    ``lon``/``lat``. Pure function — testable without xarray."""
+    ``lon``/``lat``. Pure function."""
     lon_dim = lat_dim = None
     for dim in dims:
         d = dim.lower()
@@ -112,41 +112,6 @@ def probe_time_dim(dims: "list[str] | tuple[str, ...]") -> str:
     return "time"
 
 
-def lat_ordered_slice(first: float, last: float, lat_min: float, lat_max: float):
-    """Axis-direction-aware latitude slice bounds.
-
-    ``xr.Dataset.sel(lat=slice(a, b))`` selects NOTHING when the slice runs
-    against the axis direction; the reference flips the bounds on a
-    descending (north-up) latitude axis
-    (process_climate_amazon_annual.py:231-248). Returns the (start, stop)
-    pair to pass to ``slice`` for this axis ordering."""
-    if first > last:  # descending latitude: start at the max
-        return lat_max, lat_min
-    return lat_min, lat_max
-
-
-def normalize_grid_long(
-    long: pd.DataFrame,
-    var_name: str,
-    lon_dim: str,
-    lat_dim: str,
-    time_dim: str = "time",
-) -> pd.DataFrame:
-    """Decoded long table (any dim naming / axis direction) → the canonical
-    (date, lat, lon, var, value) frame of GRID_DAILY_SCHEMA. Row order is
-    irrelevant downstream (the pivot keys on (date, lat, lon)), so a
-    descending-latitude file needs no reordering here — only the clip slice
-    direction matters (``lat_ordered_slice``)."""
-    long = long.rename(
-        columns={time_dim: "date", lat_dim: "lat", lon_dim: "lon", var_name: "value"}
-    )
-    long["var"] = var_name
-    long["date"] = pd.to_datetime(long["date"]).dt.date
-    long["lat"] = long["lat"].astype(float)
-    long["lon"] = long["lon"].astype(float)
-    return long[["date", "lat", "lon", "var", "value"]]
-
-
 def _decode_time_units(values, units: str):
     """CF time decode for the minimal path: '<unit> since <base>' with
     unit in days/hours/minutes/seconds."""
@@ -170,7 +135,7 @@ def _gate_cf_calendar(calendar) -> None:
     """Shared CF-calendar gate (NetCDF + Zarr minimal decode paths):
     noleap/365_day/360_day etc. are common in climate model output, and
     decoding them as proleptic-Gregorian silently shifts every date — so
-    fail loudly and point at the full-featured decode path."""
+    fail loudly, naming the calendar."""
     if isinstance(calendar, bytes):
         calendar = calendar.decode("ascii", "replace")
     if calendar is not None and str(calendar).lower() not in (
@@ -180,8 +145,7 @@ def _gate_cf_calendar(calendar) -> None:
     ):
         raise NotImplementedError(
             f"CF calendar {calendar!r} is not supported by the minimal "
-            "decoder (standard/gregorian/proleptic_gregorian only); use "
-            "the xarray path"
+            "decoder (standard/gregorian/proleptic_gregorian only)"
         )
 
 
@@ -195,10 +159,9 @@ def decode_classic_long(
     dispatches the HDF5 magic to the minimal HDF5 decoder,
     netcdf4_min.py — superblock v0/v2, contiguous + shuffled/deflated
     chunked storage, dimension scales + DIMENSION_LIST). CF unpacking
-    (scale/offset, _FillValue → NaN) is shared. Probing and normalization
-    are shared with the xarray branch. Bounds are applied as coordinate
-    masks, which are direction-agnostic — a descending (north-up)
-    latitude axis clips identically."""
+    (scale/offset, _FillValue → NaN) is shared. Bounds are applied as
+    coordinate masks, which are direction-agnostic — a descending
+    (north-up) latitude axis clips identically."""
     nc = read_classic(content)
     var = nc.variables[var_name]
     lon_dim, lat_dim = probe_coord_dims(list(var.dims), list(nc.variables))
@@ -207,7 +170,7 @@ def decode_classic_long(
         if d not in nc.variables:
             raise NotImplementedError(
                 f"dimension {d!r} has no coordinate variable in this file; "
-                "auxiliary-coordinate layouts need the xarray decode path"
+                "auxiliary-coordinate layouts are not supported"
             )
     order = [var.dims.index(d) for d in (time_dim, lat_dim, lon_dim)]
     cube = np.transpose(np.asarray(var.data), order).astype(np.float64)
@@ -244,53 +207,13 @@ def _decode_netcdf_batch(
 ) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: binaryFile rows → long-format grid rows.
 
-    Each input row is (path, modificationTime, length, content). The
-    coordinate axes are probed by name
-    (``lon``/``lat``/``x``/``y``/``longitude``/``latitude``), an optional
-    bounding box is clipped with descending-latitude handling, and the
-    result is normalized to (date, lat, lon, var, value). Decode backend:
-    xarray when importable (any NetCDF flavor, e.g. NetCDF-4 layouts the
-    minimal readers gate on); otherwise the built-in readers — REAL
-    decode for CDF-1/CDF-2 (``netcdf_classic.py``) AND NetCDF-4/HDF5
-    (``netcdf4_min.py``) with no dependencies, so both flavors run and
-    are tested in this container.
-    """
-    try:
-        import io
-
-        import xarray as xr
-    except ImportError:
-        xr = None
+    Each input row is (path, modificationTime, length, content); each
+    file's bytes go through ``decode_classic_long``, which probes the
+    coordinate axes by name, clips the optional bounding box and
+    normalizes to (date, lat, lon, var, value)."""
     for pdf in batches:
-        for _, row in pdf.iterrows():
-            content = bytes(row["content"])
-            if xr is None:
-                yield decode_classic_long(content, var_name, bounds)
-                continue
-            ds = xr.open_dataset(io.BytesIO(content))  # pragma: no cover
-            lon_dim, lat_dim = probe_coord_dims(  # pragma: no cover
-                list(ds.dims), list(ds.coords)
-            )
-            time_dim = probe_time_dim(list(ds.dims))  # pragma: no cover
-            if bounds is not None:  # pragma: no cover
-                lat_values = ds[lat_dim].values
-                lo, hi = lat_ordered_slice(
-                    float(lat_values[0]),
-                    float(lat_values[-1]),
-                    bounds["lat_min"],
-                    bounds["lat_max"],
-                )
-                ds = ds.sel(
-                    **{
-                        lon_dim: slice(bounds["lon_min"], bounds["lon_max"]),
-                        lat_dim: slice(lo, hi),
-                    }
-                )
-            da = ds[var_name]  # pragma: no cover
-            long = da.to_dataframe().reset_index()  # pragma: no cover
-            yield normalize_grid_long(  # pragma: no cover
-                long, var_name, lon_dim, lat_dim, time_dim
-            )
+        for content in pdf["content"]:
+            yield decode_classic_long(bytes(content), var_name, bounds)
 
 
 _DATE_IN_NAME = r"(\d{4})-?(\d{2})-?(\d{2})"
@@ -401,7 +324,7 @@ def probe_zarr_climate(store_path: str, var_name: str):
     if not dims or len(dims) != len(meta.shape):
         raise NotImplementedError(
             f"array {var_name!r} carries no usable _ARRAY_DIMENSIONS "
-            "attribute; name-free Zarr layouts need the xarray decode path"
+            "attribute; name-free Zarr layouts are not supported"
         )
     lon_dim, lat_dim = probe_coord_dims(dims)
     time_dim = probe_time_dim(dims)

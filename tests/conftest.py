@@ -60,8 +60,8 @@ def spark():
     yield s
 
 
-def jobs_started(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` starts: the status tracker's job ids
+def job_ids_started(spark, fn) -> set[int]:
+    """Ids of the Spark jobs ``fn()`` starts: the status tracker's job ids
     after the call less those before it. The listener bus is drained on
     both sides, because a job reaches the tracker asynchronously."""
     sc = spark.sparkContext
@@ -70,7 +70,12 @@ def jobs_started(spark, fn) -> int:
     before = set(sc.statusTracker().getJobIdsForGroup(None))
     fn()
     bus.waitUntilEmpty()
-    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+    return set(sc.statusTracker().getJobIdsForGroup(None)) - before
+
+
+def jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts."""
+    return len(job_ids_started(spark, fn))
 
 
 @pytest.fixture(scope="session")

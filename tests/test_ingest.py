@@ -1,6 +1,7 @@
-"""Ingest boundary: the mapInPandas grid-relationalization plumbing (S1)
-exercised with a deterministic fake decoder (xarray absent in this env),
-plus the long→wide pivot (J2)."""
+"""Ingest boundary: the mapInPandas grid-relationalization plumbing (S1),
+the dependency-free NetCDF decode path (renamed dims, descending latitude,
+bbox clip, packing, record layouts) end to end through Spark, plus the
+long→wide pivot (J2)."""
 
 from __future__ import annotations
 
@@ -17,8 +18,6 @@ from amazon_climate_data_etl_spark.session import ship_package_to_workers
 from amazon_climate_data_etl_spark.sources.ingest import (
     GRID_DAILY_SCHEMA,
     GRID_VARIABLES,
-    lat_ordered_slice,
-    normalize_grid_long,
     pivot_grid_wide,
     probe_coord_dims,
     probe_time_dim,
@@ -85,70 +84,6 @@ def test_probe_time_dim():
     assert probe_time_dim(["x", "y", "t"]) == "t"
 
 
-def test_lat_ordered_slice_descending_axis():
-    """A north-up (descending-latitude) file must clip with flipped bounds
-    — the reference's annual.py:231-248 branch; a naive ascending slice
-    would select zero rows."""
-    # ascending axis: natural order
-    assert lat_ordered_slice(-20.0, 5.0, -10.0, 0.0) == (-10.0, 0.0)
-    # descending axis: start at the max
-    assert lat_ordered_slice(5.0, -20.0, -10.0, 0.0) == (0.0, -10.0)
-
-
-def test_normalize_grid_long_renamed_dims():
-    """A decoded frame with longitude/latitude axis names and a non-'time'
-    time dim must normalize to the canonical schema with float coords."""
-    raw = pd.DataFrame(
-        {
-            "day": pd.to_datetime(["2001-01-01", "2001-01-02"]),
-            "latitude": [5.0, 4.75],  # descending file order is fine
-            "longitude": [-65.0, -65.0],
-            "Tmax": [30.0, 31.0],
-        }
-    )
-    out = normalize_grid_long(raw, "Tmax", "longitude", "latitude", "day")
-    assert list(out.columns) == ["date", "lat", "lon", "var", "value"]
-    assert out["date"].tolist() == [date(2001, 1, 1), date(2001, 1, 2)]
-    assert out["lat"].tolist() == [5.0, 4.75]
-    assert out["value"].tolist() == [30.0, 31.0]
-    assert set(out["var"]) == {"Tmax"}
-
-
-def test_fake_decoder_with_renamed_dims_through_spark(spark, tmp_path):
-    """End-to-end plumbing with a fake decoder that emits RENAMED axes and
-    a north-up latitude order, normalized by the same helper the real
-    decoder uses — the BR-DWGD file shape (longitude/latitude dims)."""
-
-    def _fake_decode(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                n = int(row["length"])
-                raw = pd.DataFrame(
-                    {
-                        "day": pd.to_datetime(["2001-01-01"] * n),
-                        # descending latitude axis (north-up file)
-                        "latitude": [5.0 - 0.25 * i for i in range(n)],
-                        "longitude": [-65.0] * n,
-                        "Tmin": [20.0 + i for i in range(n)],
-                    }
-                )
-                lon_dim, lat_dim = probe_coord_dims(["day", "latitude", "longitude"])
-                yield normalize_grid_long(
-                    raw, "Tmin", lon_dim, lat_dim, probe_time_dim(["day", "latitude", "longitude"])
-                )
-
-    (tmp_path / "f0.nc").write_bytes(b"x" * 6)
-    ship_package_to_workers(spark)
-    raw = spark.read.format("binaryFile").load(str(tmp_path / "*.nc"))
-    grid = raw.mapInPandas(_fake_decode, schema=GRID_DAILY_SCHEMA)
-    rows = grid.orderBy(F.col("lat").desc()).collect()
-    assert [f.name for f in grid.schema.fields] == ["date", "lat", "lon", "var", "value"]
-    assert len(rows) == 6
-    assert rows[0]["lat"] == 5.0 and rows[0]["value"] == 20.0
-    assert rows[-1]["lat"] == 3.75 and rows[-1]["value"] == 25.0
-    assert rows[0]["var"] == "Tmin" and rows[0]["date"] == date(2001, 1, 1)
-
-
 def _write_classic_fixture(path, var="Tmax", lat_name="latitude",
                            lon_name="longitude", time_name="time",
                            packed=False, time_units="days since 2001-01-01"):
@@ -190,17 +125,17 @@ def _write_classic_fixture(path, var="Tmax", lat_name="latitude",
 
 def test_real_classic_netcdf_ingest_end_to_end(spark, tmp_path):
     """The REAL decode path, dependency-free: write a genuine classic
-    NetCDF file (descending latitude, longitude/latitude dim names, CF
-    time units), run the actual distributed ingest job
-    (binaryFile → read_classic → normalize → partitioned parquet), and
-    check the relationalized values."""
+    NetCDF file (descending latitude, longitude/latitude dim names, a
+    time axis named ``day``, CF time units), run the actual distributed
+    ingest job (binaryFile → read_classic → normalize → partitioned
+    parquet), and check the relationalized values."""
     import numpy as np
 
     from amazon_climate_data_etl_spark.sources.ingest import (
         ingest_netcdf_to_parquet,
     )
 
-    vals = _write_classic_fixture(tmp_path / "tmax.nc")
+    vals = _write_classic_fixture(tmp_path / "tmax.nc", time_name="day")
     out = tmp_path / "out_parquet"
     ingest_netcdf_to_parquet(
         spark, str(tmp_path / "*.nc"), str(out), "Tmax"

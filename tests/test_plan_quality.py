@@ -16,6 +16,7 @@ import os
 import re
 
 import pytest
+from conftest import job_ids_started
 
 from amazon_climate_data_etl_spark.plans import inspect as I
 
@@ -332,6 +333,9 @@ _PLAN_BOUNDS = {
     # shuffle join this operator exists to demonstrate at skew scale
     "salted_skew_join": (3, 0),
     "session_windows": (2, 0),
+    # rebalance + vote aggregate + widen, printed once per join side; at
+    # runtime the second side reads the first's widen through
+    # ReusedExchange (see test_simhash_tokenizes_documents_once)
     "simhash_near_pairs": (6, 1),
     "sliding_windows": (2, 0),
     # 3 measure branches each print the shared rebalanced-scan exchange +
@@ -729,6 +733,32 @@ def test_domain_divergence_single_corpus_pass(spark, sf_dir):
     plan = I.plan_string(QUERIES["source_domain_divergence"](spark, sf_dir), "simple")
     assert plan.count("InMemoryTableScan") >= 4, plan
     assert plan.count("FileScan") == plan.count("InMemoryRelation"), plan
+
+
+def test_simhash_tokenizes_documents_once(spark, sf_dir):
+    """Both sides of simhash_near_pairs' pair join read the same widened
+    doc→print frame: in the final adaptive plan the corpus is scanned
+    once, and the other join side reads that frame's exchange through
+    ReusedExchange instead of tokenizing every document again. Run with
+    the shuffle partitions at the parallelism, as every session but this
+    suite's has them: the widen must still spread pair production, whose
+    stage is the query's last, over every core."""
+    sc = spark.sparkContext
+    width = sc.defaultParallelism
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        df = QUERIES["simhash_near_pairs"](spark, sf_dir)
+        last_job = max(job_ids_started(spark, df.collect))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("documents.parquet") == 1, final
+    assert "ReusedExchange" in final, final
+    tracker = sc.statusTracker()
+    last_stage = max(tracker.getJobInfo(last_job).stageIds)
+    assert tracker.getStageInfo(last_stage).numTasks == width, final
 
 
 def test_skew_salt_spreads_hot_keys(spark, sf_dir):
