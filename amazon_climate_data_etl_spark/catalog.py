@@ -114,15 +114,18 @@ def rebalance_for_compute(
     table_quality_audit): there the extra exchange measured as pure loss.
     The call sites record which side of that line they measured on.
 
-    ``keys`` switches the spread from round-robin to hash-by-key:
-    round-robin repartition is flagged non-deterministic by the planner,
-    which blocks exchange reuse when the SAME rebalanced stream feeds
-    both sides of a self-join (each side keeps its own exchange — the
-    fuzzy join measured one extra full exchange from exactly this).
-    Hash-by-key stays deterministic and reusable; pass a high-cardinality
-    key so the spread is still even.
+    ``keys`` switches the spread from round-robin to hash-by-key. Either
+    one is reused when the SAME rebalanced stream feeds both sides of a
+    self-join: the final adaptive plan of ``fuzzy_join_names`` scans
+    ``customer`` once and reads the second side through ``ReusedExchange``
+    keyed and keyless alike (sf0.001 and sf0.01, 4 and 8 shuffle
+    partitions; ``plans/fuzzy_join_keys/``). What the key bought there is
+    downstream: the hash partitioning by ``c_custkey`` survives the
+    broadcast join, so the candidates' ``distinct`` plans no exchange of
+    its own (3 shuffles keyed, 4 keyless). Pass a high-cardinality key so
+    the spread is still even.
 
-    r14 keying rule, from alternating-arm measurement: a KEYLESS
+    The keying rule, from alternating-arm measurement: a KEYLESS
     round-robin exchange first pays a full-row local sort of its input
     (``spark.sql.execution.sortBeforeRepartition``, on by default since
     SPARK-23207 so retried map tasks reproduce the same row-to-partition
@@ -177,8 +180,8 @@ def rebalance_for_kernel(df: DataFrame) -> DataFrame:
     thousands of splits), and results are partition-independent: the
     kernels are pure maps feeding keyed joins/windows downstream.
     (Keyless by design: every call site is a small-table heavy-kernel
-    fan-out, exactly the r14 row-count rule's round-robin side; a ``keys``
-    passthrough sat here unused through r14 and was dropped — r14 ADVICE.)
+    fan-out, exactly the row-count rule's round-robin side; a ``keys``
+    passthrough sat here unused and was dropped.)
     """
     sc = df.sparkSession.sparkContext
     return rebalance_for_compute(df, max(2, sc.defaultParallelism // 4))

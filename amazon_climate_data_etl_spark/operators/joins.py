@@ -905,14 +905,14 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1998-01-01"))
     )
     p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    # r15: keyless again. r14 keyed this rebalance by the group keys
-    # (batch commit, no per-query A/B); the paired closes then read
-    # 0.47 s -> 1.51 s and a 4-pass A/B isolated the keyed exchange as
-    # the whole delta (keyed 1.6-1.9 s vs round-robin 0.75-0.80 s,
-    # stable). The filtered 1997 slice is a SMALL heavy-downstream frame
-    # feeding a persisted multi-consumer aggregate — the r14 row-count
-    # rule's round-robin side, like the documents family; q18/q3, where
-    # keying won, are single-chain aggregates over the full scan.
+    # keyless: keying this rebalance by the group keys read 0.47 s ->
+    # 1.51 s in paired closes, and a 4-pass A/B isolated the keyed
+    # exchange as the whole delta (keyed 1.6-1.9 s vs round-robin
+    # 0.75-0.80 s, stable). The filtered 1997 slice is a SMALL
+    # heavy-downstream frame feeding a persisted multi-consumer aggregate
+    # — the row-count rule's round-robin side, like the documents family;
+    # q18/q3, where keying won, are single-chain aggregates over the full
+    # scan.
     pairs = (
         rebalance_for_compute(li)
         .join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -1007,8 +1007,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     q20); supplier attributes re-attach by broadcast. Costs are exact
     decimal mins, so the min-cost tie set replays identically in the
     oracle."""
-    # r15: keyless again (see q20 — same persisted-multi-consumer-agg
-    # shape; close-to-close read 0.476 -> 0.677 under the r14 keying)
+    # keyless (see q20 — same persisted-multi-consumer-agg shape;
+    # close-to-close read 0.476 -> 0.677 when keyed)
     li = rebalance_for_compute(load_table(spark, sf_dir, "lineitem"))
     p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "PROMO") & (F.col("p_size") < 15)
@@ -1095,8 +1095,8 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame and broadcasts back as a 1-row scalar; the threshold compares
     the SAME double expression shape in both engines. Output order is
     value-desc with the partkey tiebreak."""
-    # r15: keyless again (see q20 — same persisted-multi-consumer-agg
-    # shape; keyed measured 0.93-1.09 s vs keyless 0.55 s over 4 passes)
+    # keyless (see q20 — same persisted-multi-consumer-agg shape; keyed
+    # measured 0.93-1.09 s vs keyless 0.55 s over 4 passes)
     li = rebalance_for_compute(load_table(spark, sf_dir, "lineitem"))
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
@@ -1233,7 +1233,7 @@ ORDER BY o_orderpriority
 
 
 def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level runtime filtering (r14): the third runtime-pruning lever
+    """Row-level runtime filtering: the third runtime-pruning lever
     next to DPP (``dpp_pruned_join``) and storage co-location
     (``bucketed_join_revenue``). A selective filter on the part dim joins
     the fact on ``l_partkey`` — NOT a partition key, so DPP cannot prune —
@@ -1388,8 +1388,10 @@ def fuzzy_join_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lambdas evaluate interpreted (no codegen), and a single-row-group
     # scan otherwise serializes the whole O(rows·len) neighborhood build
     # on one core (measured 3.4 s of the query's 4.6 s wall at sf0.1;
-    # 1.5 s with the fan-out). Keyed spread, not round-robin, so the
-    # deterministic exchange is shared by both self-join sides.
+    # 1.5 s with the fan-out). Both self-join sides read the one spread
+    # exchange either way; keyed, its c_custkey partitioning also carries
+    # through the broadcast join and spares the candidates' distinct an
+    # exchange of its own (plans/fuzzy_join_keys/).
     v = rebalance_for_compute(c, keys=("c_custkey",)).select(
         "c_custkey",
         "c_name",

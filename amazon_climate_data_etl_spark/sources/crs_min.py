@@ -1,10 +1,9 @@
 """Minimal projected-CRS support for the dependency-free shapefile path.
 
 The reference reprojects every shapefile to EPSG:4326 unconditionally
-(process_climate_amazon_annual.py:159-161, via geopandas/pyproj). Without
-geopandas in the container, the minimal ingest previously REFUSED
-projected ``.prj`` files; this module closes that gap for the projections
-Brazilian municipal shapefiles actually ship:
+(process_climate_amazon_annual.py:159-161, via geopandas/pyproj). This
+module inverts, with numpy only, the projections Brazilian municipal
+shapefiles actually ship:
 
 - **Transverse Mercator** (all SIRGAS 2000 / UTM zones) — forward and
   inverse via the Krüger n-series (public formulas, e.g. Karney 2011
@@ -19,8 +18,7 @@ Everything is numpy-vectorized: reprojection happens driver-side over the
 ~5,570-municipality dimension (a few hundred thousand vertices), well
 under a second. WKT parsing is a deliberately loose regex extraction of
 SPHEROID / PROJECTION / PARAMETER — enough for ESRI/OGC WKT1 ``.prj``
-files; unsupported projections raise with a pointer at the geopandas
-path.
+files; anything else raises, naming what is unsupported.
 """
 
 from __future__ import annotations
@@ -63,7 +61,8 @@ def parse_projected_prj(wkt: str) -> ProjectedCRS | None:
     m = re.search(r'PROJECTION\[\s*"([^"]+)"', wkt)
     if not m:
         raise NotImplementedError("PROJCS without a PROJECTION clause")
-    proj = m.group(1).strip().lower()
+    proj_name = m.group(1).strip()
+    proj = proj_name.lower()
     params = {
         k.strip().lower(): float(v)
         for k, v in re.findall(
@@ -79,17 +78,17 @@ def parse_projected_prj(wkt: str) -> ProjectedCRS | None:
     if not units:
         raise NotImplementedError(
             "projected .prj without a parseable UNIT clause; refusing to "
-            "assume metres — use the geopandas path"
+            "assume metres (only metre-based projections are supported)"
         )
     if abs(float(units[-1]) - 1.0) > 1e-9:
         raise NotImplementedError(
-            "projected CRS with non-metre units; use the geopandas path"
+            f"projected CRS with non-metre unit factor {float(units[-1])!r}; "
+            "only metre-based projections are supported"
         )
     if proj not in _SUPPORTED:
         raise NotImplementedError(
-            f"projection {proj!r} is not supported by the minimal "
-            "reprojection (Transverse_Mercator / Polyconic); use the "
-            "geopandas path"
+            f"projection {proj_name!r} is not supported; the reprojection "
+            "inverts Transverse_Mercator and Polyconic only"
         )
     return ProjectedCRS(proj, a, inv_f, params)
 

@@ -4,8 +4,8 @@ NetCDF-4 files are HDF5 files (the netCDF-4 format spec maps dims and
 variables onto HDF5 dimension-scale datasets). The HDF5 file format is
 publicly specified (HDF5 File Format Specification v3); this module
 implements the subset that netCDF-4 climate grids actually use so the REAL
-ingest path (`sources/ingest.py::_decode_netcdf_batch`) can decode them in
-containers without h5py/netCDF4/xarray — the same clean-room pattern as
+ingest path (`sources/ingest.py::decode_classic_long`) can decode them
+without h5py/netCDF4/xarray — the same clean-room pattern as
 ``netcdf_classic.py`` (CDF-1/2) and ``shapefile_min.py``.
 
 Reader surface:
@@ -19,7 +19,7 @@ Reader surface:
 - data layouts: contiguous and chunked — the v3 message (v1 B-tree index)
   AND the HDF5 ≥1.10 v4 message with ALL FIVE of its chunk indexes:
   the fixed-shape trio (Single Chunk, Implicit, Fixed Array) plus the
-  unlimited-dimension pair (round 7) — Extensible Array (EAHD/EAIB/EASB/
+  unlimited-dimension pair — Extensible Array (EAHD/EAIB/EASB/
   EADB, the index time-unlimited NetCDF-4 climate grids get) and the v2
   chunk B-tree (record types 10/11, ≥2 unlimited dims) — filtered or
   not, with the shuffle + deflate + fletcher32 filter pipeline (H5Z
@@ -27,13 +27,13 @@ Reader surface:
   fill value;
 - global heap collections (vlen attribute payloads).
 
-- dense attribute and link storage (round 7): fractal heap (root direct
+- dense attribute and link storage: fractal heap (root direct
   block, or root indirect block over direct rows) + depth-0 v2 B-tree
   name indexes — the layout libhdf5 ≥1.10 "latest format" switches to
   past its compact phase-change thresholds (8 attrs / 8 links), i.e. the
   shape real NetCDF-4 files written with ``H5F_LIBVER_LATEST`` carry.
 
-v2 B-trees read at ANY depth (round 7: BTIN internal nodes with the
+v2 B-trees read at ANY depth (BTIN internal nodes with the
 published pointer-width arithmetic — records interleave between child
 pointers); the writer emits up to depth 1, which covers ~7000 records.
 

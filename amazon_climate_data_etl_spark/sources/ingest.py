@@ -6,24 +6,27 @@ Reference inputs (``/root/reference/scripts/process_climate_amazon_annual.py``):
 - an IBGE municipality shapefile reduced to centroids (:125-168) — S2.
 
 Spark-first design: both become **one-time ingest jobs** producing Parquet;
-the query layer never touches NetCDF/SHP. Each NetCDF variable is one
-Spark job: ``spark.read.format("binaryFile")`` + ``mapInPandas`` decodes
-one file per task, and that task writes the file's years straight into a
-per-variable output partitioned by year, so downstream year filters prune
-partitions. ``pivot_grid_wide`` then assembles the variables into one wide
-row per (date, cell).
+the query layer never touches NetCDF/SHP. Every grid format (NetCDF,
+GeoTIFF, Zarr) goes through the same two pieces: a format-specific decode
+of one file or chunk into a (time, lat, lon) cube that ends in
+``_grid_long``, the one relationalizer, and ``_ingest_files``, the one
+``binaryFile`` + ``mapInPandas`` writer, which partitions the output by
+year so downstream year filters prune partitions. ``pivot_grid_wide`` then
+assembles the variables into one wide row per (date, cell).
 
-Decode backend: the dependency-free readers, ``netcdf_classic.py`` for
-CDF-1/CDF-2/CDF-5 and, through it, ``netcdf4_min.py`` for NetCDF-4/HDF5 —
-so the one decode path that runs is the one that is tested (the same
-pattern as the minimal PNG decoder in ``multimodal.py``); layouts they do
-not read fail loudly by name. Shapefile ingest uses geopandas when
-importable, else the dependency-free ``shapefile_min.py`` path.
+Decode backends are the dependency-free readers: ``netcdf_classic.py`` for
+CDF-1/CDF-2/CDF-5 and, through it, ``netcdf4_min.py`` for NetCDF-4/HDF5;
+``geotiff_min.py``; ``zarr_min.py``. The one decode path that runs is the
+one that is tested, and layouts the readers do not handle fail loudly by
+name. Shapefiles go through ``shapefile_min.py`` and ``crs_min.py``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import datetime as dt
+import os
+import re
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -31,7 +34,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from amazon_climate_data_etl_spark.session import ship_package_to_workers
+from amazon_climate_data_etl_spark.sources.crs_min import (
+    inverse_to_lonlat,
+    parse_projected_prj,
+)
+from amazon_climate_data_etl_spark.sources.geotiff_min import read_geotiff
 from amazon_climate_data_etl_spark.sources.netcdf_classic import read_classic
+from amazon_climate_data_etl_spark.sources.shapefile_min import (
+    is_geographic_prj,
+    polygon_centroid,
+    read_dbf,
+    read_shp,
+)
+from amazon_climate_data_etl_spark.sources.zarr_min import (
+    chunk_slices,
+    decode_chunk,
+    open_group_array_meta,
+    read_zarr_array,
+    read_zattrs,
+)
 
 GRID_DAILY_SCHEMA = T.StructType(
     [
@@ -112,11 +134,12 @@ def probe_time_dim(dims: "list[str] | tuple[str, ...]") -> str:
     return "time"
 
 
-def _decode_time_units(values, units: str):
-    """CF time decode for the minimal path: '<unit> since <base>' with
-    unit in days/hours/minutes/seconds."""
-    import datetime as dt
-
+def _decode_time_units(values, units) -> list:
+    """CF time axis → dates: '<unit> since <base>' with unit in
+    days/hours/minutes/seconds; an axis without string units is read as
+    datetimes."""
+    if not isinstance(units, str):
+        return list(pd.to_datetime(np.asarray(values)).date)
     parts = units.split(" since ", 1)
     if len(parts) != 2:
         raise NotImplementedError(f"unsupported time units {units!r}")
@@ -149,19 +172,82 @@ def _gate_cf_calendar(calendar) -> None:
         )
 
 
+def _grid_long(
+    cube, dates, lat, lon, var_name: str, bounds: dict | None = None
+) -> pd.DataFrame:
+    """A (time, lat, lon) cube and its axes → the long grid frame, columns
+    in ``GRID_DAILY_SCHEMA`` order: the one relationalizer every grid
+    format's decode ends in.
+
+    ``bounds`` (lon_min / lon_max / lat_min / lat_max) clips through
+    coordinate masks, which are direction-agnostic: a descending
+    (north-up) latitude axis clips identically."""
+    cube = np.asarray(cube, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    lon = np.asarray(lon, dtype=np.float64)
+    if bounds is not None:
+        lat_m = (lat >= bounds["lat_min"]) & (lat <= bounds["lat_max"])
+        lon_m = (lon >= bounds["lon_min"]) & (lon <= bounds["lon_max"])
+        cube = cube[:, lat_m][:, :, lon_m]
+        lat, lon = lat[lat_m], lon[lon_m]
+    nt, nlat, nlon = cube.shape
+    return pd.DataFrame(
+        {
+            "date": np.repeat(np.array(dates, dtype=object), nlat * nlon),
+            "lat": np.tile(np.repeat(lat, nlon), nt),
+            "lon": np.tile(lon, nt * nlat),
+            "var": var_name,
+            "value": cube.ravel(),
+        }
+    )
+
+
+def _ingest_files(
+    spark: SparkSession,
+    raw: DataFrame,
+    decode: Callable[[tuple], pd.DataFrame],
+    out_path: str,
+    shuffle: bool,
+) -> None:
+    """The one grid writer: ``decode(row)`` once per binaryFile row of
+    ``raw`` (a named tuple: path, modificationTime, length, content) in a
+    ``mapInPandas`` worker, then a parquet write partitioned by year, so
+    every downstream time-ranged query prunes partitions (the reference's
+    manual time-chunk logic, annual.py:58-62, becomes storage layout).
+
+    ``shuffle`` puts a repartition by year in front of the write. A caller
+    whose task holds one whole file (NetCDF) passes False: the task
+    already writes each year of its file once, and a shuffle would only
+    re-serialize every row in a second job. Callers that run one task per
+    day or per chunk (GeoTIFF, Zarr) pass True, which keeps the output to
+    one file per year instead of one per task and year."""
+    ship_package_to_workers(spark)
+
+    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                yield decode(row)
+
+    grid = raw.mapInPandas(worker, schema=GRID_DAILY_SCHEMA).withColumn(
+        "year", F.year("date")
+    )
+    if shuffle:
+        grid = grid.repartition("year")
+    grid.write.partitionBy("year").mode("overwrite").parquet(out_path)
+
+
 def decode_classic_long(
     content: bytes, var_name: str, bounds: dict | None = None
 ) -> pd.DataFrame:
     """NetCDF bytes → canonical long grid frame, dependency-free.
 
-    The REAL decode path for BOTH flavors: CDF-1/CDF-2 (read_classic
+    The decode path for BOTH flavors: CDF-1/CDF-2/CDF-5 (read_classic
     handles the classic binary format) and NetCDF-4 (read_classic
     dispatches the HDF5 magic to the minimal HDF5 decoder,
     netcdf4_min.py — superblock v0/v2, contiguous + shuffled/deflated
     chunked storage, dimension scales + DIMENSION_LIST). CF unpacking
-    (scale/offset, _FillValue → NaN) is shared. Bounds are applied as
-    coordinate masks, which are direction-agnostic — a descending
-    (north-up) latitude axis clips identically."""
+    (scale/offset, _FillValue → NaN) is shared. The coordinate axes are
+    probed by name, and the variable is transposed to (time, lat, lon)."""
     nc = read_classic(content)
     var = nc.variables[var_name]
     lon_dim, lat_dim = probe_coord_dims(list(var.dims), list(nc.variables))
@@ -173,50 +259,53 @@ def decode_classic_long(
                 "auxiliary-coordinate layouts are not supported"
             )
     order = [var.dims.index(d) for d in (time_dim, lat_dim, lon_dim)]
-    cube = np.transpose(np.asarray(var.data), order).astype(np.float64)
-    lat_vals = np.asarray(nc.variables[lat_dim].data, dtype=np.float64)
-    lon_vals = np.asarray(nc.variables[lon_dim].data, dtype=np.float64)
     tvar = nc.variables[time_dim]
-    units = tvar.attrs.get("units")
     _gate_cf_calendar(tvar.attrs.get("calendar"))
-    dates = (
-        _decode_time_units(tvar.data, units)
-        if isinstance(units, str)
-        else list(pd.to_datetime(np.asarray(tvar.data)).date)
+    return _grid_long(
+        np.transpose(var.data, order),
+        _decode_time_units(tvar.data, tvar.attrs.get("units")),
+        nc.variables[lat_dim].data,
+        nc.variables[lon_dim].data,
+        var_name,
+        bounds,
     )
-    if bounds is not None:
-        lat_m = (lat_vals >= bounds["lat_min"]) & (lat_vals <= bounds["lat_max"])
-        lon_m = (lon_vals >= bounds["lon_min"]) & (lon_vals <= bounds["lon_max"])
-        cube = cube[:, lat_m][:, :, lon_m]
-        lat_vals, lon_vals = lat_vals[lat_m], lon_vals[lon_m]
-    nt, nlat, nlon = cube.shape
-    long = pd.DataFrame(
-        {
-            "date": np.repeat(np.array(dates, dtype=object), nlat * nlon),
-            "lat": np.tile(np.repeat(lat_vals, nlon), nt),
-            "lon": np.tile(np.tile(lon_vals, nlat), nt),
-            "value": cube.ravel(),
-        }
+
+
+def ingest_netcdf_to_parquet(
+    spark: SparkSession,
+    nc_glob: str,
+    out_path: str,
+    var_name: str,
+    bounds: dict | None = None,
+) -> None:
+    """Distributed NetCDF → Parquet relationalization (S1 ingest boundary).
+
+    One task per file, one Spark job per call; output partitioned by year.
+    ``bounds`` (lon_min / lon_max / lat_min / lat_max) clips each file to
+    the region of interest before relationalizing, the reference's
+    load_clipped_netcdf behavior."""
+    raw = spark.read.format("binaryFile").load(nc_glob)
+    _ingest_files(
+        spark,
+        raw,
+        lambda row: decode_classic_long(bytes(row.content), var_name, bounds),
+        out_path,
+        shuffle=False,
     )
-    long["var"] = var_name
-    return long[["date", "lat", "lon", "var", "value"]]
 
 
-def _decode_netcdf_batch(
-    batches: Iterator[pd.DataFrame], var_name: str, bounds: dict | None = None
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: binaryFile rows → long-format grid rows.
-
-    Each input row is (path, modificationTime, length, content); each
-    file's bytes go through ``decode_classic_long``, which probes the
-    coordinate axes by name, clips the optional bounding box and
-    normalizes to (date, lat, lon, var, value)."""
-    for pdf in batches:
-        for content in pdf["content"]:
-            yield decode_classic_long(bytes(content), var_name, bounds)
+_DATE_IN_NAME = re.compile(r"(\d{4})-?(\d{2})-?(\d{2})")
 
 
-_DATE_IN_NAME = r"(\d{4})-?(\d{2})-?(\d{2})"
+def _geotiff_date(path: str) -> dt.date:
+    """The date a per-day raster carries in its file name
+    (``pr_2001-01-01.tif`` / ``tmax_20010102.tif`` both match)."""
+    m = _DATE_IN_NAME.search(str(path).rsplit("/", 1)[-1])
+    if not m:
+        raise ValueError(
+            f"GeoTIFF file name {path!r} carries no YYYY-MM-DD / YYYYMMDD date"
+        )
+    return dt.date(*(int(g) for g in m.groups()))
 
 
 def decode_geotiff_long(
@@ -224,50 +313,9 @@ def decode_geotiff_long(
 ) -> pd.DataFrame:
     """GeoTIFF bytes → canonical long grid frame (one date per file —
     rasters carry no time axis; the date rides in the filename, the
-    standard per-day-raster layout). Same clipping semantics as the
-    NetCDF path: coordinate masks, direction-agnostic (north-up rasters
-    store descending latitudes)."""
-    from amazon_climate_data_etl_spark.sources.geotiff_min import read_geotiff
-
+    standard per-day-raster layout)."""
     r = read_geotiff(content)
-    grid, lat_vals, lon_vals = r.data, r.lat, r.lon
-    if bounds is not None:
-        lat_m = (lat_vals >= bounds["lat_min"]) & (lat_vals <= bounds["lat_max"])
-        lon_m = (lon_vals >= bounds["lon_min"]) & (lon_vals <= bounds["lon_max"])
-        grid = grid[lat_m][:, lon_m]
-        lat_vals, lon_vals = lat_vals[lat_m], lon_vals[lon_m]
-    nlat, nlon = grid.shape
-    long = pd.DataFrame(
-        {
-            "date": np.repeat(np.array([date], dtype=object), nlat * nlon),
-            "lat": np.repeat(lat_vals, nlon),
-            "lon": np.tile(lon_vals, nlat),
-            "value": grid.ravel(),
-        }
-    )
-    long["var"] = var_name
-    return long[["date", "lat", "lon", "var", "value"]]
-
-
-def _decode_geotiff_batch(
-    batches: Iterator[pd.DataFrame], var_name: str, bounds: dict | None = None
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: binaryFile rows → long-format grid rows, date
-    parsed from the file name (``pr_2001-01-01.tif`` / ``tmax_20010102``
-    both match)."""
-    import datetime as _dt
-    import re as _re
-
-    for pdf in batches:
-        for _, row in pdf.iterrows():
-            m = _re.search(_DATE_IN_NAME, str(row["path"]).rsplit("/", 1)[-1])
-            if not m:
-                raise ValueError(
-                    f"GeoTIFF file name {row['path']!r} carries no "
-                    "YYYY-MM-DD / YYYYMMDD date"
-                )
-            date = _dt.date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-            yield decode_geotiff_long(bytes(row["content"]), var_name, date, bounds)
+    return _grid_long(r.data[None], [date], r.lat, r.lon, var_name, bounds)
 
 
 def ingest_geotiff_to_parquet(
@@ -283,22 +331,15 @@ def ingest_geotiff_to_parquet(
     clipping semantics are identical, so the whole downstream climate
     pipeline (grid-snap join → daily → annual/monthly) runs unchanged on
     GeoTIFF-sourced grids."""
-    from amazon_climate_data_etl_spark.session import ship_package_to_workers
-
-    ship_package_to_workers(spark)
     raw = spark.read.format("binaryFile").load(tif_glob)
-    grid = raw.mapInPandas(
-        lambda it: _decode_geotiff_batch(it, var_name, bounds),
-        schema=GRID_DAILY_SCHEMA,
-    )
-    # one task per day: the shuffle keeps it to one file per year, not one
-    # file per day
-    (
-        grid.withColumn("year", F.year("date"))
-        .repartition("year")
-        .write.partitionBy("year")
-        .mode("overwrite")
-        .parquet(out_path)
+    _ingest_files(
+        spark,
+        raw,
+        lambda row: decode_geotiff_long(
+            bytes(row.content), var_name, _geotiff_date(row.path), bounds
+        ),
+        out_path,
+        shuffle=True,
     )
 
 
@@ -311,14 +352,6 @@ def probe_zarr_climate(store_path: str, var_name: str):
     through the same name probing as the NetCDF path; the CF time axis
     (units/calendar) is decoded with the shared helpers, calendar gate
     included."""
-    import os as _os
-
-    from amazon_climate_data_etl_spark.sources.zarr_min import (
-        open_group_array_meta,
-        read_zarr_array,
-        read_zattrs,
-    )
-
     meta, attrs = open_group_array_meta(store_path, var_name)
     dims = attrs.get("_ARRAY_DIMENSIONS")
     if not dims or len(dims) != len(meta.shape):
@@ -329,21 +362,17 @@ def probe_zarr_climate(store_path: str, var_name: str):
     lon_dim, lat_dim = probe_coord_dims(dims)
     time_dim = probe_time_dim(dims)
     for d in (time_dim, lat_dim, lon_dim):
-        if d not in dims or not _os.path.isdir(_os.path.join(store_path, d)):
+        if d not in dims or not os.path.isdir(os.path.join(store_path, d)):
             raise NotImplementedError(
                 f"dimension {d!r} has no coordinate array in this store"
             )
-    t_attrs = read_zattrs(_os.path.join(store_path, time_dim))
+    t_attrs = read_zattrs(os.path.join(store_path, time_dim))
     _gate_cf_calendar(t_attrs.get("calendar"))
-    t_vals = read_zarr_array(_os.path.join(store_path, time_dim))
-    units = t_attrs.get("units")
-    dates = (
-        _decode_time_units(t_vals, units)
-        if isinstance(units, str)
-        else list(pd.to_datetime(np.asarray(t_vals)).date)
+    dates = _decode_time_units(
+        read_zarr_array(os.path.join(store_path, time_dim)), t_attrs.get("units")
     )
-    lat_vals = read_zarr_array(_os.path.join(store_path, lat_dim)).astype(np.float64)
-    lon_vals = read_zarr_array(_os.path.join(store_path, lon_dim)).astype(np.float64)
+    lat_vals = read_zarr_array(os.path.join(store_path, lat_dim)).astype(np.float64)
+    lon_vals = read_zarr_array(os.path.join(store_path, lon_dim)).astype(np.float64)
     return meta, dims, (time_dim, lat_dim, lon_dim), dates, lat_vals, lon_vals
 
 
@@ -363,42 +392,22 @@ def decode_zarr_chunk_long(
 
     This is the per-task unit of the distributed ingest: the chunk is
     decoded standalone (its key encodes its grid position), transposed to
-    (time, lat, lon), clipped against the broadcast coordinate axes, and
-    relationalized — no cross-chunk coordination of any kind."""
-    from amazon_climate_data_etl_spark.sources.zarr_min import (
-        chunk_slices,
-        decode_chunk,
-    )
-
-    time_dim, lat_dim, lon_dim = axis_names
+    (time, lat, lon) and relationalized against its slices of the
+    broadcast coordinate axes — no cross-chunk coordination of any kind."""
     slices = chunk_slices(meta, key)
     block = decode_chunk(content, meta)
     # trim the (always-full-size) stored chunk to the array extent
     block = block[tuple(slice(0, s.stop - s.start) for s in slices)]
-    order = [dims.index(d) for d in (time_dim, lat_dim, lon_dim)]
-    cube = np.transpose(block, order).astype(np.float64)
     by_dim = dict(zip(dims, slices))
-    c_dates = np.array(dates, dtype=object)[
-        by_dim[time_dim].start : by_dim[time_dim].stop
-    ]
-    c_lat = lat_vals[by_dim[lat_dim].start : by_dim[lat_dim].stop]
-    c_lon = lon_vals[by_dim[lon_dim].start : by_dim[lon_dim].stop]
-    if bounds is not None:
-        lat_m = (c_lat >= bounds["lat_min"]) & (c_lat <= bounds["lat_max"])
-        lon_m = (c_lon >= bounds["lon_min"]) & (c_lon <= bounds["lon_max"])
-        cube = cube[:, lat_m][:, :, lon_m]
-        c_lat, c_lon = c_lat[lat_m], c_lon[lon_m]
-    nt, nlat, nlon = cube.shape
-    long = pd.DataFrame(
-        {
-            "date": np.repeat(c_dates, nlat * nlon),
-            "lat": np.tile(np.repeat(c_lat, nlon), nt),
-            "lon": np.tile(np.tile(c_lon, nlat), nt),
-            "value": cube.ravel(),
-        }
+    t, la, lo = (by_dim[d] for d in axis_names)
+    return _grid_long(
+        np.transpose(block, [dims.index(d) for d in axis_names]),
+        np.asarray(dates, dtype=object)[t],
+        lat_vals[la],
+        lon_vals[lo],
+        var_name,
+        bounds,
     )
-    long["var"] = var_name
-    return long[["date", "lat", "lon", "var", "value"]]
 
 
 def ingest_zarr_to_parquet(
@@ -423,15 +432,9 @@ def ingest_zarr_to_parquet(
     pipeline gives NaN cells. Output layout (year partitioning) matches
     the other ingest boundaries, so the whole climate pipeline runs
     unchanged on Zarr-sourced grids."""
-    import os as _os
-
-    from amazon_climate_data_etl_spark.session import ship_package_to_workers
-
-    ship_package_to_workers(spark)
     meta, dims, axis_names, dates, lat_vals, lon_vals = probe_zarr_climate(
         store_path, var_name
     )
-    var_root = _os.path.join(_os.path.abspath(store_path), var_name)
     # chunk objects only: v2 keys are digit-led ('0.1' files or '0/1'
     # nesting), v3 'default' keys are digit-led under the 'c' prefix dir
     # ('c/0/1') or flat 'c.0.1' files; metadata (.zarray/zarr.json/.zattrs)
@@ -440,67 +443,18 @@ def ingest_zarr_to_parquet(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "{c.*,[0-9]*}")
         .option("recursiveFileLookup", "true")
-        .load(var_root)
+        .load(os.path.join(os.path.abspath(store_path), var_name))
     )
     marker = var_name + "/"
 
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                rel = str(row["path"]).rsplit(marker, 1)[-1]
-                key = rel.replace("/", meta.separator)
-                yield decode_zarr_chunk_long(
-                    bytes(row["content"]), key, meta, dims, axis_names,
-                    dates, lat_vals, lon_vals, var_name, bounds,
-                )
+    def decode(row) -> pd.DataFrame:
+        key = str(row.path).rsplit(marker, 1)[-1].replace("/", meta.separator)
+        return decode_zarr_chunk_long(
+            bytes(row.content), key, meta, dims, axis_names,
+            dates, lat_vals, lon_vals, var_name, bounds,
+        )
 
-    grid = raw.mapInPandas(worker, schema=GRID_DAILY_SCHEMA)
-    # one task per chunk: the shuffle keeps it to one file per year, not one
-    # file per chunk and year
-    (
-        grid.withColumn("year", F.year("date"))
-        .repartition("year")
-        .write.partitionBy("year")
-        .mode("overwrite")
-        .parquet(out_path)
-    )
-
-
-def ingest_netcdf_to_parquet(
-    spark: SparkSession,
-    nc_glob: str,
-    out_path: str,
-    var_name: str,
-    bounds: dict | None = None,
-) -> None:
-    """Distributed NetCDF → Parquet relationalization (S1 ingest boundary).
-
-    One task per file; output partitioned by year so every downstream
-    time-ranged query prunes partitions (the reference's manual time-chunk
-    logic, annual.py:58-62, becomes storage layout). ``bounds`` (lon_min /
-    lon_max / lat_min / lat_max) clips each file to the region of interest
-    before relationalizing, the reference's load_clipped_netcdf behavior.
-
-    The decode task writes its rows itself, with no shuffle by year in
-    front of the write: a task holds one whole file, so it already writes
-    each year of that file exactly once, and a shuffle would only
-    re-serialize every row in a second job. (The GeoTIFF and Zarr ingests
-    keep theirs: they run one task per day or per chunk, and without it
-    would write one file per task per year.)"""
-    from amazon_climate_data_etl_spark.session import ship_package_to_workers
-
-    ship_package_to_workers(spark)
-    raw = spark.read.format("binaryFile").load(nc_glob)
-    grid = raw.mapInPandas(
-        lambda it: _decode_netcdf_batch(it, var_name, bounds),
-        schema=GRID_DAILY_SCHEMA,
-    )
-    (
-        grid.withColumn("year", F.year("date"))
-        .write.partitionBy("year")
-        .mode("overwrite")
-        .parquet(out_path)
-    )
+    _ingest_files(spark, raw, decode, out_path, shuffle=True)
 
 
 def pivot_grid_wide(grid_long: DataFrame) -> DataFrame:
@@ -544,58 +498,14 @@ def municipalities_from_shapefile(
 ) -> DataFrame:
     """Shapefile → centroid dimension table (S2, annual.py:125-168).
 
-    Geometry work (CRS normalize → centroid) happens driver-side — a
-    ~5,570-row table does not need distribution. Backend: geopandas when
-    importable (full format + reprojection coverage); otherwise the
-    dependency-free reader in ``shapefile_min.py`` decodes .shp/.dbf and
-    computes shoelace centroids — REAL shapefile ingest with no libraries,
-    limited to already-geographic CRSs (a projected .prj raises with a
-    pointer at the geopandas path)."""
-    try:
-        import geopandas as gpd
-    except ImportError:
-        gpd = None
-    if gpd is None:
-        return _municipalities_from_shapefile_minimal(spark, shp_path, states)
-    gdf = gpd.read_file(shp_path)  # pragma: no cover - env without geopandas
-    state_col = _probe_state_column(gdf.columns)  # pragma: no cover
-    if state_col is None:  # pragma: no cover
-        gdf["UF"] = gdf["CD_MUN"].astype(str).str[:2].map(IBGE_PREFIX_TO_UF)
-        state_col = "UF"
-    gdf = gdf[gdf[state_col].isin(states)]  # pragma: no cover
-    if gdf.crs is None or gdf.crs.to_epsg() != 4326:  # pragma: no cover
-        gdf = gdf.to_crs(4326)
-    cent = gdf.geometry.centroid  # pragma: no cover
-    pdf = pd.DataFrame(  # pragma: no cover
-        {
-            "CD_MUN": gdf["CD_MUN"].astype(str),
-            "NM_MUN": gdf["NM_MUN"].astype(str),
-            "UF": gdf[state_col].astype(str),
-            "lon": cent.x,
-            "lat": cent.y,
-        }
-    )
-    return municipalities_from_pandas(spark, pdf)  # pragma: no cover
-
-
-def _municipalities_from_shapefile_minimal(
-    spark: SparkSession, shp_path: str, states: tuple[str, ...]
-) -> DataFrame:
-    """Dependency-free S2 path: shapefile_min decode + shoelace centroids,
-    with the reference's state-column probing and IBGE-prefix fallback.
-    Projected CRSs (UTM zones, Brazil Polyconic) reproject to geographic
-    via crs_min before centroid computation — the reference's
-    unconditional to_crs(4326); other projections raise with a pointer at
-    the geopandas path."""
-    import os
-
-    from amazon_climate_data_etl_spark.sources.shapefile_min import (
-        is_geographic_prj,
-        polygon_centroid,
-        read_dbf,
-        read_shp,
-    )
-
+    Geometry work happens driver-side — a ~5,570-row table does not need
+    distribution. The dependency-free reader in ``shapefile_min.py``
+    decodes .shp/.dbf and computes shoelace centroids, with the
+    reference's state-column probing and IBGE-prefix fallback. A projected
+    CRS (UTM zones, Brazil Polyconic) reprojects to geographic via
+    ``crs_min`` before the centroids, the reference's unconditional
+    to_crs(4326) (annual.py:159-161); any other projection fails loudly,
+    naming it."""
     base, _ = os.path.splitext(shp_path)
     prj_path = base + ".prj"
     crs = None
@@ -603,22 +513,10 @@ def _municipalities_from_shapefile_minimal(
         with open(prj_path) as f:
             wkt = f.read()
         if not is_geographic_prj(wkt):
-            # projected CRS: the reference reprojects to 4326
-            # unconditionally (annual.py:159-161); crs_min inverts the
-            # projections Brazilian municipal files ship (UTM zones /
-            # Brazil Polyconic) and raises on anything else
-            from amazon_climate_data_etl_spark.sources.crs_min import (
-                parse_projected_prj,
-            )
-
             crs = parse_projected_prj(wkt)
     with open(shp_path, "rb") as f:
         shapes = read_shp(f.read())
     if crs is not None:
-        from amazon_climate_data_etl_spark.sources.crs_min import (
-            inverse_to_lonlat,
-        )
-
         for s in shapes:
             if len(s.points):
                 lon, lat = inverse_to_lonlat(s.points[:, 0], s.points[:, 1], crs)

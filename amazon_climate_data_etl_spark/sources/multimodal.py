@@ -7,12 +7,12 @@ Python cost is amortized per batch and the operator chain stays a single
 map (no shuffle).
 
 Decode kernels: the REAL path (``fake=False``) decodes WAV via the stdlib
-``wave`` module and PNG via PIL when importable, with a dependency-free
-zlib scanline decoder as the PNG fallback — both run and are tested in
-this container on valid in-test-generated media — including video: AVI
-containers parse via ``avi_min`` and intra-only codecs (MPNG frames
-through the minimal PNG decoder, MJPG through PIL) decode to real
-pixels; interframe codecs (H.264 etc.) stay ffmpeg-gated. The deterministic fake featureizer
+``wave`` module and PNG via a dependency-free zlib scanline decoder —
+both run and are tested on valid in-test-generated media — including
+video: AVI containers parse via ``avi_min`` and MPNG frames decode to
+real pixels through the same PNG decoder; any other image payload (JPEG,
+MJPG frames) fails loudly as not PNG, and interframe codecs (H.264 etc.)
+stay ffmpeg-gated. The deterministic fake featureizer
 (``fake=True``, the default) remains for oracle-free determinism checks
 and for payloads that are not real media (the synthetic bench table).
 """
@@ -59,7 +59,7 @@ FEATURES_SCHEMA = T.StructType(
         # compressed length as an INTEGER next to the double ratio: the
         # portable avg_entropy aggregation (media_summary) needs an
         # exact-integer form of the per-item entropy so both engines can
-        # replay it without any double→decimal cast (r13 graduation)
+        # replay it without any double→decimal cast
         T.StructField("comp_len", T.IntegerType()),
         T.StructField("entropy_proxy", T.DoubleType()),
         T.StructField("feature", T.ArrayType(T.FloatType())),
@@ -77,10 +77,12 @@ def _png_decode_minimal(content: bytes) -> np.ndarray:
 
     Chunk walk → zlib inflate → per-scanline unfilter (types 0-4, the full
     PNG filter set). Covers everything the in-repo encoder and the test
-    fixtures produce; PIL (when importable) takes precedence and handles
-    the long tail of real-world files."""
+    fixtures produce; any other payload (JPEG, an MJPG frame) raises."""
     if content[:8] != _PNG_MAGIC:
-        raise ValueError("not a PNG payload")
+        raise ValueError(
+            f"not a PNG payload (starts {bytes(content[:4])!r}); only PNG "
+            "images decode in-container"
+        )
     pos, width, height, channels, idat = 8, None, None, None, []
     while pos < len(content):
         length = int.from_bytes(content[pos : pos + 4], "big")
@@ -166,20 +168,6 @@ def png_encode_minimal(pixels: np.ndarray) -> bytes:
     )
 
 
-def _decode_image(content: bytes) -> np.ndarray:
-    """Image bytes → HxWxC uint8 pixels. PIL when importable (full format
-    coverage); the minimal PNG decoder otherwise — so the real path RUNS
-    in dependency-free containers too, on PNG fixtures."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError:
-        return _png_decode_minimal(content)
-    arr = np.asarray(Image.open(io.BytesIO(content)))  # pragma: no cover
-    return arr if arr.ndim == 3 else arr[:, :, None]  # pragma: no cover
-
-
 def _decode_wav(content: bytes) -> np.ndarray:
     """WAV bytes → float64 samples in [-1, 1], via the stdlib wave module
     (a REAL audio decode — no third-party dependency needed)."""
@@ -217,13 +205,13 @@ def _featurize_signal(values: np.ndarray) -> np.ndarray:
 def _decode_real(content: bytes, kind: str) -> np.ndarray:
     """Real decode + feature-extract kernel.
 
-    - image: PNG (minimal decoder) or any PIL-readable format → pixel
-      moments/histogram features.
+    - image: PNG (minimal decoder) → pixel moments/histogram features.
     - audio: WAV via the stdlib wave module → sample moments/histogram.
-    - video: frame decode requires ffmpeg, not present here — still gated.
+    - video: intra-only AVI (MPNG frames) → middle-frame pixel features;
+      other codecs stay ffmpeg-gated.
     """
     if kind == "image":
-        return _featurize_signal(_decode_image(content))
+        return _featurize_signal(_png_decode_minimal(content))
     if kind == "audio":
         return _featurize_signal(_decode_wav(content))
     return _featurize_signal(_decode_video_middle_frame(content))
@@ -231,9 +219,9 @@ def _decode_real(content: bytes, kind: str) -> np.ndarray:
 
 def _decode_video_middle_frame(content: bytes) -> np.ndarray:
     """Video bytes → the middle frame's pixels. Real decode for intra-only
-    AVI containers (MPNG frames via the minimal PNG decoder; MJPG via PIL
-    when importable); interframe codecs (H.264 etc.) cannot be decoded
-    frame-by-frame and stay gated behind ffmpeg."""
+    AVI containers (MPNG frames via the minimal PNG decoder; an MJPG
+    frame raises as not PNG); interframe codecs (H.264 etc.) cannot be
+    decoded frame-by-frame and stay gated behind ffmpeg."""
     from amazon_climate_data_etl_spark.sources.avi_min import read_avi
 
     try:
@@ -246,9 +234,9 @@ def _decode_video_middle_frame(content: bytes) -> np.ndarray:
     if video.codec.upper() not in ("MPNG", "MJPG") or not video.frames:
         raise NotImplementedError(
             f"AVI codec {video.codec!r} is interframe-compressed; frame "
-            "decode requires ffmpeg (MPNG/MJPG are decodable in-container)"
+            "decode requires ffmpeg (MPNG frames decode in-container)"
         )
-    return _decode_image(video.frames[len(video.frames) // 2])
+    return _png_decode_minimal(video.frames[len(video.frames) // 2])
 
 
 def _decode_fake(content: bytes, kind: str) -> np.ndarray:
@@ -313,13 +301,13 @@ def resize_images(
     kind-filter prunes non-images BEFORE Python so audio/video bytes never
     cross the Arrow boundary). The fake kernel emits a deterministic
     out_w*out_h-byte payload derived from the content hash; the real kernel
-    decodes (PIL or the minimal PNG path), nearest-neighbor resamples, and
+    decodes (the minimal PNG path), nearest-neighbor resamples, and
     re-encodes PNG — same signature, same schema."""
     spark = media.sparkSession
     ship_package_to_workers(spark)
 
     def _resize_real(content: bytes) -> bytes:
-        px = _decode_image(content)
+        px = _png_decode_minimal(content)
         h, w = px.shape[:2]
         ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
         xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
@@ -546,9 +534,9 @@ def _scene_change_profile(content: bytes):
     if video.codec.upper() not in ("MPNG", "MJPG") or not video.frames:
         raise NotImplementedError(
             f"AVI codec {video.codec!r} is interframe-compressed; frame "
-            "decode requires ffmpeg (MPNG/MJPG are decodable in-container)"
+            "decode requires ffmpeg (MPNG frames decode in-container)"
         )
-    frames = [_decode_image(f).astype(np.int64) for f in video.frames]
+    frames = [_png_decode_minimal(f).astype(np.int64) for f in video.frames]
     nf = len(frames)
     if nf < 2:
         return nf, 0, -1, 0, 0
@@ -569,7 +557,7 @@ def video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multimodal family (frame sampling and perceptual hashing cover
     extraction/dedup; this is the temporal-structure kernel a video
     curation pipeline runs to split clips at cuts). Hash-checked at the
-    driver since r11 (VIDEO_SCENES_SQL below): the container/frame decode
+    driver (VIDEO_SCENES_SQL below): the container/frame decode
     is not SQL-expressible, but its per-boundary diff sums are a pure
     function of media_id and live in the committed pure-Python sidecar
     (fixtures/media_framediffs.parquet, tools/gen_media_sidecars.py); the
@@ -591,7 +579,7 @@ def video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=[f.name for f in SCENE_CHANGES_SCHEMA.fields]
             )
 
-    # persist the per-item profile BEFORE the output sort (r14): the
+    # persist the per-item profile BEFORE the output sort: the
     # pipeline up to here is map-only — no exchange — so the global
     # sort's range-sampling pass would otherwise re-execute the entire
     # container/frame decode a second time (measured 1.74 -> 0.96 s).
@@ -607,7 +595,7 @@ def video_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def audio_energy_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: per-item audio activity profiles over the
     synthesized media table (tone/noise-half WAVs → real segment
-    structure). Hash-checked at the driver since r11 (AUDIO_SEGMENTS_SQL
+    structure). Hash-checked at the driver (AUDIO_SEGMENTS_SQL
     below): the WAV decode kernel is not SQL-expressible, but its
     per-frame int64 energies are a pure function of media_id and live in
     the committed pure-Python sidecar (fixtures/media_energies.parquet,
@@ -727,7 +715,7 @@ def image_phashes(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
-                    "phash": [dhash64(_decode_image(bytes(c))) for c in pdf["content"]],
+                    "phash": [dhash64(_png_decode_minimal(bytes(c))) for c in pdf["content"]],
                 }
             )
 
@@ -750,7 +738,7 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pigeonhole recall guarantee: ≤6 differing bits leave ≥2 of 8 bands
     identical, so every true near-dup pair is a candidate.
 
-    Hash-checked at the driver since r10 (see IMAGE_PHASH_SQL below): the
+    Hash-checked at the driver (see IMAGE_PHASH_SQL below): the
     decode→dHash stage is not SQL-expressible, but its output is a pure
     function of media_id, so the oracle joins the committed pure-Python
     hash sidecar with the NAIVE all-pairs Hamming form — certifying the
@@ -802,7 +790,7 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer rounding of comp_len/n_bytes, clamped at 1.0 — pure int64
 # arithmetic both engines execute identically (comp_len ≤ ~10^8, so the
 # product is < 10^17, well inside int64), replacing the double-avg whose
-# partition-order-dependent sum could not be oracled (r13 graduation).
+# partition-order-dependent sum could not be oracled.
 # The DuckDB twin is _ENT_PPB_SQL below (// is DuckDB's integer divide,
 # `div` Spark's — both floor on the nonnegative domain used here).
 _ENT_PPB = (
@@ -826,8 +814,8 @@ def media_summary(features: DataFrame) -> DataFrame:
     per-item ratio is quantized to an exact ppb INTEGER (``_ENT_PPB``),
     summed as exact decimal (order-independent), portably converted to
     double and divided — so the value is bit-identical in any
-    partitioning AND replayable by the DuckDB oracle (the r13
-    hash-graduation of media_pipeline_profile rests on this)."""
+    partitioning AND replayable by the DuckDB oracle (the hash check of
+    media_pipeline_profile rests on this)."""
     ent_sum = F.sum(F.expr(_ENT_PPB).cast("decimal(38,0)"))
     return features.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -856,13 +844,13 @@ def media_count_for(sf_dir: str) -> int:
 
 def media_feature_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-summary stage query (merged into ``media_pipeline_profile``
-    in r12 — kept as the twin-test surface): synthesize binary media,
+    — kept as the twin-test surface): synthesize binary media,
     Arrow-batched decode/feature-extract (mapInPandas), typed metadata
     aggregation. Deterministic output; the VALUES are certified by the
     pure-Python recomputation twin in tests/test_media_twin.py and, via
     the merged registration, by the sidecar oracle. Media is synthesized
     executor-side, with the item count scaled to ``sf_dir``'s scale factor
-    (96 at sf0.001). Since round 6 every payload is real decodable media,
+    (96 at sf0.001). Every payload is real decodable media,
     so this runs the REAL decode kernels (PNG/WAV/AVI → pixels/samples →
     moment+histogram features), not the sha256 stand-in."""
     media = synthetic_media(spark, n=media_count_for(sf_dir))
@@ -871,7 +859,7 @@ def media_feature_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def media_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize + frame-sample stage query (merged into
-    ``media_pipeline_profile`` in r12 — kept as the twin-test surface):
+    ``media_pipeline_profile`` — kept as the twin-test surface):
     per-stage row/byte profile over the synthesized media table.
     Determinism and the cardinality law (frames = duration//step + 1)
     are pinned in tests. Item count scales with ``sf_dir``'s scale
@@ -884,16 +872,16 @@ def media_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization you'd do before fanning a decoded media scan out to
     multiple extractors on a cluster."""
     media = synthetic_media(spark, n=media_count_for(sf_dir)).persist()
-    # real sampler: the synthetic table's video rows are genuine MPNG AVIs
-    # since round 5, so the gated pipeline exercises the actual container
+    # real sampler: the synthetic table's video rows are genuine MPNG AVIs,
+    # so the gated pipeline exercises the actual container
     # parse + frame extraction, not the sha256 stand-in
     frames = sample_frames(media, fake=False).select(
         F.lit("frames").alias("stage"),
         F.col("media_id"),
         F.length("frame").alias("n_bytes"),
     )
-    # real resize kernel (round 6): the table's image rows are genuine
-    # PNGs now, so decode → nearest-neighbor resample → re-encode runs
+    # real resize kernel: the table's image rows are genuine PNGs, so
+    # decode → nearest-neighbor resample → re-encode runs
     resized = resize_images(media, fake=False).select(
         F.lit("resize").alias("stage"),
         F.col("media_id"),
@@ -913,7 +901,7 @@ def media_frame_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def media_pipeline_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract entry: the FULL multimodal chain in one profile —
-    r12 consolidation of the former ``media_feature_summary`` +
+    the consolidation of the former ``media_feature_summary`` +
     ``media_frame_pipeline`` registrations (both rows-only, same decode
     path; every operator shape of both is preserved): synthesize binary
     media once, then (a) Arrow-batched decode/feature-extract
@@ -921,7 +909,7 @@ def media_pipeline_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages, with entropy/uniqueness columns), and (b) the frame-sample +
     resize stages' row/byte profile (``frames``/``resize`` stages —
     cardinality law frames = duration//step + 1). HASH-CHECKED at the
-    driver since r13 (MEDIA_PIPELINE_SQL below): the decode kernels are
+    driver (MEDIA_PIPELINE_SQL below): the decode kernels are
     not SQL-expressible, but every aggregated number is a pure function
     of media_id and lives in the committed stage-discriminated sidecar
     (fixtures/media_pipeline.parquet, tools/gen_media_sidecars.py); the
@@ -979,7 +967,7 @@ QUERIES = {
     "video_scene_changes": video_scene_changes,
 }
 
-# image_phash_neardup graduates from rows-only to hash-checked (r10): the
+# image_phash_neardup is hash-checked, not rows-only: the
 # PNG-decode→dHash stage itself is not SQL-expressible, but its OUTPUT is a
 # deterministic pure function of media_id (payloads derive from
 # (seed, media_id) only, and tables at different SFs are row-subsets), so
@@ -1018,8 +1006,8 @@ WHERE bit_count(xor(a.phash, b.phash)) <= {PHASH_HAMMING_MAX}
 ORDER BY id_a, id_b
 """
 
-# audio_energy_segments / video_scene_changes graduate from rows-only to
-# hash-checked (r11), the pattern image_phash_neardup proved in r10: the
+# audio_energy_segments / video_scene_changes are hash-checked, not
+# rows-only, the pattern image_phash_neardup proved: the
 # WAV/AVI decode stage is not SQL-expressible, but its OUTPUT (per-frame
 # int64 energies; per-boundary int64 abs-diff sums) is a pure function of
 # media_id, so those integers live in committed parquet sidecars generated
@@ -1136,8 +1124,8 @@ FROM tot t LEFT JOIN cuts c USING (media_id)
 ORDER BY media_id
 """
 
-# media_pipeline_profile graduates from rows-only to hash-checked (r13),
-# completing the decode-sidecar program (phash r10, audio/video r11): the
+# media_pipeline_profile is hash-checked, not rows-only, completing the
+# decode-sidecar program (phash, audio/video): the
 # decode kernels are not SQL-expressible, but every number the profile
 # aggregates — payload/compressed lengths, sha256, per-sampled-frame byte
 # sizes, resized-PNG sizes — is a pure function of media_id, so those live
@@ -1237,10 +1225,10 @@ def synthesize_media_item(i: int, seed: int = 42) -> dict:
     test-side recomputation twins, so any divergence between what Spark
     materializes and what the twins expect fails loudly.
 
-    Every payload is REAL decodable media since round 6: PNG images (with
+    Every payload is REAL decodable media: PNG images (with
     planted perceptual near-dup pairs), 16-bit PCM WAV audio (alternating
     exactly-periodic quantized tone / noise, for the compressibility
-    spread), and MPNG AVI video (round 5)."""
+    spread), and MPNG AVI video."""
     from amazon_climate_data_etl_spark.sources.avi_min import write_avi
 
     kind = _MEDIA_KINDS[i % 3]

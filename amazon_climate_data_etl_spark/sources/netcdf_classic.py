@@ -4,8 +4,8 @@ The classic NetCDF binary format is small and publicly specified (the
 NetCDF "classic format spec": magic ``CDF\\x01``/``CDF\\x02``, a header of
 dimension/attribute/variable lists, then big-endian array data at recorded
 offsets). A dependency-free decoder for it lets the REAL ingest path
-(`sources/ingest.py::_decode_netcdf_batch`) run and be tested in containers
-without xarray/netCDF4 — the same pattern as the minimal PNG decoder in
+(`sources/ingest.py::decode_classic_long`) run and be tested without
+xarray/netCDF4 — the same pattern as the minimal PNG decoder in
 ``sources/multimodal.py``. NetCDF-4 files are HDF5 containers;
 ``read_classic`` dispatches their magic to the minimal HDF5 decoder
 (``hdf5_min.py`` / ``netcdf4_min.py``), which returns the same NcFile

@@ -4,8 +4,8 @@ The shapefile main-file format (ESRI whitepaper: 100-byte header, records
 of big-endian headers + little-endian shape payloads) and the dBase III
 attribute format (.dbf: fixed-width ASCII records) are public and simple.
 A dependency-free reader lets the REAL shapefile→centroid ingest
-(`sources/ingest.py::municipalities_from_shapefile`) run and be tested in
-containers without geopandas — the same pattern as ``netcdf_classic.py``.
+(`sources/ingest.py::municipalities_from_shapefile`) run and be tested
+without geopandas — the same pattern as ``netcdf_classic.py``.
 
 Supported surface (what the municipality-dimension ingest needs):
 - shape types 1 (Point) and 5 (Polygon, any number of rings);
@@ -15,8 +15,8 @@ Supported surface (what the municipality-dimension ingest needs):
 
 CRS handling: geographic (degree) CRSs pass through untouched; projected
 CRSs are inverted by ``crs_min.py`` (Transverse Mercator / Polyconic —
-what Brazilian municipal shapefiles ship); anything else requires the
-geopandas path.
+what Brazilian municipal shapefiles ship); anything else fails loudly,
+naming the projection.
 """
 
 from __future__ import annotations
@@ -66,8 +66,8 @@ def read_shp(content: bytes) -> list[Shape]:
             shapes.append(Shape(SHP_POLYGON, pts.copy(), tuple(parts)))
         else:
             raise NotImplementedError(
-                f"shape type {stype} not supported by the minimal reader "
-                "(Point and Polygon only); use the geopandas path"
+                f"shape type {stype} is not supported; the reader decodes "
+                "Point (1) and Polygon (5) shapes only"
             )
         pos = rec_end
     return shapes

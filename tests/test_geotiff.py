@@ -37,7 +37,7 @@ from amazon_climate_data_etl_spark.sources.geotiff_min import (
         {"compress": "packbits"},
         {"compress": "packbits", "tile": (4, 4)},
         {"pixel_is_point": True},
-        # BigTIFF (round 7): magic-43 structure, same pixel payloads
+        # BigTIFF: magic-43 structure, same pixel payloads
         {"bigtiff": True},
         {"bigtiff": True, "compress": True, "rows_per_strip": 2},
         {"bigtiff": True, "tile": (4, 4), "compress": True},
@@ -199,12 +199,20 @@ def test_ingest_geotiff_pipeline_e2e(spark, tmp_path):
     pipeline (grid-snap enrich + daily agg), values compared against a
     direct in-memory recomputation from the same rasters."""
     from amazon_climate_data_etl_spark.sources.ingest import (
+        _geotiff_date,
         decode_geotiff_long,
         ingest_geotiff_to_parquet,
     )
 
     rng = np.random.default_rng(11)
     days = [datetime.date(2001, 1, d) for d in (1, 2, 3)]
+    # both file-name date forms: YYYY-MM-DD and YYYYMMDD
+    names = {
+        day: f"tmax_{day.isoformat() if i else day.strftime('%Y%m%d')}.tif"
+        for i, day in enumerate(days)
+    }
+    with pytest.raises(ValueError, match="carries no"):
+        _geotiff_date("/data/tmax.tif")
     rasters = {}
     d = tmp_path / "tifs"
     d.mkdir()
@@ -212,7 +220,7 @@ def test_ingest_geotiff_pipeline_e2e(spark, tmp_path):
         a = rng.normal(28.0, 3.0, (6, 8)).astype("f4")
         a[0, 0] = -999.0  # nodata cell must drop out as NaN
         rasters[day] = a
-        (d / f"tmax_{day.isoformat()}.tif").write_bytes(
+        (d / names[day]).write_bytes(
             write_geotiff(
                 a, lat0=-2.0, lon0=-62.0, scale=0.25, nodata=-999.0,
                 compress=True, rows_per_strip=2,
@@ -229,9 +237,7 @@ def test_ingest_geotiff_pipeline_e2e(spark, tmp_path):
 
     want = pd.concat(
         [
-            decode_geotiff_long(
-                (d / f"tmax_{day.isoformat()}.tif").read_bytes(), "tmax", day, bounds
-            )
+            decode_geotiff_long((d / names[day]).read_bytes(), "tmax", day, bounds)
             for day in days
         ]
     ).sort_values(["date", "lat", "lon"])

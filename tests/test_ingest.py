@@ -1,23 +1,21 @@
-"""Ingest boundary: the mapInPandas grid-relationalization plumbing (S1),
-the dependency-free NetCDF decode path (renamed dims, descending latitude,
-bbox clip, packing, record layouts) end to end through Spark, plus the
-long→wide pivot (J2)."""
+"""Ingest boundary: the one grid writer (binaryFile → mapInPandas →
+year-partitioned parquet, S1), the dependency-free NetCDF decode path
+(renamed dims, descending latitude, bbox clip, packing, record layouts)
+end to end through Spark, plus the long→wide pivot (J2)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from datetime import date
+from datetime import date, timedelta
 
 import pandas as pd
 import pytest
 from conftest import jobs_started
 from pyspark.errors import PySparkException
-from pyspark.sql import functions as F
 
-from amazon_climate_data_etl_spark.session import ship_package_to_workers
 from amazon_climate_data_etl_spark.sources.ingest import (
     GRID_DAILY_SCHEMA,
     GRID_VARIABLES,
+    _ingest_files,
     pivot_grid_wide,
     probe_coord_dims,
     probe_time_dim,
@@ -25,33 +23,42 @@ from amazon_climate_data_etl_spark.sources.ingest import (
 
 
 def test_binaryfile_mapinpandas_plumbing(spark, tmp_path):
+    """``_ingest_files``, the writer every grid ingest goes through, on a
+    fake decode: one decode per binaryFile row, the grid schema plus the
+    year partition column, and with ``shuffle=True`` one parquet file per
+    year although every task holds rows of both years."""
+
     # nested so cloudpickle ships it by value (test modules aren't
     # importable from Python workers)
-    def _fake_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        """Stands in for _decode_netcdf_batch: same batch shape,
-        deterministic values derived from file size instead of NetCDF."""
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                n = int(row["length"])
-                yield pd.DataFrame(
-                    {
-                        "date": [date(2001, 1, 1 + i % 28) for i in range(n)],
-                        "lat": [-10.0 + 0.25 * (i % 4) for i in range(n)],
-                        "lon": [-65.0 + 0.25 * (i % 4) for i in range(n)],
-                        "var": ["Tmax"] * n,
-                        "value": [28.0 + (i % 10) for i in range(n)],
-                    }
-                )
+    def fake_decode(row) -> pd.DataFrame:
+        """Deterministic rows derived from the file size instead of
+        NetCDF bytes; the days run across a year end."""
+        n = int(row.length)
+        return pd.DataFrame(
+            {
+                "date": [date(2001, 12, 28) + timedelta(days=i) for i in range(n)],
+                "lat": [-10.0 + 0.25 * (i % 4) for i in range(n)],
+                "lon": [-65.0 + 0.25 * (i % 4) for i in range(n)],
+                "var": ["Tmax"] * n,
+                "value": [28.0 + (i % 10) for i in range(n)],
+            }
+        )
 
+    src = tmp_path / "in"
+    src.mkdir()
     for i in range(3):
-        (tmp_path / f"f{i}.nc").write_bytes(b"x" * (8 + i))
-    ship_package_to_workers(spark)
-    raw = spark.read.format("binaryFile").load(str(tmp_path / "*.nc"))
-    grid = raw.mapInPandas(_fake_decode, schema=GRID_DAILY_SCHEMA)
-    out = grid.groupBy("var").agg(F.count(F.lit(1)).alias("n")).collect()
-    assert out[0]["var"] == "Tmax"
-    assert out[0]["n"] == 8 + 9 + 10
-    assert [f.name for f in grid.schema.fields] == ["date", "lat", "lon", "var", "value"]
+        (src / f"f{i}.nc").write_bytes(b"x" * (8 + i))
+    raw = spark.read.format("binaryFile").load(str(src / "*.nc"))
+    out = tmp_path / "grid"
+    _ingest_files(spark, raw, fake_decode, str(out), shuffle=True)
+    grid = spark.read.parquet(str(out))
+    assert [f.name for f in grid.schema.fields] == [
+        "date", "lat", "lon", "var", "value", "year",
+    ]
+    assert grid.count() == 8 + 9 + 10
+    files = {d.name: list(d.glob("*.parquet")) for d in out.glob("year=*")}
+    assert sorted(files) == ["year=2001", "year=2002"]
+    assert all(len(f) == 1 for f in files.values()), files
 
 
 def test_probe_coord_dims_variants():
@@ -395,7 +402,7 @@ def test_classic_netcdf_roundtrip_property():
 
 def test_nonstandard_cf_calendar_rejected(tmp_path):
     """noleap/360_day calendars decode to WRONG proleptic-Gregorian dates
-    if treated naively — the minimal path must fail loudly (ADVICE r4)."""
+    if treated naively — the minimal path must fail loudly."""
     import numpy as np
     import pytest
 

@@ -1,6 +1,6 @@
 """Multimodal plumbing: binary columns through Arrow-batched mapInPandas,
 plus the REAL decode kernels (WAV via stdlib wave; PNG via the minimal
-zlib decoder, or PIL when importable) on valid in-test-generated media."""
+zlib decoder) on valid in-test-generated media."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from amazon_climate_data_etl_spark.sources.multimodal import (
     FEATURE_DIM,
     MEDIA_SCHEMA,
-    _decode_image,
     _decode_real,
     _decode_wav,
     _png_decode_minimal,
@@ -53,6 +52,14 @@ def test_png_roundtrip_all_channel_counts():
         decoded = _png_decode_minimal(_make_png(px))
         assert decoded.shape == (5, 7, c)
         assert (decoded == px).all()
+    # a JPEG image, or the same JPEG as an MJPG video frame, is refused as
+    # not PNG rather than misread
+    from amazon_climate_data_etl_spark.sources.avi_min import write_avi
+
+    jpeg = b"\xff\xd8\xff\xe0\x00\x10JFIF\x00" + bytes(32) + b"\xff\xd9"
+    for payload, kind in ((jpeg, "image"), (write_avi([jpeg], 7, 5, codec="MJPG"), "video")):
+        with pytest.raises(ValueError, match="not a PNG payload"):
+            _decode_real(payload, kind)
 
 
 def test_png_decode_all_filter_types():
@@ -98,7 +105,7 @@ def test_png_decode_all_filter_types():
         b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
     )
-    assert (_decode_image(png) == px).all()
+    assert (_png_decode_minimal(png) == px).all()
 
 
 def test_wav_decode_real():
@@ -238,7 +245,7 @@ def test_frame_timestamps_and_determinism(spark):
         assert len(r["frame"]) == 32  # sha256 digest per sampled frame
 
 
-# --- AVI container / real video path (round 5) -----------------------------
+# --- AVI container / real video path ---------------------------------------
 
 
 def test_avi_roundtrip_and_frame_timing():
@@ -260,7 +267,7 @@ def test_avi_roundtrip_and_frame_timing():
 
 def test_decode_real_video_pixels():
     """REAL video decode in-container: AVI parse → MPNG frame → minimal
-    PNG decoder → pixel features (closes the last r4 'missing' item)."""
+    PNG decoder → pixel features."""
     from amazon_climate_data_etl_spark.sources.avi_min import write_avi
 
     rng = np.random.default_rng(4)

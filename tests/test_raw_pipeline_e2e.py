@@ -242,41 +242,62 @@ def _plan_ancestors(plan: str):
     return out
 
 
+def _plans_at_both_partition_settings(spark, df) -> list[str]:
+    """explain("simple") of ``df`` at the suite's shuffle partitions and
+    at a default session's: ``get_spark`` without ``shuffle_partitions``
+    sets them to the parallelism. Each plan comes from a fresh Dataset,
+    so it is planned under its own setting."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    plans = []
+    try:
+        for n in (old, str(spark.sparkContext.defaultParallelism)):
+            spark.conf.set(key, n)
+            plan = I.plan_string(df.select("*"), "simple")
+            assert re.search(rf"Exchange hashpartitioning\(.*, {n}\)", plan), plan
+            plans.append(plan)
+    finally:
+        spark.conf.set(key, old)
+    return plans
+
+
 def test_municipality_cell_cut_reaches_every_variable_scan(spark, tmp_path):
     """``daily_enriched``'s correlated EXISTS must land on each
     per-variable parquet scan as a broadcast LeftSemi join, below the
     pivot's first shuffle, so the pivot moves municipality cells only.
     An uncorrelated EXISTS (inner and outer column names colliding) or a
-    left_semi join above the pivot both fail here."""
+    left_semi join above the pivot both fail here. Checked at the suite's
+    shuffle partitions and at a default session's."""
     _, annual = _raw_annual(spark, tmp_path, "classic")
-    plan = I.plan_string(annual, "simple")
-    scans = [
-        (node, chain)
-        for node, chain in _plan_ancestors(plan)
-        if "FileScan parquet" in node  # the dimension is a local table
-    ]
-    assert len(scans) == len(VARS), plan
-    for node, chain in scans:
-        semi = next(
-            (k for k, a in enumerate(chain) if "BroadcastHashJoin" in a and "LeftSemi" in a),
-            None,
-        )
-        shuffle = next(
-            (k for k, a in enumerate(chain) if re.search(r"\bExchange hashpartitioning", a)),
-            None,
-        )
-        assert semi is not None, node
-        assert shuffle is not None and semi < shuffle, node
+    for plan in _plans_at_both_partition_settings(spark, annual):
+        scans = [
+            (node, chain)
+            for node, chain in _plan_ancestors(plan)
+            if "FileScan parquet" in node  # the dimension is a local table
+        ]
+        assert len(scans) == len(VARS), plan
+        for node, chain in scans:
+            semi = next(
+                (k for k, a in enumerate(chain) if "BroadcastHashJoin" in a and "LeftSemi" in a),
+                None,
+            )
+            shuffle = next(
+                (k for k, a in enumerate(chain) if re.search(r"\bExchange hashpartitioning", a)),
+                None,
+            )
+            assert semi is not None, node
+            assert shuffle is not None and semi < shuffle, node
 
 
 def test_pivot_is_one_aggregate_pair(spark, tmp_path):
     """Between the per-variable scans' Union and the dimension join the
     long→wide pivot is one hash Aggregate pair (partial + final) around
-    one exchange, not PivotFirst's two Aggregates."""
+    one exchange, not PivotFirst's two Aggregates — at the suite's shuffle
+    partitions and at a default session's."""
     _, annual = _raw_annual(spark, tmp_path, "classic")
-    plan = I.plan_string(annual, "simple")
-    union = next(chain for node, chain in _plan_ancestors(plan) if "Union" in node)
-    join = next(k for k, a in enumerate(union) if "BroadcastHashJoin" in a and "Inner" in a)
-    between = union[:join]
-    assert sum("HashAggregate" in a for a in between) == 2, plan
-    assert sum(bool(re.search(r"\bExchange hashpartitioning", a)) for a in between) == 1, plan
+    for plan in _plans_at_both_partition_settings(spark, annual):
+        union = next(chain for node, chain in _plan_ancestors(plan) if "Union" in node)
+        join = next(k for k, a in enumerate(union) if "BroadcastHashJoin" in a and "Inner" in a)
+        between = union[:join]
+        assert sum("HashAggregate" in a for a in between) == 2, plan
+        assert sum(bool(re.search(r"\bExchange hashpartitioning", a)) for a in between) == 1, plan

@@ -114,7 +114,7 @@ def _write_fixture(tmp_path, with_state_col=True, prj=None):
 
 
 def test_municipalities_from_shapefile_real_path(spark, tmp_path):
-    """REAL S2 ingest with no geopandas: .shp+.dbf decode, state filter,
+    """REAL S2 ingest, dependency-free: .shp+.dbf decode, state filter,
     shoelace centroids → broadcast-ready dimension."""
     path = _write_fixture(tmp_path, prj='GEOGCS["SIRGAS 2000"]')
     dim = municipalities_from_shapefile(spark, path).orderBy("CD_MUN")
@@ -137,9 +137,9 @@ def test_municipalities_ibge_prefix_fallback(spark, tmp_path):
     assert [r["UF"] for r in rows] == ["RO", "AM"]  # 11->RO, 13->AM; 35 unmapped
 
 
-def test_unsupported_projection_requires_geopandas(spark, tmp_path):
-    """Projections outside crs_min's inventory (here Lambert conic) still
-    gate loudly on the geopandas path."""
+def test_unsupported_projection_fails_loudly(spark, tmp_path):
+    """Projections outside crs_min's inventory (here Lambert conic) fail
+    the ingest loudly, naming the projection."""
     path = _write_fixture(
         tmp_path,
         prj='PROJCS["Custom LCC",GEOGCS["SIRGAS 2000",DATUM["D",'
@@ -147,7 +147,7 @@ def test_unsupported_projection_requires_geopandas(spark, tmp_path):
             'PROJECTION["Lambert_Conformal_Conic_2SP"],'
             'PARAMETER["central_meridian",-54],UNIT["metre",1]]',
     )
-    with pytest.raises(NotImplementedError, match="geopandas"):
+    with pytest.raises(NotImplementedError, match="Lambert_Conformal_Conic_2SP"):
         municipalities_from_shapefile(spark, path)
 
 
@@ -208,7 +208,7 @@ def test_shapefile_roundtrip_property():
 
 def test_dbf_integer_field_with_decimal_point():
     """Real-world DBFs store '123.0' / '1.' in DEC=0 numeric columns; the
-    reader must parse them as numbers, not abort the ingest (ADVICE r4)."""
+    reader must parse them as numbers, not abort the ingest."""
     df = pd.DataFrame({"CD_MUN": ["1100015"], "POP": [25000]})
     raw = write_dbf(df)
     # patch the 18-wide DEC=0 numeric cell from '             25000'
@@ -226,7 +226,7 @@ def test_dbf_integer_field_with_decimal_point():
 def test_null_shape_centroid_and_ingest_filtering(spark, tmp_path):
     """Null shapes (type 0) have no geometry: polygon_centroid refuses
     them, and the municipalities ingest drops them together with their
-    attribute rows instead of emitting NaN centroids (ADVICE r4)."""
+    attribute rows instead of emitting NaN centroids."""
     with pytest.raises(ValueError, match="null/empty"):
         polygon_centroid(Shape(0, np.empty((0, 2))))
 

@@ -5,9 +5,9 @@ separators, sparse (missing-chunk) reads, fail-loud gates on the
 unsupported corners, and a hypothesis fuzz roundtrip. Ingest-level: the
 chunk-parallel Spark boundary against a store built by OUR writer, value-
 compared cell-by-cell to the source cube, plus a cross-format twin — the
-SAME cube ingested via the classic-NetCDF boundary must produce the
-IDENTICAL relational frame (two independent decode stacks agreeing is the
-strongest in-container certification either has)."""
+SAME cube ingested via the classic-NetCDF and the GeoTIFF boundaries must
+produce the IDENTICAL relational frame (independent decode stacks
+agreeing is the strongest certification any of them has)."""
 
 from __future__ import annotations
 
@@ -270,13 +270,15 @@ def test_group_roundtrip_with_attrs(tmp_path):
 
 
 def _climate_store(path, nt=6, nlat=5, nlon=4, separator=".",
-                   calendar="standard", compressor="zlib"):
+                   calendar="standard", compressor="zlib",
+                   start=dt.date(2001, 2, 27), lon_max=-60.0):
     """A small but structurally real climate store: descending latitudes
-    (north-up), CF day offsets, chunked so the variable spans MULTIPLE
-    chunk objects along every axis (incl. partial edge chunks)."""
+    (north-up), CF day offsets from ``start``, chunked so the variable
+    spans MULTIPLE chunk objects along every axis (incl. partial edge
+    chunks)."""
     rng = np.random.default_rng(11)
     lat = np.linspace(2.0, -6.0, nlat)  # descending, crosses the equator
-    lon = np.linspace(-73.0, -60.0, nlon)
+    lon = np.linspace(-73.0, lon_max, nlon)
     tvals = np.arange(nt, dtype="<f8")
     cube = np.round(rng.uniform(15, 35, (nt, nlat, nlon)), 2)
     write_zarr_group(
@@ -285,7 +287,7 @@ def _climate_store(path, nt=6, nlat=5, nlon=4, separator=".",
             "time": (
                 tvals,
                 {
-                    "units": "days since 2001-02-27",
+                    "units": f"days since {start.isoformat()}",
                     "calendar": calendar,
                     "_ARRAY_DIMENSIONS": ["time"],
                 },
@@ -301,7 +303,7 @@ def _climate_store(path, nt=6, nlat=5, nlon=4, separator=".",
         separator=separator,
         compressor=compressor,
     )
-    dates = [dt.date(2001, 2, 27) + dt.timedelta(days=int(d)) for d in tvals]
+    dates = [start + dt.timedelta(days=int(d)) for d in tvals]
     return cube, dates, lat, lon
 
 
@@ -394,10 +396,15 @@ def test_ingest_zarr_calendar_gate(spark, tmp_path):
 
 
 def test_ingest_zarr_matches_netcdf_twin(spark, tmp_path):
-    """Cross-format certification: the SAME cube through the Zarr boundary
-    and the classic-NetCDF boundary must produce identical relational
-    frames — two independent decode stacks agreeing end-to-end."""
+    """Cross-format certification: the SAME cube through the Zarr, the
+    classic-NetCDF and the GeoTIFF (one raster per day) boundaries must
+    produce identical relational frames — three independent decode stacks
+    agreeing end-to-end. The days run across a year end, and the two
+    ingests that run one task per chunk or per day still write one
+    parquet file per year."""
+    from amazon_climate_data_etl_spark.sources.geotiff_min import write_geotiff
     from amazon_climate_data_etl_spark.sources.ingest import (
+        ingest_geotiff_to_parquet,
         ingest_netcdf_to_parquet,
         ingest_zarr_to_parquet,
     )
@@ -408,14 +415,16 @@ def test_ingest_zarr_matches_netcdf_twin(spark, tmp_path):
     )
 
     store = tmp_path / "store.zarr"
-    cube, dates, lat, lon = _climate_store(store)
+    # lon step 2° like the lat step, so the cube is also a square-pixel raster
+    start = dt.date(2001, 12, 29)
+    cube, dates, lat, lon = _climate_store(store, start=start, lon_max=-67.0)
     nc = NcFile(
         dims={"time": len(dates), "lat": len(lat), "lon": len(lon)},
         variables={
             "time": NcVar(
                 "time", ("time",),
                 np.arange(len(dates), dtype="<f8"),
-                {"units": "days since 2001-02-27", "calendar": "standard"},
+                {"units": f"days since {start.isoformat()}", "calendar": "standard"},
             ),
             "lat": NcVar("lat", ("lat",), lat, {}),
             "lon": NcVar("lon", ("lon",), lon, {}),
@@ -424,10 +433,24 @@ def test_ingest_zarr_matches_netcdf_twin(spark, tmp_path):
     )
     ncp = tmp_path / "cube.nc"
     ncp.write_bytes(write_classic(nc))
-    out_z, out_n = str(tmp_path / "gz"), str(tmp_path / "gn")
-    ingest_zarr_to_parquet(spark, str(store), out_z, "tmax")
-    ingest_netcdf_to_parquet(spark, str(ncp), out_n, "tmax")
-    assert _ingested_rows(spark, out_z) == _ingested_rows(spark, out_n)
+    tifs = tmp_path / "tifs"
+    tifs.mkdir()
+    for day, grid in zip(dates, cube):
+        (tifs / f"tmax_{day.isoformat()}.tif").write_bytes(
+            write_geotiff(grid, lat0=lat[0], lon0=lon[0], scale=2.0)
+        )
+    out_z, out_n, out_g = (tmp_path / "gz"), (tmp_path / "gn"), (tmp_path / "gg")
+    ingest_zarr_to_parquet(spark, str(store), str(out_z), "tmax")
+    ingest_netcdf_to_parquet(spark, str(ncp), str(out_n), "tmax")
+    ingest_geotiff_to_parquet(spark, str(tifs / "*.tif"), str(out_g), "tmax")
+    zarr_rows = _ingested_rows(spark, str(out_z))
+    assert len(zarr_rows) == cube.size
+    assert zarr_rows == _ingested_rows(spark, str(out_n))
+    assert zarr_rows == _ingested_rows(spark, str(out_g))
+    for out in (out_z, out_g):
+        files = {d.name: list(d.glob("*.parquet")) for d in out.glob("year=*")}
+        assert sorted(files) == ["year=2001", "year=2002"]
+        assert all(len(f) == 1 for f in files.values()), files
 
 
 # --- Zarr v3 ----------------------------------------------------------------
