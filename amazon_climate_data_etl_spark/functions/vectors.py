@@ -38,17 +38,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     # fold; fix pair-stream cost with parallelism, not expression shape.
 
 
-# ANSI-SQL (DuckDB) twins -------------------------------------------------
-
-
-def dot_product_sql(a: str, b: str) -> str:
-    return f"list_dot_product({a}, {b})"
-
-
-def cosine_similarity_sql(a: str, b: str) -> str:
-    return f"list_cosine_similarity({a}, {b})"
-
-
 def sign_bucket(a: Column | str, dims: tuple[int, ...] = (1, 2, 3, 4)) -> Column:
     """Deterministic LSH-style bucket id from the signs of selected dims.
 

@@ -177,10 +177,6 @@ def dec(col: Column, precision: int = 18, scale: int = 4) -> Column:
     return col.cast(f"decimal({precision},{scale})")
 
 
-def dec_sql(expr: str, precision: int = 18, scale: int = 4) -> str:
-    return f"CAST(({expr}) AS DECIMAL({precision},{scale}))"
-
-
 def stable_round(col: Column, scale: int = 2) -> Column:
     """Engine-portable round of a double: floor(x·10^scale + 0.5) / 10^scale.
 

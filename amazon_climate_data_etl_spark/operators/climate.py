@@ -39,7 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from amazon_climate_data_etl_spark.catalog import load_table, rebalance_for_compute
-from amazon_climate_data_etl_spark.functions.climate import grid_snap, vpd_column
+from amazon_climate_data_etl_spark.functions.climate import (
+    grid_snap,
+    grid_snap_sql,
+    vpd_column,
+    vpd_sql,
+)
 from amazon_climate_data_etl_spark.operators._portable import stable_round
 
 MEASURES_SUM = ("pr", "ETo", "Rs")
@@ -359,25 +364,18 @@ def climate_spot_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- oracle SQL ------------------------------------------------------------
 
-_VPD_SQL = (
-    "(0.6108 * exp(17.27 * ((Tmax + Tmin) / 2) / (((Tmax + Tmin) / 2) + 237.3))"
-    " * (1 - RH / 100))"
-)
-
-_SNAP = "(round(({c}) * 4.0, 0) / 4.0)"
-
 _DAILY_CTE = f"""
 WITH grid_daily AS ({GRID_DAILY_SQL}),
 municipalities AS ({MUNICIPALITIES_SQL}),
 dim AS (
   SELECT CD_MUN, NM_MUN, UF,
-         {_SNAP.format(c='lat')} AS grid_lat,
-         {_SNAP.format(c='lon')} AS grid_lon
+         {grid_snap_sql('lat')} AS grid_lat,
+         {grid_snap_sql('lon')} AS grid_lon
   FROM municipalities
 ),
 daily AS (
   SELECT d.*, g.date, g.Tmax, g.Tmin, g.pr, g.RH, g.ETo, g.u2, g.Rs,
-         {_VPD_SQL} AS VPD,
+         {vpd_sql('Tmax', 'Tmin', 'RH')} AS VPD,
          CAST(year(g.date) AS INT) AS year,
          CAST(month(g.date) AS INT) AS month
   FROM grid_daily g

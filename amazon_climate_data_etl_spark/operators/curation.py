@@ -1266,14 +1266,21 @@ def merge_upsert(target: DataFrame, source: DataFrame) -> DataFrame:
     uses the byte-exact hash so the wide text columns never feed a
     comparison wider than 32 chars. This is exactly the shuffle a
     lakehouse MERGE pays before its file rewrite."""
-    t = target.select(
-        F.col("doc_id").alias("t_id"), F.md5("text").alias("t_fp")
+    return _merge_accounting(
+        target.select(F.col("doc_id").alias("t_id"), F.md5("text").alias("t_fp")),
+        source.select(
+            F.col("doc_id").alias("s_id"),
+            F.md5("new_text").alias("s_fp"),
+            "is_delete",
+        ),
     )
-    s = source.select(
-        F.col("doc_id").alias("s_id"),
-        F.md5("new_text").alias("s_fp"),
-        "is_delete",
-    )
+
+
+def _merge_accounting(t: DataFrame, s: DataFrame) -> DataFrame:
+    """The MERGE action CASE over fingerprint frames ``t (t_id, t_fp)``
+    and ``s (s_id, s_fp, is_delete)``: one full-outer join on the key,
+    one accounting row ``(doc_id, action, result_fp)`` per key of
+    t ∪ s. Shared by ``merge_upsert`` and ``corpus_cdc_profile``."""
     j = t.join(s, t["t_id"] == s["s_id"], "full_outer")
     matched = F.col("t_id").isNotNull() & F.col("s_id").isNotNull()
     action = (
@@ -1379,22 +1386,27 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("text"))
         ).alias("fp_v2"),
     )
+    return _snapshot_changes(v1, v2).orderBy("doc_id")
+
+
+def _snapshot_changes(v1: DataFrame, v2: DataFrame) -> DataFrame:
+    """The snapshot-diff change CASE over fingerprint frames ``v1 (id1,
+    fp_v1)`` and ``v2 (id2, fp_v2)``: one full-outer join on the key,
+    delta rows only — ``(doc_id, change, fp_v1, fp_v2)`` for docs added,
+    removed or changed. Shared by ``corpus_snapshot_diff`` and
+    ``corpus_cdc_profile``."""
     j = v1.join(v2, v1["id1"] == v2["id2"], "full_outer")
     change = (
         F.when(F.col("id1").isNull(), F.lit("added"))
         .when(F.col("id2").isNull(), F.lit("removed"))
         .when(F.col("fp_v1") != F.col("fp_v2"), F.lit("changed"))
     )
-    return (
-        j.select(
-            F.coalesce("id1", "id2").alias("doc_id"),
-            change.alias("change"),
-            "fp_v1",
-            "fp_v2",
-        )
-        .filter(F.col("change").isNotNull())
-        .orderBy("doc_id")
-    )
+    return j.select(
+        F.coalesce("id1", "id2").alias("doc_id"),
+        change.alias("change"),
+        "fp_v1",
+        "fp_v2",
+    ).filter(F.col("change").isNotNull())
 
 
 SNAPSHOT_DIFF_SQL = """
@@ -1450,63 +1462,45 @@ def corpus_cdc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat(F.col("text"), F.lit(" [v2]"))).alias("fp_v2rev"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # --- merge frame: verbatim merge_upsert semantics over the shared
+    # --- merge frame: merge_upsert's accounting over the shared
     # fingerprint pass (value preservation vs the predecessor is pinned
     # row-for-row in test_sinks.py) ---
-    t = fps.filter(F.col("doc_id") % 7 != 6).select(
-        F.col("doc_id").alias("t_id"), F.col("fp").alias("t_fp")
-    )
-    s = fps.filter(F.col("doc_id") % 3 == 0).select(
-        F.col("doc_id").alias("s_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.col("fp_rev2"))
-        .otherwise(F.col("fp"))
-        .alias("s_fp"),
-        (F.col("doc_id") % 21 == 0).alias("is_delete"),
-    )
-    mj = t.join(s, t["t_id"] == s["s_id"], "full_outer")
-    matched = F.col("t_id").isNotNull() & F.col("s_id").isNotNull()
-    action = (
-        F.when(matched & F.col("is_delete"), F.lit("delete"))
-        .when(matched & (F.col("t_fp") != F.col("s_fp")), F.lit("update"))
-        .when(matched, F.lit("noop"))
-        .when(F.col("t_id").isNull() & ~F.col("is_delete"), F.lit("insert"))
-        .when(F.col("t_id").isNull(), F.lit("noop"))
-        .otherwise(F.lit("keep"))
-    )
-    dead = action.isin("delete") | (F.col("t_id").isNull() & F.col("is_delete"))
-    merge = mj.select(
+    merge = _merge_accounting(
+        fps.filter(F.col("doc_id") % 7 != 6).select(
+            F.col("doc_id").alias("t_id"), F.col("fp").alias("t_fp")
+        ),
+        fps.filter(F.col("doc_id") % 3 == 0).select(
+            F.col("doc_id").alias("s_id"),
+            F.when(F.col("doc_id") % 2 == 0, F.col("fp_rev2"))
+            .otherwise(F.col("fp"))
+            .alias("s_fp"),
+            (F.col("doc_id") % 21 == 0).alias("is_delete"),
+        ),
+    ).select(
         F.lit("merge").alias("frame"),
-        F.coalesce("t_id", "s_id").alias("doc_id"),
-        action.alias("verdict"),
-        F.when(~dead, F.coalesce("s_fp", "t_fp")).alias("fp_a"),
+        "doc_id",
+        F.col("action").alias("verdict"),
+        F.col("result_fp").alias("fp_a"),
         F.lit(None).cast("string").alias("fp_b"),
     )
 
-    # --- diff frame: verbatim corpus_snapshot_diff semantics ---
-    v1 = fps.filter(F.col("doc_id") % 11 != 3).select(
-        F.col("doc_id").alias("id1"), F.col("fp").alias("fp_v1")
-    )
-    v2 = fps.filter(F.col("doc_id") % 11 != 7).select(
-        F.col("doc_id").alias("id2"),
-        F.when(F.col("doc_id") % 13 == 0, F.col("fp_v2rev"))
-        .otherwise(F.col("fp"))
-        .alias("fp_v2"),
-    )
-    dj = v1.join(v2, v1["id1"] == v2["id2"], "full_outer")
-    change = (
-        F.when(F.col("id1").isNull(), F.lit("added"))
-        .when(F.col("id2").isNull(), F.lit("removed"))
-        .when(F.col("fp_v1") != F.col("fp_v2"), F.lit("changed"))
-    )
-    diff = (
-        dj.select(
-            F.lit("diff").alias("frame"),
-            F.coalesce("id1", "id2").alias("doc_id"),
-            change.alias("verdict"),
-            F.col("fp_v1").alias("fp_a"),
-            F.col("fp_v2").alias("fp_b"),
-        )
-        .filter(F.col("verdict").isNotNull())
+    # --- diff frame: corpus_snapshot_diff's changes ---
+    diff = _snapshot_changes(
+        fps.filter(F.col("doc_id") % 11 != 3).select(
+            F.col("doc_id").alias("id1"), F.col("fp").alias("fp_v1")
+        ),
+        fps.filter(F.col("doc_id") % 11 != 7).select(
+            F.col("doc_id").alias("id2"),
+            F.when(F.col("doc_id") % 13 == 0, F.col("fp_v2rev"))
+            .otherwise(F.col("fp"))
+            .alias("fp_v2"),
+        ),
+    ).select(
+        F.lit("diff").alias("frame"),
+        "doc_id",
+        F.col("change").alias("verdict"),
+        F.col("fp_v1").alias("fp_a"),
+        F.col("fp_v2").alias("fp_b"),
     )
     return merge.unionByName(diff).orderBy("frame", "doc_id")
 

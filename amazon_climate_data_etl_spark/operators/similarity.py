@@ -7,6 +7,15 @@
 - Sign-bucket LSH top-k: the scale path — candidate generation restricted
   to same-bucket vectors (axis-aligned random-hyperplane LSH), turning the
   cross join into a bucket equi-join.
+- IVF, PQ and IVF-PQ top-k: one encoder. A driver-held state (``_encoder``:
+  centroids, PQ codebook, probe vectors, probe cells, ADC table) built
+  from one collect of the corpus prefix, and one Arrow kernel
+  (``_encoder_stream``) that emits a union-typed candidate stream —
+  ``a`` IVF cell assignments, ``p`` unpruned ADC shortlists, ``q``
+  cell-pruned ADC shortlists — for whichever families the caller asks
+  for. Each search consumes its slice; PQ and IVF-PQ share one
+  shortlist + exact-rerank tail, and the recall panel
+  (``ann_recall_eval``) persists one stream carrying all three.
 
 Numeric portability: all folds run left-to-right in double (zip_with +
 aggregate on the Spark side, list_transform + list_sum on the DuckDB side),
@@ -17,6 +26,7 @@ accumulates in float32 and is deliberately NOT used.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,6 +45,7 @@ from amazon_climate_data_etl_spark.functions.vectors import (
     sign_bucket_sql,
 )
 from amazon_climate_data_etl_spark.operators._portable import stable_round
+from amazon_climate_data_etl_spark.session import ship_package_to_workers
 
 N_QUERIES = 5  # vec_id < 5 are the probe vectors
 TOP_K = 3
@@ -120,6 +131,12 @@ def _normalized(e: DataFrame, keep_raw: bool = False) -> DataFrame:
     return pre.select("vec_id", en)
 
 
+def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The normalized non-zero corpus ``(vec_id, en)`` the encoder-based
+    searches (IVF, PQ, IVF-PQ) read."""
+    return _normalized(_nonzero(load_table(spark, sf_dir, "embeddings")))
+
+
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k for each probe vector (self-excluded)."""
     return _bruteforce_from(_nonzero(load_table(spark, sf_dir, "embeddings")))
@@ -129,7 +146,7 @@ def _ordered(df: DataFrame, ordered: bool) -> DataFrame:
     """Final presentation sort of the search builders — skipped by the
     recall panel (``ordered=False``), whose join+aggregate consumer is
     order-insensitive: each skipped sort is a whole range-partitioning
-    exchange (5 across the panel, r14)."""
+    exchange (5 across the panel)."""
     return df.orderBy("query_id", "rank") if ordered else df
 
 
@@ -137,7 +154,7 @@ def _bruteforce_from(e: DataFrame, ordered: bool = True) -> DataFrame:
     """Composable form over an already-filtered corpus frame (shared by
     ann_recall_eval so the evaluation pays ONE corpus pass).
 
-    Two-stage top-k (round 8): scoring stays JVM-side (broadcast query
+    Two-stage top-k: scoring stays JVM-side (broadcast query
     set against the streaming corpus — shuffle-free candidate
     generation), then an Arrow-batched SELECTION-ONLY pre-pass keeps each
     batch's top-TOP_K per query in the global window's exact total order
@@ -259,7 +276,7 @@ def _lsh_from(e: DataFrame, ordered: bool = True) -> DataFrame:
     # 15-struct probe array built struct-by-struct cost ~0.5 s of pure
     # py4j round-trips per panel build (same driver-latency class as the
     # sign_bucket string path it composes — see functions/vectors.py).
-    # The parsed Columns are memoized module-level (r14, _LSH_KEY_COLS):
+    # The parsed Columns are memoized module-level (_LSH_KEY_COLS):
     # they are unresolved static expressions, session-independent, and
     # re-building them cost ~0.1 s of driver latency on every panel build
     if not _LSH_KEY_COLS:
@@ -384,7 +401,7 @@ def _dot(a, b) -> "F.Column":
     )
 
 
-# memoized static Column subtrees (r14): unresolved expressions are
+# memoized static Column subtrees: unresolved expressions are
 # session-independent and immutable, and the heavy ones here — the
 # aggregate-lambda dot/norm folds and the window rank columns — cost
 # 7–20 ms of py4j chatter EACH on every build. The recall panel assembles
@@ -420,45 +437,39 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce it.
 
     Scale shape — the part that matters at 100 TB:
-    - **nlist grows with the corpus** (round 6): nlist =
-      max(N_CENTROIDS, floor(√N)) over the non-zero corpus — the standard
-      IVF sizing. Cells hold ~√N vectors, so per-query candidate work is
-      N_PROBE·√N, SUB-linear in the corpus, instead of the linear growth a
-      fixed cell count gives (the pre-round-6 SCALING ratio of ~3× at 5×
-      data was exactly that linearity). The corpus count and the nlist·d
-      centroid matrix are the only driver-held state — the same bounded
-      contract as ``kmeans_cluster_profile`` (MLlib-style k·d), ~16 MB
-      even at N = 10⁹, d = 64.
-    - Cell assignment is a PURE MAP — an Arrow-batched mapInPandas kernel
-      over the normalized corpus, one numpy block-multiply + prefix-sum
-      per batch against the (driver-held, task-shipped) centroid matrix.
-      The corpus is never shuffled and there is no per-vector join or
-      window. np.cumsum's sequential prefix adds reproduce the engine's
-      left-to-right double fold BIT-EXACTLY (0.0+p₀ ≡ p₀, then identical
-      IEEE adds), so the assigned cells hash-match the DuckDB oracle's
-      fold — while running ~30× faster than the interpreted
-      aggregate(zip_with) expression it replaces (the pre-round-6
-      assignment was >half of total wall-time and scaled linearly).
+    - **nlist grows with the corpus**: nlist = max(N_CENTROIDS,
+      floor(√N)) over the non-zero corpus — the standard IVF sizing.
+      Cells hold ~√N vectors, so per-query candidate work is N_PROBE·√N,
+      SUB-linear in the corpus, instead of the linear growth a fixed cell
+      count gives. The corpus count and the nlist·d centroid matrix are
+      the only driver-held state — the same bounded contract as
+      ``kmeans_cluster_profile`` (MLlib-style k·d), ~16 MB even at
+      N = 10⁹, d = 64.
+    - Cell assignment is the ``a`` family of the one encoder kernel
+      (``_encoder_stream``): a pure map over the normalized corpus — no
+      shuffle, no per-vector join or window — whose per-coordinate fold
+      (``_fold_dots``) hash-matches the oracle's, ~30× faster than the
+      interpreted aggregate(zip_with) expression.
     - Vectors are L2-normalized once on the JVM side (the fold the oracle
       replays), so every centroid/candidate comparison is a single dot.
-    - Probing joins the tiny (query, cell) probe set broadcast against the
-      cell-assigned corpus: shuffle-free candidate generation; the only
-      exchange is the per-query top-k window over candidates.
-    Tie-breaks are pinned everywhere (max cos, then min centroid id:
-    np.argmax takes the first maximum over cid-ascending centroids; the
-    probe side packs -cid into the sort struct) — identical to the
-    oracle's ORDER BY cos DESC, cid ASC."""
-    return _ivf_from(_normalized(_nonzero(load_table(spark, sf_dir, "embeddings"))))
+    - Probe cells are chosen on the driver (``_encoder``, Q·nlist dots)
+      and broadcast as a local relation into the cell-assigned corpus:
+      shuffle-free candidate generation; the only keyed exchange is the
+      per-query top-k window over candidates.
+    Tie-breaks are pinned everywhere (max cos, then min centroid id) —
+    identical to the oracle's ORDER BY cos DESC, cid ASC."""
+    n = _ann_corpus(spark, sf_dir)
+    enc = _encoder(_index_state(n))
+    return _ivf_from(enc, _encoder_stream(n, enc, "a"))
 
 
 def _ivf_nlist(n_corpus: int) -> int:
     """nlist = clamp(floor(√N), N_CENTROIDS, NLIST_CAP) — mirrored by the
     oracle's least(greatest({N_CENTROIDS}, floor(sqrt(count(*)))), cap).
 
-    The cap (round 7, VERDICT r6 item 5) bounds the driver-held centroid
-    matrix at NLIST_CAP·d doubles (≤ 32 MB at d = 64) — O(1) in corpus
-    size, where uncapped √N growth reached ~160 MB of driver traffic at
-    N = 10¹¹. This is standard IVF sizing: coarse quantizers rarely
+    The cap bounds the driver-held centroid matrix at NLIST_CAP·d
+    doubles (≤ 32 MB at d = 64) — O(1) in corpus size, where uncapped
+    √N growth reached ~160 MB of driver traffic at N = 10¹¹. This is standard IVF sizing: coarse quantizers rarely
     exceed ~2¹⁶ cells in practice (FAISS guidance); past that, the win
     comes from a second quantization level (IVF-IMI / residual PQ over
     cell residuals — the documented design path here), not more cells.
@@ -469,109 +480,214 @@ def _ivf_nlist(n_corpus: int) -> int:
     return min(max(N_CENTROIDS, root), NLIST_CAP)
 
 
-def _index_state(n: DataFrame) -> tuple[int, list]:
-    """The ONE corpus count and ONE centroid-prefix collect every ANN
-    index builder's driver state derives from: nlist plus the sorted
-    (vec_id, en) rows with vec_id < nlist. PQ's codebook (vec_id <
-    PQ_KS) and the probe set (vec_id < N_QUERIES) are prefixes of the
-    centroid set — nlist ≥ N_CENTROIDS = PQ_KS > N_QUERIES — so the
-    recall panel builds this once and shares it across all its index
-    builds instead of re-running the count/collect jobs per index."""
-    nlist = _ivf_nlist(n.count())
-    cent_rows = sorted(
-        (r["vec_id"], r["en"]) for r in n.filter(F.col("vec_id") < nlist).collect()
+def _prefix_rows(n: DataFrame, limit: int) -> list:
+    """The sorted ``(vec_id, en)`` rows with ``vec_id < limit`` — the one
+    driver collect every encoder state is built from."""
+    return sorted(
+        (r["vec_id"], r["en"]) for r in n.filter(F.col("vec_id") < limit).collect()
     )
-    return nlist, cent_rows
 
 
-def _ivf_from(
-    n: DataFrame,
-    state: tuple[int, list] | None = None,
-    assign: DataFrame | None = None,
-    ordered: bool = True,
-    probes: DataFrame | None = None,
-) -> DataFrame:
+def _index_state(n: DataFrame) -> list:
+    """The ONE corpus count and ONE centroid-prefix collect behind IVF,
+    IVF-PQ and the recall panel: the rows with vec_id < nlist. PQ's
+    codebook (vec_id < PQ_KS) and the probe set (vec_id < N_QUERIES) are
+    prefixes of the centroid set — nlist ≥ N_CENTROIDS = PQ_KS >
+    N_QUERIES — so one state serves all three encoders. Standalone PQ
+    needs no nlist and collects the PQ_KS prefix alone."""
+    return _prefix_rows(n, _ivf_nlist(n.count()))
+
+
+def _fold_dots(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """A·Bᵀ accumulated coordinate by coordinate from 0.0: every entry is
+    the engines' left-to-right double fold (0.0 + p₀ + p₁ + …), so scores
+    hash-match the oracle's list_sum, while only the (|A|, |B|) partials
+    stay in cache (a cumsum over the |A|×|B|×d product block gives the
+    same values but was measured 10× slower from the memory traffic)."""
+    import numpy as np
+
+    out = np.zeros((len(A), len(B)))
+    for j in range(B.shape[1] if len(B) else 0):
+        out += A[:, j, None] * B[None, :, j]
+    return out
+
+
+def _subspace(s: int) -> slice:
+    """Coordinates of PQ subspace ``s`` (the last one may be partial)."""
+    return slice(s * PQ_DSUB, (s + 1) * PQ_DSUB)
+
+
+class _Encoder(NamedTuple):
+    """Driver-held ANN index state — the offline-training artifacts of a
+    real IVF/PQ index, seeded deterministically from the corpus prefix
+    so the oracle reproduces them: centroids ``C`` (ids ``cids``), PQ
+    codebook ``CB`` (the vec_id < PQ_KS prefix), probe vectors ``QM``
+    (ids ``q_ids``), ``n_sub`` subspaces, each query's N_PROBE cells and
+    the Q×n_sub×KS ADC table ``LUT``. All bounded: ≤ NLIST_CAP·d doubles
+    for ``C`` at any corpus size."""
+
+    cids: "np.ndarray"
+    C: "np.ndarray"
+    CB: "np.ndarray"
+    q_ids: "np.ndarray"
+    QM: "np.ndarray"
+    n_sub: int
+    probe_cells: list
+    LUT: "np.ndarray"
+
+
+def _encoder(rows: list) -> _Encoder:
+    """The encoder state from sorted ``(vec_id, en)`` rows.
+
+    Subspace geometry derives from the data's dimensionality
+    (n_sub = ⌈d/PQ_DSUB⌉, last subspace partial): the fixed 8×8 layout
+    at d = 64, plain vector quantization at d ≤ PQ_DSUB; the oracle
+    computes the same adaptive range. Probe selection takes each query's
+    top-N_PROBE centroids by (cos DESC, cid ASC) — the oracle's
+    row_number order. ``LUT[q, s, c]`` is the dot of query q's and
+    codeword c's subvector s, each folded from 0.0."""
+    import numpy as np
+
+    d = len(rows[0][1]) if rows else 0
+    cids = np.array([c for c, _ in rows], dtype=np.int64)
+    C = np.array([v for _, v in rows], dtype=np.float64).reshape(len(rows), d)
+    CB = C[cids < PQ_KS]  # selected by id: zero-vector gaps match the oracle
+    q_ids, QM = cids[cids < N_QUERIES], C[cids < N_QUERIES]
+    n_sub = -(-d // PQ_DSUB)
+    probe_cells = [
+        cids[np.lexsort((cids, -scores))[:N_PROBE]] for scores in _fold_dots(QM, C)
+    ]
+    LUT = np.zeros((len(QM), n_sub, len(CB)))
+    for s in range(n_sub):
+        LUT[:, s, :] = _fold_dots(QM[:, _subspace(s)], CB[:, _subspace(s)])
+    return _Encoder(cids, C, CB, q_ids, QM, n_sub, probe_cells, LUT)
+
+
+def _encoder_stream(n: DataFrame, enc: _Encoder, kinds: str) -> DataFrame:
+    """The one encoder kernel: a pure-map Arrow pass over the normalized
+    corpus ``n`` that emits, for each family named in ``kinds``, one
+    slice of a union-typed ``(kind, cand_id, ce, cell, query_id, adc)``
+    stream:
+
+    - ``a`` — IVF assignment: every vector's nearest centroid
+      (cand_id, ce, cell);
+    - ``p`` — PQ: each batch's top-PQ_SHORTLIST candidates per query by
+      unpruned ADC (query_id, cand_id, adc);
+    - ``q`` — IVF-PQ: the same, scored only for the queries probing the
+      candidate's cell — the IVF pruning factor (+ cell).
+
+    Cells are computed only for ``a``/``q``, subspace codes only for
+    ``p``/``q``, each once per batch. ADC never touches a raw vector: it
+    sums LUT entries over the candidate's codes in subspace order — the
+    oracle's grouping (per-subspace partial dots, then list_sum in s
+    order). The local shortlists use the global window's total order
+    (adc DESC, cand_id ASC), so their union contains the global
+    top-PQ_SHORTLIST for any partitioning. Every argmax takes the first
+    maximum over id-ascending centroids/codewords ≡ the oracle's ORDER
+    BY score DESC, cid ASC."""
     import numpy as np
     import pandas as pd
 
-    # offline index training, driver-held and bounded: one corpus count
-    # (scalar) + the nlist·d centroid matrix (shared when the caller
-    # already built it — see _index_state)
-    nlist, cent_rows = state if state is not None else _index_state(n)
-    cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    C = np.array([v for _, v in cent_rows], dtype=np.float64)
+    cids, C, CB, q_ids, _, n_sub, probe_cells, LUT = enc
+    cells_on = "a" in kinds or "q" in kinds
+    adc_kinds = [k for k in "pq" if k in kinds]
 
-    def assign_kernel(batches):
+    def kernel(batches):
         for pdf in batches:
             m = len(pdf)
-            cells = np.empty(m, dtype=np.int64)
-            if m:
-                EN = np.stack(pdf["en"].values).astype(np.float64, copy=False)
-                for s in range(0, m, 256):  # bound the b×nlist score block
-                    blk = EN[s : s + 256]
-                    # accumulate the dot product coordinate-by-coordinate:
-                    # scores starts at 0.0 and adds one product per j in
-                    # order — the engines' left-to-right double fold,
-                    # reproduced with cache-resident b×nlist partials (a
-                    # cumsum over the full b×nlist×d product block gives
-                    # the same values but materializes it — measured 10×
-                    # slower from the memory traffic alone)
-                    scores = np.zeros((len(blk), len(C)))
-                    for j in range(C.shape[1]):
-                        scores += blk[:, j, None] * C[None, :, j]
-                    cells[s : s + 256] = cids[np.argmax(scores, axis=1)]
-            yield pd.DataFrame(
-                {"cand_id": pdf["vec_id"], "ce": pdf["en"], "cell": cells}
+            if m == 0:
+                continue
+            EN = np.stack(pdf["en"].values).astype(np.float64, copy=False)
+            cand = pdf["vec_id"].to_numpy(dtype=np.int64)
+            if cells_on:  # 256-row blocks bound the b×nlist score matrix
+                cells = np.concatenate(
+                    [
+                        cids[np.argmax(_fold_dots(EN[s : s + 256], C), axis=1)]
+                        for s in range(0, m, 256)
+                    ]
+                )
+            if "a" in kinds:
+                yield pd.DataFrame(
+                    {
+                        "kind": "a",
+                        "cand_id": cand,
+                        "ce": pdf["en"],
+                        "cell": cells,
+                        "query_id": 0,
+                        "adc": 0.0,
+                    }
+                )
+            if not adc_kinds or len(q_ids) == 0:
+                continue
+            codes = np.stack(
+                [
+                    np.argmax(
+                        _fold_dots(EN[:, _subspace(s)], CB[:, _subspace(s)]),
+                        axis=1,
+                    )
+                    for s in range(n_sub)
+                ],
+                axis=1,
             )
+            out = []
+            for qi, qid in enumerate(q_ids):
+                for kind in adc_kinds:
+                    keep = cand != qid
+                    if kind == "q":
+                        keep &= np.isin(cells, probe_cells[qi])
+                    idx = np.flatnonzero(keep)
+                    adc = np.zeros(len(idx))
+                    for s in range(n_sub):
+                        adc += LUT[qi, s, codes[idx, s]]
+                    order = np.lexsort((cand[idx], -adc))[:PQ_SHORTLIST]
+                    sel = idx[order]
+                    out.append(
+                        pd.DataFrame(
+                            {
+                                "kind": kind,
+                                "cand_id": cand[sel],
+                                "ce": None,
+                                "cell": cells[sel] if kind == "q" else 0,
+                                "query_id": qid,
+                                "adc": adc[order],
+                            }
+                        )
+                    )
+            yield pd.concat(out, ignore_index=True)
 
-    # fan the Python kernel out across cores: a single-row-group parquet
-    # scan arrives as ONE task and would serialize the assignment. The
-    # recall panel injects the assignment slice of its combined kernel
-    # pass instead (_panel_candidates) — same values, one corpus pass
-    # shared with the pq/ivfpq encoders
-    if assign is None:
-        assign = rebalance_for_kernel(n).mapInPandas(
-            assign_kernel, schema="cand_id long, ce array<double>, cell long"
-        )
+    # the kernel calls this module's _fold_dots/_subspace, which the
+    # workers import from the shipped package; the rebalance fans the
+    # kernel out across cores (a single-row-group scan arrives as ONE
+    # task and would serialize the pass)
+    ship_package_to_workers(n.sparkSession)
+    return rebalance_for_kernel(n).mapInPandas(
+        kernel,
+        schema="kind string, cand_id long, ce array<double>, cell long, "
+        "query_id long, adc double",
+    )
 
-    # probe selection stays JVM-side: N_QUERIES rows × nlist dots is tiny.
-    # The recall panel injects a driver-built probes frame instead
-    # (_panel_probes — the same numpy selection _ivfpq_from runs, over
-    # state the driver already holds), skipping the cents aggregate job
-    if probes is None:
-        cents = (
-            n.filter(F.col("vec_id") < nlist)
-            .select(
-                F.struct(
-                    F.col("vec_id").alias("cid"), F.col("en").alias("cv")
-                ).alias("c")
-            )
-            .agg(F.array_sort(F.collect_list("c")).alias("cents"))
-        )
 
-        def cell_scores():
-            return F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    _dot(F.col("en"), c["cv"]).alias("cos"),
-                    (-c["cid"]).alias("ncid"),
-                ),
-            )
-
-        probes = (
-            n.filter(F.col("vec_id") < N_QUERIES)
-            .crossJoin(F.broadcast(cents))
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("en").alias("qe"),
-                F.explode(
-                    F.slice(F.reverse(F.array_sort(cell_scores())), 1, N_PROBE)
-                ).alias("p"),
-            )
-            .select("query_id", "qe", (-F.col("p")["ncid"]).alias("cell"))
-        )
+def _ivf_from(enc: _Encoder, stream: DataFrame, ordered: bool = True) -> DataFrame:
+    """IVF search over the stream's ``a`` slice: the driver-built probe
+    relation (query, qe, cell) broadcasts into the cell-assigned corpus —
+    shuffle-free candidate generation; the only keyed exchange is the
+    per-query top-k window. ``qe`` holds the exact collected doubles."""
+    spark = stream.sparkSession
+    probe_rows = [
+        (int(qid), [float(x) for x in enc.QM[qi]], int(cell))
+        for qi, qid in enumerate(enc.q_ids)
+        for cell in enc.probe_cells[qi]
+    ]
+    # 4 explicit slices: bare createDataFrame parallelizes the local rows
+    # to defaultParallelism near-empty python tasks, while coalesce(1) was
+    # measured to serialize the row deserialization into one straggler
+    probes = spark.createDataFrame(
+        spark.sparkContext.parallelize(probe_rows, 4),
+        "query_id long, qe array<double>, cell long",
+    )
     return _ordered(
-        assign.join(F.broadcast(probes), "cell")
+        _slice(stream, "a", "cand_id", "ce", "cell")
+        .join(F.broadcast(probes), "cell")
         .filter(F.col("cand_id") != F.col("query_id"))
         .withColumn(
             "cos",
@@ -588,6 +704,12 @@ def _ivf_from(
         ),
         ordered,
     )
+
+
+def _slice(stream: DataFrame, kind: str, *cols: str) -> DataFrame:
+    """One family of the encoder stream, narrowed to its own columns
+    before any keyed exchange sees it."""
+    return stream.filter(F.col("kind") == kind).select(*cols)
 
 
 _DOT_EN = (
@@ -661,7 +783,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine and the top-k returned — the standard re-ranking
     arrangement (Jégou et al. 2011, FAISS IndexPQ + refine).
 
-    Scale shape at 100 TB (round 8 — the plan now IS the scale story):
+    Scale shape at 100 TB:
     - The codebook (PQ_M·PQ_KS·PQ_DSUB doubles = 8 KB here, ~1 MB at
       d=768/ks=256), the N_QUERIES probe vectors, and the Q·PQ_M·PQ_KS
       ADC lookup table derived from them (5·8·16 doubles here) are the
@@ -670,17 +792,15 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       the first PQ_KS corpus vectors so the DuckDB oracle reproduces
       the whole index bit-exactly (real deployments train codebooks
       with k-means offline; the plan shape is identical).
-    - Encode + ADC-score + local top-k is ONE PURE MAP (Arrow-batched
-      mapInPandas): each batch snaps its vectors to codes, scores every
-      query against the codes via the precomputed ADC table (the
-      standard table-lookup ADC of Jégou et al. 2011 §5.2 / FAISS
-      IndexPQ), and emits only its per-batch top-PQ_SHORTLIST
-      (query_id, cand_id, adc) rows. The corpus is never shuffled, NO
-      raw vector survives past the kernel, and the per-query shortlist
-      exchange receives ≤ batches·PQ_SHORTLIST·Q slim 24-byte rows —
-      not the N·Q candidate stream (the round-7 plan carried the full
-      float corpus into a Q-reducer window; the round-7 review
-      correctly called that a contradiction of the PQ memory story).
+    - Encode + ADC-score + local top-k is ONE PURE MAP — the ``p``
+      family of the one encoder kernel (``_encoder_stream``): each batch
+      snaps its vectors to codes, scores every query against the codes
+      via the precomputed ADC table (the standard table-lookup ADC of
+      Jégou et al. 2011 §5.2 / FAISS IndexPQ), and emits only its
+      per-batch top-PQ_SHORTLIST (query_id, cand_id, adc) rows. The
+      corpus is never shuffled, NO raw vector survives past the kernel,
+      and the per-query shortlist exchange receives ≤ batches·
+      PQ_SHORTLIST·Q slim rows — not the N·Q candidate stream.
     - The global shortlist is the only per-query window; the exact
       rerank then BROADCASTS the ≤ Q·PQ_SHORTLIST-row shortlist back
       into a corpus scan (map-side join on cand_id — FAISS's refine
@@ -701,114 +821,29 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     final adc accumulates the PQ_M table entries in subspace order —
     the oracle computes the identical grouping (per-subspace partial
     dots, then list_sum in s order), so every IEEE add happens in the
-    same sequence in both engines."""
-    return _pq_from(_normalized(_nonzero(load_table(spark, sf_dir, "embeddings"))))
+    same sequence in both engines.
+
+    The driver state is ONE collect of the PQ_KS-prefix rows (the
+    codebook; the probe vectors are its prefix) and no corpus count."""
+    n = _ann_corpus(spark, sf_dir)
+    enc = _encoder(_prefix_rows(n, PQ_KS))
+    return _pq_from(n, _encoder_stream(n, enc, "p"))
 
 
-def _pq_from(
-    n: DataFrame,
-    state: tuple[int, list] | None = None,
-    cand_stream: DataFrame | None = None,
-    ordered: bool = True,
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    # offline index state, driver-held and bounded: PQ_KS codebook rows +
-    # N_QUERIES probe rows -> the Q×M×KS ADC lookup table. Subspace
-    # geometry derives from the DATA's dimensionality (m = ceil(d/DSUB),
-    # last subspace partial) — identical to the fixed layout at d = 64,
-    # degrading to plain vector quantization at d <= DSUB; the oracle
-    # computes the same adaptive range (out-of-range list indexes yield
-    # NULL products that list_sum skips). Standalone, the codebook and
-    # probe rows come from ONE collect (they are prefixes of each other);
-    # in the recall panel they slice the shared _index_state rows.
-    if state is not None:
-        rows = [rv for rv in state[1] if rv[0] < PQ_KS]
-    else:
-        rows = sorted(
-            (r["vec_id"], r["en"])
-            for r in n.filter(F.col("vec_id") < PQ_KS).collect()
-        )
-    cb_rows = rows
-    d = len(cb_rows[0][1]) if cb_rows else 0
-    CB = np.array([v for _, v in cb_rows], dtype=np.float64).reshape(
-        len(cb_rows), d
-    )  # (ks, d); row order == cid order (sorted above)
-    n_sub = -(-d // PQ_DSUB) if d else 0
-    q_rows = [rv for rv in rows if rv[0] < N_QUERIES]
-    q_ids = np.array([i for i, _ in q_rows], dtype=np.int64)
-    QM = np.array([v for _, v in q_rows], dtype=np.float64).reshape(
-        len(q_rows), d
-    )
-    # ADC table: LUT[q, s, c] = dot(query subvector s, codeword c's
-    # subvector s), accumulated per-coordinate from 0.0 — the engines'
-    # left-to-right double fold, bit-exactly
-    LUT = np.zeros((len(QM), n_sub, len(CB)))
-    for s in range(n_sub):
-        for j in range(s * PQ_DSUB, min(d, (s + 1) * PQ_DSUB)):
-            LUT[:, s, :] += QM[:, j, None] * CB[None, :, j]
-
-    def encode_score_kernel(batches):
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "cand_id": pd.Series(dtype="int64"),
-                "adc": pd.Series(dtype="float64"),
-            }
-        )
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0 or len(QM) == 0:
-                yield empty
-                continue
-            EN = np.stack(pdf["en"].values).astype(np.float64, copy=False)
-            cand = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # encode: nearest codeword per subspace (first max = min cid)
-            code_pos = np.empty((m, n_sub), dtype=np.int64)
-            for s in range(n_sub):
-                lo = s * PQ_DSUB
-                scores = np.zeros((m, len(CB)))
-                for j in range(lo, min(d, lo + PQ_DSUB)):
-                    scores += EN[:, j, None] * CB[None, :, j]
-                code_pos[:, s] = np.argmax(scores, axis=1)
-            # ADC from codes × table only (raw vectors stop here), folded
-            # over subspaces in order: 0.0 + t0 + t1 + ... + t_{m-1}
-            out = []
-            for qi in range(len(QM)):
-                adc = np.zeros(m)
-                for s in range(n_sub):
-                    adc += LUT[qi, s, code_pos[:, s]]
-                idx = np.flatnonzero(cand != q_ids[qi])
-                # local top-k in the GLOBAL window's total order
-                # (adc DESC, cand_id ASC) -> union ⊇ global top-k
-                order = np.lexsort((cand[idx], -adc[idx]))[:PQ_SHORTLIST]
-                sel = idx[order]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), q_ids[qi]),
-                            "cand_id": cand[sel],
-                            "adc": adc[sel],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True) if out else empty
-
-    # the recall panel injects the unpruned-ADC slice of its combined
-    # kernel pass (_panel_candidates) — same values, one shared corpus pass
-    if cand_stream is None:
-        cand_stream = rebalance_for_kernel(n).mapInPandas(
-            encode_score_kernel, schema="query_id long, cand_id long, adc double"
-        )
+def _adc_rerank(n: DataFrame, cand: DataFrame, ordered: bool) -> DataFrame:
+    """The PQ/IVF-PQ tail over an ADC candidate slice ``(query_id,
+    cand_id, adc, …)``: the global per-query shortlist window over the
+    slim local winners, then the exact rerank — the ≤ Q·PQ_SHORTLIST
+    shortlist, with its query vectors attached, broadcasts back into a
+    corpus scan (map-side re-fetch of the raw vectors, FAISS refine
+    style), so the final window sorts ≤ Q·PQ_SHORTLIST rows. Columns
+    past ``adc`` (IVF-PQ's ``cell``) ride through to the output."""
+    extra = cand.columns[3:]
     short = (
-        cand_stream.withColumn("srank", _rank_over("adc"))
+        cand.withColumn("srank", _rank_over("adc"))
         .filter(F.col("srank") <= PQ_SHORTLIST)
-        .select("query_id", "cand_id", "adc")
+        .select(*cand.columns)
     )
-    # exact rerank: broadcast the ≤ Q·PQ_SHORTLIST-row shortlist (with its
-    # query vectors attached) back into a corpus scan — map-side re-fetch
-    # of the raw vectors, FAISS refine-style
     q = n.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("en").alias("qe")
     )
@@ -827,9 +862,15 @@ def _pq_from(
             "rank",
             stable_round(F.col("cos"), 6).alias("cosine"),
             stable_round(F.col("adc"), 6).alias("adc"),
+            *extra,
         ),
         ordered,
     )
+
+
+def _pq_from(n: DataFrame, stream: DataFrame, ordered: bool = True) -> DataFrame:
+    """PQ search over the stream's ``p`` slice (unpruned ADC)."""
+    return _adc_rerank(n, _slice(stream, "p", "query_id", "cand_id", "adc"), ordered)
 
 
 ANN_PQ_SQL = f"""
@@ -916,157 +957,30 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       vectors, and the Q·M·KS ADC table derived from them. Probe-cell
       selection (top-N_PROBE centroids per query) happens ON THE DRIVER
       against that matrix — Q·nlist dots, no cluster work at all.
-    - ONE pure-map corpus pass (Arrow-batched mapInPandas) assigns each
-      vector's cell, encodes its PQ codes, and ADC-scores it ONLY for
+    - ONE pure-map corpus pass — the ``q`` family of the one encoder
+      kernel (``_encoder_stream``) — assigns each vector's cell, encodes
+      its PQ codes, and ADC-scores it ONLY for
       the queries probing its cell — candidates outside probed cells are
       skipped before any scoring, which is the IVF pruning factor
       (N_PROBE/nlist of the corpus ever reaches the ADC lookup). Each
       batch emits its local top-PQ_SHORTLIST per query in the global
       window's total order, so the shortlist exchange again receives
       only slim (query_id, cand_id, adc, cell) rows.
-    - Shortlist window + broadcast rerank join-back are identical to
-      ``ann_pq_topk``; the final window sorts ≤ Q·PQ_SHORTLIST rows.
+    - The shortlist window + broadcast rerank tail (``_adc_rerank``) is
+      ``ann_pq_topk``'s; the final window sorts ≤ Q·PQ_SHORTLIST rows.
 
-    Determinism: cell assignment and probe selection break ties by
-    (score DESC, cid ASC) exactly as ``ann_ivf_topk`` (np.argmax /
-    lexsort first-maximum over cid-ascending centroids ≡ the oracle's
-    row_number ORDER BY); encoding and the subspace-grouped ADC fold are
-    byte-for-byte the ``ann_pq_topk`` kernels."""
-    return _ivfpq_from(_normalized(_nonzero(load_table(spark, sf_dir, "embeddings"))))
+    Determinism: cell assignment, probe selection, encoding and the
+    subspace-grouped ADC fold are the same code as ``ann_ivf_topk``'s and
+    ``ann_pq_topk``'s, so ties break identically (score DESC, cid ASC)."""
+    n = _ann_corpus(spark, sf_dir)
+    enc = _encoder(_index_state(n))
+    return _ivfpq_from(n, _encoder_stream(n, enc, "q"))
 
 
-def _ivfpq_from(
-    n: DataFrame,
-    state: tuple[int, list] | None = None,
-    cand_stream: DataFrame | None = None,
-    ordered: bool = True,
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    # offline index state, driver-held and bounded (see docstring);
-    # shared with the other builders in the recall panel (_index_state)
-    nlist, cent_rows = state if state is not None else _index_state(n)
-    cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    C = np.array([v for _, v in cent_rows], dtype=np.float64)
-    # codebook = vectors with vec_id < PQ_KS (a prefix of the centroid
-    # set, selected by ID not by row position — id gaps from zero-vector
-    # exclusion must match the oracle's ``vec_id < PQ_KS`` exactly)
-    CB = C[cids < PQ_KS]
-    q_mask = cids < N_QUERIES
-    q_ids = cids[q_mask]
-    QM = C[q_mask]
-    # adaptive subspace geometry (same rule as _pq_from)
-    d = C.shape[1] if C.ndim == 2 and len(C) else 0
-    n_sub = -(-d // PQ_DSUB) if d else 0
-
-    # per-coordinate accumulation everywhere: the engines' shared
-    # left-to-right double fold, bit-exactly (see _ivf_from / _pq_from)
-    def _fold_dots(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        out = np.zeros((len(A), len(B)))
-        for j in range(B.shape[1] if len(B) else 0):
-            out += A[:, j, None] * B[None, :, j]
-        return out
-
-    # probe selection on the driver: top-N_PROBE cells per query by
-    # (cos DESC, cid ASC)
-    qscores = _fold_dots(QM, C)
-    probe_cells: list[np.ndarray] = []
-    for qi in range(len(QM)):
-        order = np.lexsort((cids, -qscores[qi]))[:N_PROBE]
-        probe_cells.append(cids[order])
-
-    # ADC table from the same subspace-grouped fold as _pq_from
-    LUT = np.zeros((len(QM), n_sub, len(CB)))
-    for s in range(n_sub):
-        for j in range(s * PQ_DSUB, min(d, (s + 1) * PQ_DSUB)):
-            LUT[:, s, :] += QM[:, j, None] * CB[None, :, j]
-
-    def kernel(batches):
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "cand_id": pd.Series(dtype="int64"),
-                "adc": pd.Series(dtype="float64"),
-                "cell": pd.Series(dtype="int64"),
-            }
-        )
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0 or len(QM) == 0:
-                yield empty
-                continue
-            EN = np.stack(pdf["en"].values).astype(np.float64, copy=False)
-            cand = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cells = np.empty(m, dtype=np.int64)
-            for s0 in range(0, m, 256):  # bound the b×nlist score block
-                blk = EN[s0 : s0 + 256]
-                cells[s0 : s0 + 256] = cids[np.argmax(_fold_dots(blk, C), axis=1)]
-            code_pos = np.empty((m, n_sub), dtype=np.int64)
-            for s in range(n_sub):
-                lo = s * PQ_DSUB
-                scores = np.zeros((m, len(CB)))
-                for j in range(lo, min(d, lo + PQ_DSUB)):
-                    scores += EN[:, j, None] * CB[None, :, j]
-                code_pos[:, s] = np.argmax(scores, axis=1)
-            out = []
-            for qi in range(len(QM)):
-                # IVF pruning: only rows in this query's probed cells are
-                # ever ADC-scored
-                idx = np.flatnonzero(
-                    np.isin(cells, probe_cells[qi]) & (cand != q_ids[qi])
-                )
-                if len(idx) == 0:
-                    continue
-                adc = np.zeros(len(idx))
-                for s in range(n_sub):
-                    adc += LUT[qi, s, code_pos[idx, s]]
-                order = np.lexsort((cand[idx], -adc))[:PQ_SHORTLIST]
-                sel = idx[order]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), q_ids[qi]),
-                            "cand_id": cand[sel],
-                            "adc": adc[order],
-                            "cell": cells[sel],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True) if out else empty
-
-    # the recall panel injects the cell-pruned-ADC slice of its combined
-    # kernel pass (_panel_candidates) — same values, one shared corpus pass
-    if cand_stream is None:
-        cand_stream = rebalance_for_kernel(n).mapInPandas(
-            kernel, schema="query_id long, cand_id long, adc double, cell long"
-        )
-    short = (
-        cand_stream.withColumn("srank", _rank_over("adc"))
-        .filter(F.col("srank") <= PQ_SHORTLIST)
-        .select("query_id", "cand_id", "adc", "cell")
-    )
-    q = n.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("en").alias("qe")
-    )
-    short_q = short.join(F.broadcast(q), "query_id")
-    return _ordered(
-        n.join(F.broadcast(short_q), n["vec_id"] == short_q["cand_id"])
-        .withColumn(
-            "cos",
-            _cached_col("dot_qe_en", lambda: _dot(F.col("qe"), F.col("en"))),
-        )
-        .withColumn("rank", _rank_over("cos"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "cand_id",
-            "rank",
-            stable_round(F.col("cos"), 6).alias("cosine"),
-            stable_round(F.col("adc"), 6).alias("adc"),
-            "cell",
-        ),
-        ordered,
+def _ivfpq_from(n: DataFrame, stream: DataFrame, ordered: bool = True) -> DataFrame:
+    """IVF-PQ search over the stream's ``q`` slice (cell-pruned ADC)."""
+    return _adc_rerank(
+        n, _slice(stream, "q", "query_id", "cand_id", "adc", "cell"), ordered
     )
 
 
@@ -1815,192 +1729,6 @@ ORDER BY m.vec_id"""
 SEMANTIC_DEDUP_SQL = _semantic_dedup_sql()
 
 
-def _panel_candidates(
-    n: DataFrame, state: tuple[int, list], eager: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """ONE corpus kernel pass for the recall panel's three encoder-based
-    indexes (r14): the standalone builders each run their own
-    ``rebalance_for_kernel → mapInPandas`` corpus pass (ivf assigns
-    cells, pq encodes + ADC-scores, ivfpq does both), so the panel paid
-    the Arrow decode twice-redundantly, the cell scoring twice, and the
-    subspace encoding twice. This kernel computes EN/cells/codes ONCE per
-    batch and emits all three candidate families as one union-typed
-    stream — ``kind`` 'a' (ivf assignment: cand_id, ce, cell), 'p' (pq
-    unpruned-ADC local shortlist: query_id, cand_id, adc), 'q' (ivfpq
-    cell-pruned-ADC local shortlist: + cell). Each family's numpy
-    trajectory is verbatim its standalone builder's (same block sizes,
-    same per-coordinate fold order, same lexsort shortlist), so the
-    sliced streams are value-identical to what _ivf_from/_pq_from/
-    _ivfpq_from build themselves — the panel oracle replays all three
-    searches independently and hash-certifies it.
-
-    The stream persists and is materialized EAGERLY (one count) before
-    the branches are built: AQE schedules the three consumers' first
-    stages concurrently, and a lazily-persisted common parent would race
-    — each branch recomputing the kernel before the cache fills, which
-    is exactly the redundancy this pass removes. ``eager=False`` skips
-    the count and hands the materialization to the caller (the recall
-    panel runs it CONCURRENTLY with the exact-truth materialization,
-    §2.6 — both read the already-warm normalized cache, so the two
-    independent jobs back-fill each other's task tails); the stream
-    frame rides along as the first element either way."""
-    import numpy as np
-    import pandas as pd
-
-    nlist, cent_rows = state
-    cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    C = np.array([v for _, v in cent_rows], dtype=np.float64)
-    CB = C[cids < PQ_KS]
-    q_mask = cids < N_QUERIES
-    q_ids = cids[q_mask]
-    QM = C[q_mask]
-    d = C.shape[1] if C.ndim == 2 and len(C) else 0
-    n_sub = -(-d // PQ_DSUB) if d else 0
-
-    def _fold_dots(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        out = np.zeros((len(A), len(B)))
-        for j in range(B.shape[1] if len(B) else 0):
-            out += A[:, j, None] * B[None, :, j]
-        return out
-
-    # driver-side probe selection + ADC table, verbatim _ivfpq_from
-    qscores = _fold_dots(QM, C)
-    probe_cells: list = []
-    for qi in range(len(QM)):
-        order = np.lexsort((cids, -qscores[qi]))[:N_PROBE]
-        probe_cells.append(cids[order])
-    LUT = np.zeros((len(QM), n_sub, len(CB)))
-    for s in range(n_sub):
-        for j in range(s * PQ_DSUB, min(d, (s + 1) * PQ_DSUB)):
-            LUT[:, s, :] += QM[:, j, None] * CB[None, :, j]
-
-    def kernel(batches):
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            EN = np.stack(pdf["en"].values).astype(np.float64, copy=False)
-            cand = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # coarse cells — shared by the ivf assignment ('a' rows) and
-            # the ivfpq pruning; 256-row blocks, verbatim _ivf_from
-            cells = np.empty(m, dtype=np.int64)
-            for s0 in range(0, m, 256):
-                blk = EN[s0 : s0 + 256]
-                cells[s0 : s0 + 256] = cids[
-                    np.argmax(_fold_dots(blk, C), axis=1)
-                ]
-            yield pd.DataFrame(
-                {
-                    "kind": "a",
-                    "cand_id": pdf["vec_id"],
-                    "ce": pdf["en"],
-                    "cell": cells,
-                    "query_id": np.zeros(m, dtype=np.int64),
-                    "adc": np.zeros(m),
-                }
-            )
-            if len(QM) == 0:
-                continue
-            # subspace codes — shared by the pq and ivfpq ADC, verbatim
-            # _pq_from/_ivfpq_from
-            code_pos = np.empty((m, n_sub), dtype=np.int64)
-            for s in range(n_sub):
-                lo = s * PQ_DSUB
-                scores = np.zeros((m, len(CB)))
-                for j in range(lo, min(d, lo + PQ_DSUB)):
-                    scores += EN[:, j, None] * CB[None, :, j]
-                code_pos[:, s] = np.argmax(scores, axis=1)
-            out = []
-            for qi in range(len(QM)):
-                # 'p': unpruned ADC over the whole batch (_pq_from)
-                adc = np.zeros(m)
-                for s in range(n_sub):
-                    adc += LUT[qi, s, code_pos[:, s]]
-                idx = np.flatnonzero(cand != q_ids[qi])
-                order = np.lexsort((cand[idx], -adc[idx]))[:PQ_SHORTLIST]
-                sel = idx[order]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "kind": np.full(len(sel), "p"),
-                            "cand_id": cand[sel],
-                            "ce": [None] * len(sel),
-                            "cell": np.zeros(len(sel), dtype=np.int64),
-                            "query_id": np.full(len(sel), q_ids[qi]),
-                            "adc": adc[sel],
-                        }
-                    )
-                )
-                # 'q': cell-pruned ADC (_ivfpq_from)
-                pidx = np.flatnonzero(
-                    np.isin(cells, probe_cells[qi]) & (cand != q_ids[qi])
-                )
-                if len(pidx) == 0:
-                    continue
-                padc = np.zeros(len(pidx))
-                for s in range(n_sub):
-                    padc += LUT[qi, s, code_pos[pidx, s]]
-                porder = np.lexsort((cand[pidx], -padc))[:PQ_SHORTLIST]
-                psel = pidx[porder]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "kind": np.full(len(psel), "q"),
-                            "cand_id": cand[psel],
-                            "ce": [None] * len(psel),
-                            "cell": cells[psel],
-                            "query_id": np.full(len(psel), q_ids[qi]),
-                            "adc": padc[porder],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    stream = (
-        rebalance_for_kernel(n)
-        .mapInPandas(
-            kernel,
-            schema=(
-                "kind string, cand_id long, ce array<double>, cell long, "
-                "query_id long, adc double"
-            ),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if eager:
-        stream.count()  # see docstring (AQE concurrent-consumer race)
-    assign = stream.filter(F.col("kind") == "a").select("cand_id", "ce", "cell")
-    pq_cand = stream.filter(F.col("kind") == "p").select(
-        "query_id", "cand_id", "adc"
-    )
-    ivfpq_cand = stream.filter(F.col("kind") == "q").select(
-        "query_id", "cand_id", "adc", "cell"
-    )
-    # driver-built IVF probes from the state already in hand: the numpy
-    # (cos DESC, cid ASC) top-N_PROBE above IS the JVM chain's selection
-    # (all three representations — JVM fold, numpy fold, oracle list_sum
-    # — are bit-identical, see _ivf_from/_ivfpq_from), and the qe doubles
-    # are the exact collected en values, so injecting this local relation
-    # skips the cents collect_list aggregate job the JVM path pays
-    probe_rows = [
-        (int(q_ids[qi]), [float(x) for x in QM[qi]], int(cell))
-        for qi in range(len(QM))
-        for cell in probe_cells[qi]
-    ]
-    # 4 explicit slices: bare createDataFrame parallelizes the local rows
-    # to defaultParallelism (32 near-empty python tasks), while
-    # coalesce(1) was measured to serialize the python-side row
-    # deserialization into one straggler; a handful of slices keeps the
-    # broadcast build both small and parallel
-    spark = n.sparkSession
-    probes = spark.createDataFrame(
-        spark.sparkContext.parallelize(probe_rows, 4),
-        "query_id long, qe array<double>, cell long",
-    )
-    return stream, assign, pq_cand, ivfpq_cand, probes
-
-
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the approximate indexes against the exact baseline —
     the evaluation every ANN deployment runs before trusting an index
@@ -2009,59 +1737,34 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: the brute-force ground truth is the expensive input (at 100 TB
     it runs on a query SAMPLE — here the probe set already is one); ALL
-    FOUR approximate result sets (ivf, lsh, pq, ivfpq — round 8 completed
-    the panel) are tagged, unioned, and LEFT-joined against
-    the truth on the tiny (query, cand) key. Recall is
-    matched / (|queries|·k) — an integer ratio, one deterministic double
-    division, so the score is bit-exact across engines.
+    FOUR approximate result sets (ivf, lsh, pq, ivfpq) are tagged,
+    unioned, and LEFT-joined against the truth on the tiny (query, cand)
+    key. Recall is matched / |truth| — an integer ratio, one
+    deterministic double division, so the score is bit-exact across
+    engines.
 
     The searches share ONE persisted corpus frame carrying BOTH vector
     forms — the raw ``embedding`` (bruteforce, LSH) and the normalized
-    ``en`` (ivf/pq/ivfpq) — so the whole panel pays a single scan +
-    filter + normalize + cache-materialization pass (the same
-    single-pass discipline as ngram_jaccard_pairs): without it each
-    index re-scans, re-filters, and re-normalizes the embeddings table
-    independently — at 100 TB, three redundant corpus scans inside one
-    evaluation (and the r9 two-frame form still materialized the
-    corpus into cache twice). The driver-held
-    index state (corpus count + centroid/codebook/probe rows) is also
-    built ONCE (_index_state) and shared by the ivf/pq/ivfpq builds —
-    r8 ran the count and the overlapping prefix collects per index.
-    (The normalized frame deliberately persists at the SCAN's
-    partitioning, NOT pre-rebalanced: sharing one round-robin exchange
-    across the kernels was measured to force every cheap consumer —
-    state collects, probe selections, truth joins — onto 32 tiny tasks,
-    474 vs 201 executed tasks for the whole panel at the time of the r9
-    measurement; the per-kernel rebalance fans out only the
-    compute-heavy stages — at the kernel fan-out floor since r10, see
-    rebalance_for_kernel — and no-ops on a well-split 100 TB scan
-    anyway. Executed work: 27 jobs / 60 tasks per run since the r14
-    combined-kernel rebuild (r10–r13: 38 / 62), stamped in
-    BENCH_local.json.)
-
-    r14 (verdict item 4): the three encoder-based searches consume ONE
-    combined corpus kernel pass (_panel_candidates — cells, subspace
-    codes, and both ADC candidate families in one Arrow decode), the
-    branch presentation sorts are skipped (ordered=False; the truth
-    join + aggregate are order-insensitive), the IVF probes are a
-    driver-built local relation from the state already in hand, and the
-    recall denominator is an eager count on the persisted truth frame.
-    All value-identical — the oracle replays every search independently
-    and the driver hash-certifies it."""
+    ``en`` (ivf/pq/ivfpq) — so the panel pays a single scan + filter +
+    normalize + cache-materialization pass. The frame persists at the
+    SCAN's partitioning, not pre-rebalanced: a shared round-robin
+    exchange was measured to force every cheap consumer (state collects,
+    truth joins) onto full-width tiny tasks, while the kernel's own
+    rebalance fans out only the compute-heavy stage. One driver encoder
+    state (``_index_state`` → ``_encoder``) and ONE persisted encoder
+    kernel pass with all three families (``_encoder_stream(…, "apq")``)
+    feed the ivf/pq/ivfpq searches; the branches skip their presentation
+    sorts (``ordered=False``: the truth join + aggregate are
+    order-insensitive, and each skipped sort is a range exchange). The
+    oracle replays every search independently and the driver
+    hash-certifies the panel."""
     c = _normalized(
         _nonzero(load_table(spark, sf_dir, "embeddings")), keep_raw=True
     ).persist()
     e = c.select("vec_id", "embedding")
     n = c.select("vec_id", "en")
-    state = _index_state(n)
-    # ONE combined kernel pass feeds all three encoder-based searches
-    # (r14 — see _panel_candidates); lsh/bruteforce stay JVM-side over e.
-    # The panel's branches skip their presentation sorts (ordered=False):
-    # the truth join + method aggregate below are order-insensitive, and
-    # each skipped sort is a range exchange
-    stream, assign, pq_cand, ivfpq_cand, probes = _panel_candidates(
-        n, state, eager=False
-    )
+    enc = _encoder(_index_state(n))
+    stream = _encoder_stream(n, enc, "apq").persist(StorageLevel.MEMORY_AND_DISK)
     exact = (
         _bruteforce_from(e, ordered=False)
         .select("query_id", "cand_id")
@@ -2069,7 +1772,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     tagged = (
-        _ivf_from(n, state, assign=assign, ordered=False, probes=probes)
+        _ivf_from(enc, stream, ordered=False)
         .select("query_id", "cand_id")
         .withColumn("method", F.lit("ivf"))
         .unionByName(
@@ -2078,12 +1781,12 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("method", F.lit("lsh"))
         )
         .unionByName(
-            _pq_from(n, state, cand_stream=pq_cand, ordered=False)
+            _pq_from(n, stream, ordered=False)
             .select("query_id", "cand_id")
             .withColumn("method", F.lit("pq"))
         )
         .unionByName(
-            _ivfpq_from(n, state, cand_stream=ivfpq_cand, ordered=False)
+            _ivfpq_from(n, stream, ordered=False)
             .select("query_id", "cand_id")
             .withColumn("method", F.lit("ivfpq"))
         )
@@ -2093,16 +1796,17 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ground truth, and a perfect index must score 1.0 against what
     # the exact search really returned
     # the denominator is a bounded scalar on the PERSISTED truth frame:
-    # counting it eagerly (r14) folds what was a crossJoin(broadcast(agg))
+    # counting it eagerly folds what would be a crossJoin(broadcast(agg))
     # subtree into a literal, and materializes the exact cache before the
     # final DAG instead of inside it.
-    # r15 (§2.6): the truth materialization and the combined kernel-pass
-    # materialization are INDEPENDENT jobs over the same warm normalized
-    # cache (n.count() inside _index_state filled it), so they run
-    # concurrently from a 2-thread pool — the second job's tasks
-    # back-fill the executor slots the first job's tail frees, instead
-    # of the two serializing driver-side. Results are unchanged: each
-    # thread only materializes a persisted frame and returns a count.
+    # Both persisted frames are materialized BEFORE the final DAG: AQE
+    # schedules the three stream consumers' first stages concurrently,
+    # and a lazily-persisted common parent would race — each branch
+    # recomputing the kernel before the cache fills. The truth and the
+    # stream materializations are independent jobs over the same warm
+    # normalized cache (the count inside _index_state filled it), so
+    # they run concurrently from a 2-thread pool — the second job's
+    # tasks back-fill the executor slots the first job's tail frees.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:

@@ -13,6 +13,7 @@ taking the place of ``local[N]``.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -25,7 +26,6 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 def get_spark(
     app_name: str = "amazon-climate-data-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config.
@@ -39,8 +39,13 @@ def get_spark(
     - ``maxPartitionBytes`` default 128 MB: at 100 TB that is ~800k input
       splits, which is the intended granularity for a 1000-executor fleet.
     - Arrow enabled for every pandas-UDF exchange.
+    - Shuffle partitions = the session's core count: the ``N`` of a
+      ``local[N]`` master, else ``SPARK_GRAFT_CPUS`` — one width for
+      every session, so plans measured in one are the plans of all.
     """
     cpus = _DEFAULT_CPUS
+    local_n = re.fullmatch(r"local\[(\d+)\]", master or "")
+    width = local_n.group(1) if local_n else cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -68,10 +73,7 @@ def get_spark(
         # engines run with it off: error messages lose the user call-site
         # line, execution semantics are untouched.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions if shuffle_partitions is not None else cpus),
-        )
+        .config("spark.sql.shuffle.partitions", width)
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet: vectorized reader + filter pushdown are on by default;
         # keep rebase modes deterministic for stable golden comparisons.

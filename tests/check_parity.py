@@ -5,7 +5,7 @@ spec = importlib.util.spec_from_file_location('__spark_entry__','/root/repo/__sp
 m = importlib.util.module_from_spec(spec); spec.loader.exec_module(m)
 from tests.oracle_harness import duckdb_conn, compare_frames, exact_float_mismatches
 from amazon_climate_data_etl_spark.session import get_spark
-spark = get_spark(master='local[8]', shuffle_partitions=16)
+spark = get_spark(master='local[8]')
 sf = sys.argv[1] if len(sys.argv)>1 else '/root/testdata/sf0.01'
 only = [n for a in sys.argv[2:] for n in a.split(',')] or None
 Q, O = m.queries(), m.oracle_sql()

@@ -52,11 +52,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="tests",
-        master="local[4]",
-        shuffle_partitions=8,
-    )
+    s = get_spark(app_name="tests", master="local[4]")
     yield s
 
 

@@ -34,6 +34,9 @@ ORACLE = entry_mod.oracle_sql()
 
 _SIM_QUERIES = [
     "ann_bruteforce_topk", "ann_lsh_topk", "ann_ivf_topk",
+    # the standalone PQ and IVF-PQ searches run their own encoder passes
+    # (PQ over the PQ_KS-prefix state alone), not the panel's shared one
+    "ann_pq_topk", "ann_ivfpq_topk",
     "embedding_cosine_neardup", "semantic_lexical_neardup",
     "embedding_label_stats",
     # embedding_spectrum_profile (the r13 merge of embedding_covariance +

@@ -201,26 +201,13 @@ _PLAN_BOUNDS = {
     # --- full-coverage bounds (measured on the sf0.001 fixture; a higher
     # count appearing means the query silently grew an exchange) ---
     "ann_bruteforce_topk": (2, 1),
-    # three ANN result sets composed (textual reprints of their window
-    # exchanges); the persisted truth set + its count broadcast into the
-    # tagged union
-    # r6 nlist-growth IVF: numpy-kernel assignment replaced the centroid
-    # crossJoin broadcast on the corpus side (one fewer broadcast); the
-    # probe-set and probe-selection broadcasts remain
-    # r8: the eval panel grew to all four indexes (pq + ivfpq joined
-    # ivf + lsh): their rebalances + slim shortlist/rerank windows and
-    # shortlist/query broadcasts add to the composed count
-    # r9: the shared _index_state hoist removed the per-index count/
-    # collect jobs (49 -> 44 executed jobs); the normalized frame stays
-    # at scan partitioning (a shared pre-rebalance was measured to force
-    # every cheap consumer onto 32 tiny tasks — 474 vs 196)
-    # r14: the combined _panel_candidates kernel (one corpus pass feeds
-    # ivf/pq/ivfpq), ordered=False branch sorts (−5 range exchanges), the
-    # driver-built probes local relation (−1 cents agg exchange, −1
-    # broadcast), and the eager truth-count fold (−1 crossJoin broadcast)
-    # tightened the composed plan from (22, 11)
+    # five ANN searches composed over one persisted encoder stream (their
+    # window exchanges reprinted per branch, presentation sorts skipped);
+    # the persisted truth set broadcasts into the tagged union
     "ann_recall_eval": (17, 9),
-    "ann_ivf_topk": (4, 2),
+    # kernel rebalance + top-k window + final sort; the driver-built
+    # probe relation broadcasts into the cell-assigned corpus
+    "ann_ivf_topk": (3, 1),
     # PQ (r8): rebalance + slim shortlist window + rerank window + final
     # sort; the ≤Q·S shortlist (with query vecs) broadcasts back into the
     # corpus scan and the query set broadcasts onto the shortlist
@@ -739,19 +726,14 @@ def test_simhash_tokenizes_documents_once(spark, sf_dir):
     """Both sides of simhash_near_pairs' pair join read the same widened
     doc→print frame: in the final adaptive plan the corpus is scanned
     once, and the other join side reads that frame's exchange through
-    ReusedExchange instead of tokenizing every document again. Run with
-    the shuffle partitions at the parallelism, as every session but this
-    suite's has them: the widen must still spread pair production, whose
-    stage is the query's last, over every core."""
+    ReusedExchange instead of tokenizing every document again. The
+    session's shuffle partitions are its core count, as in every session:
+    the widen must still spread pair production, whose stage is the
+    query's last, over every core."""
     sc = spark.sparkContext
     width = sc.defaultParallelism
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        df = QUERIES["simhash_near_pairs"](spark, sf_dir)
-        last_job = max(job_ids_started(spark, df.collect))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    df = QUERIES["simhash_near_pairs"](spark, sf_dir)
+    last_job = max(job_ids_started(spark, df.collect))
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("documents.parquet") == 1, final

@@ -243,15 +243,15 @@ def _plan_ancestors(plan: str):
 
 
 def _plans_at_both_partition_settings(spark, df) -> list[str]:
-    """explain("simple") of ``df`` at the suite's shuffle partitions and
-    at a default session's: ``get_spark`` without ``shuffle_partitions``
-    sets them to the parallelism. Each plan comes from a fresh Dataset,
-    so it is planned under its own setting."""
+    """explain("simple") of ``df`` at the suite's shuffle partitions (its
+    core count) and at 8, so the plan shape is pinned at two widths.
+    Each plan comes from a fresh Dataset, so it is planned under its own
+    setting."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     plans = []
     try:
-        for n in (old, str(spark.sparkContext.defaultParallelism)):
+        for n in (old, "8"):
             spark.conf.set(key, n)
             plan = I.plan_string(df.select("*"), "simple")
             assert re.search(rf"Exchange hashpartitioning\(.*, {n}\)", plan), plan
@@ -266,8 +266,8 @@ def test_municipality_cell_cut_reaches_every_variable_scan(spark, tmp_path):
     per-variable parquet scan as a broadcast LeftSemi join, below the
     pivot's first shuffle, so the pivot moves municipality cells only.
     An uncorrelated EXISTS (inner and outer column names colliding) or a
-    left_semi join above the pivot both fail here. Checked at the suite's
-    shuffle partitions and at a default session's."""
+    left_semi join above the pivot both fail here. Checked at two shuffle
+    partition widths (see _plans_at_both_partition_settings)."""
     _, annual = _raw_annual(spark, tmp_path, "classic")
     for plan in _plans_at_both_partition_settings(spark, annual):
         scans = [
@@ -292,8 +292,8 @@ def test_municipality_cell_cut_reaches_every_variable_scan(spark, tmp_path):
 def test_pivot_is_one_aggregate_pair(spark, tmp_path):
     """Between the per-variable scans' Union and the dimension join the
     long→wide pivot is one hash Aggregate pair (partial + final) around
-    one exchange, not PivotFirst's two Aggregates — at the suite's shuffle
-    partitions and at a default session's."""
+    one exchange, not PivotFirst's two Aggregates — at two shuffle
+    partition widths."""
     _, annual = _raw_annual(spark, tmp_path, "classic")
     for plan in _plans_at_both_partition_settings(spark, annual):
         union = next(chain for node, chain in _plan_ancestors(plan) if "Union" in node)
