@@ -3,7 +3,7 @@
 A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of the reference pipeline ``jvictorferreira3301/amazon-climate-data-etl``
 (a single-node pandas/xarray/geopandas climate ETL), generalized into a reusable
-engine:
+engine. It is one batch engine: every query is a DataFrame/SQL plan.
 
 - ``session``    — tuned SparkSession factory (AQE, Arrow, shuffle sizing)
 - ``catalog``    — table loading / temp-view registration over parquet dirs
@@ -12,7 +12,6 @@ engine:
                    climate pipelines, dedup, similarity search, event analytics
 - ``sources``    — ingest boundaries (NetCDF/shapefile relationalization
                    patterns, CSV/parquet IO, partitioned sinks, multimodal)
-- ``streaming``  — Structured Streaming jobs mirroring the batch semantics
 - ``plans``      — physical-plan inspection helpers
 
 Everything is built on the DataFrame/SQL API so Catalyst handles pushdown,

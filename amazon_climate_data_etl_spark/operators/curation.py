@@ -29,7 +29,7 @@ and "tokenized batches". Scale design notes per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -1226,23 +1226,51 @@ ORDER BY doc_id, chunk_id
 # --------------------------------------------------------------------------
 
 
-def _merge_frames(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Deterministic MERGE inputs derived from the documents table so the
-    oracle can re-derive them: the TARGET is the corpus minus every 7th
-    doc (those become inserts), the SOURCE is the ``doc_id % 3 == 0``
-    slice carrying a revised text for even ids and a tombstone for
-    ``doc_id % 21 == 0`` (a subset of the source by construction)."""
-    target = d.filter(F.col("doc_id") % 7 != 6).select("doc_id", "text")
-    source = d.filter(F.col("doc_id") % 3 == 0).select(
+def _merge_split(
+    d: DataFrame, base: Column, revised: Column, name: str
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic MERGE split of a doc_id-keyed frame, the one
+    definition every CDC query reads: the TARGET ``(doc_id, name)`` is
+    the corpus minus every 7th doc (those become inserts), the SOURCE
+    ``(doc_id, name, is_delete)`` is the ``doc_id % 3 == 0`` slice
+    carrying ``revised`` for even ids (``base`` otherwise) and a
+    tombstone for ``doc_id % 21 == 0`` (a subset of the source by
+    construction). ``base``/``revised`` are the text or its
+    fingerprint."""
+    doc = F.col("doc_id")
+    target = d.filter(doc % 7 != 6).select("doc_id", base.alias(name))
+    source = d.filter(doc % 3 == 0).select(
         "doc_id",
-        F.when(
-            F.col("doc_id") % 2 == 0, F.concat(F.col("text"), F.lit(" [rev2]"))
-        )
-        .otherwise(F.col("text"))
-        .alias("new_text"),
-        (F.col("doc_id") % 21 == 0).alias("is_delete"),
+        F.when(doc % 2 == 0, revised).otherwise(base).alias(name),
+        (doc % 21 == 0).alias("is_delete"),
     )
     return target, source
+
+
+def _snapshot_versions(
+    d: DataFrame, base: Column, revised: Column, name: str, *keep: str
+) -> tuple[DataFrame, DataFrame]:
+    """The deterministic corpus snapshot pair of a doc_id-keyed frame, the
+    one definition every CDC query reads: v1 drops ``doc_id % 11 == 3``;
+    v2 drops ``doc_id % 11 == 7`` and carries ``revised`` in place of
+    ``base`` for ``doc_id % 13 == 0``. Each is ``(doc_id, *keep, name)``."""
+    doc = F.col("doc_id")
+    v1 = d.filter(doc % 11 != 3).select("doc_id", *keep, base.alias(name))
+    v2 = d.filter(doc % 11 != 7).select(
+        "doc_id",
+        *keep,
+        F.when(doc % 13 == 0, revised).otherwise(base).alias(name),
+    )
+    return v1, v2
+
+
+def _merge_frames(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Deterministic MERGE inputs over the documents table, so the oracle
+    can re-derive them: target ``(doc_id, text)`` and source ``(doc_id,
+    text, is_delete)`` of ``_merge_split``, the revision appending
+    ``' [rev2]'``."""
+    text = F.col("text")
+    return _merge_split(d, text, F.concat(text, F.lit(" [rev2]")), "text")
 
 
 def merge_upsert(target: DataFrame, source: DataFrame) -> DataFrame:
@@ -1267,20 +1295,18 @@ def merge_upsert(target: DataFrame, source: DataFrame) -> DataFrame:
     comparison wider than 32 chars. This is exactly the shuffle a
     lakehouse MERGE pays before its file rewrite."""
     return _merge_accounting(
-        target.select(F.col("doc_id").alias("t_id"), F.md5("text").alias("t_fp")),
-        source.select(
-            F.col("doc_id").alias("s_id"),
-            F.md5("new_text").alias("s_fp"),
-            "is_delete",
-        ),
+        target.select("doc_id", F.md5("text").alias("fp")),
+        source.select("doc_id", F.md5("text").alias("fp"), "is_delete"),
     )
 
 
 def _merge_accounting(t: DataFrame, s: DataFrame) -> DataFrame:
-    """The MERGE action CASE over fingerprint frames ``t (t_id, t_fp)``
-    and ``s (s_id, s_fp, is_delete)``: one full-outer join on the key,
+    """The MERGE action CASE over fingerprint frames ``t (doc_id, fp)``
+    and ``s (doc_id, fp, is_delete)``: one full-outer join on the key,
     one accounting row ``(doc_id, action, result_fp)`` per key of
     t ∪ s. Shared by ``merge_upsert`` and ``corpus_cdc_profile``."""
+    t = t.select(F.col("doc_id").alias("t_id"), F.col("fp").alias("t_fp"))
+    s = s.select(F.col("doc_id").alias("s_id"), F.col("fp").alias("s_fp"), "is_delete")
     j = t.join(s, t["t_id"] == s["s_id"], "full_outer")
     matched = F.col("t_id").isNotNull() & F.col("s_id").isNotNull()
     action = (
@@ -1301,12 +1327,11 @@ def _merge_accounting(t: DataFrame, s: DataFrame) -> DataFrame:
 
 def corpus_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE/upsert accounting over the deterministic target/source split
-    (see _merge_frames): per-document action + resulting content
+    (see _merge_split): per-document action + resulting content
     fingerprint — the CDC audit a versioned corpus pipeline records with
-    every merge commit. (Registered r10–r13; since the r14 consolidation
-    this is the ``merge`` frame of ``corpus_cdc_profile`` — kept as the
-    merge playbook's value-preservation test surface, see
-    test_sinks.py::test_cdc_profile_preserves_predecessors.)"""
+    every merge commit. Not registered: it is the ``merge`` frame of
+    ``corpus_cdc_profile``, kept as the value-preservation test surface
+    (test_sinks.py::test_cdc_profile_preserves_predecessors)."""
     target, source = _merge_frames(load_table(spark, sf_dir, "documents"))
     return merge_upsert(target, source).orderBy("doc_id")
 
@@ -1348,7 +1373,7 @@ def apply_merge(target: DataFrame, source: DataFrame) -> DataFrame:
     test_sinks.py). Same single full-outer shuffle as the audit."""
     t = target.select(F.col("doc_id").alias("t_id"), F.col("text").alias("t_text"))
     s = source.select(
-        F.col("doc_id").alias("s_id"), F.col("new_text").alias("s_text"), "is_delete"
+        F.col("doc_id").alias("s_id"), F.col("text").alias("s_text"), "is_delete"
     )
     j = t.join(s, t["t_id"] == s["s_id"], "full_outer")
     return (
@@ -1365,36 +1390,31 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     what changed between v=N and v=N+1): docs ``added``, ``removed``, or
     ``changed`` — unchanged docs are omitted, so the output is
     delta-sized, not corpus-sized. Versions are derived deterministically
-    from the documents table (v1 drops every 11th-offset-3 doc, v2 drops
-    offset-7 and revises every 13th) so the oracle re-derives them.
-    (Registered r10–r13; since the r14 consolidation this is the ``diff``
-    frame of ``corpus_cdc_profile`` — kept as the value-preservation test
-    surface, see test_sinks.py::test_cdc_profile_preserves_predecessors.)
+    from the documents table (``_snapshot_versions``) so the oracle
+    re-derives them. Not registered: it is the ``diff`` frame of
+    ``corpus_cdc_profile``, kept as the value-preservation test surface
+    (test_sinks.py::test_cdc_profile_preserves_predecessors).
 
     Scale shape: one full-outer join on doc_id comparing 32-char content
     hashes (the text never rides the exchange) — the same plan a
     manifest-level diff of two write_snapshot versions executes."""
     d = load_table(spark, sf_dir, "documents")
-    v1 = d.filter(F.col("doc_id") % 11 != 3).select(
-        F.col("doc_id").alias("id1"), F.md5("text").alias("fp_v1")
-    )
-    v2 = d.filter(F.col("doc_id") % 11 != 7).select(
-        F.col("doc_id").alias("id2"),
-        F.md5(
-            F.when(
-                F.col("doc_id") % 13 == 0, F.concat(F.col("text"), F.lit(" [v2]"))
-            ).otherwise(F.col("text"))
-        ).alias("fp_v2"),
-    )
-    return _snapshot_changes(v1, v2).orderBy("doc_id")
+    text = F.col("text")
+    return _snapshot_changes(
+        *_snapshot_versions(
+            d, F.md5(text), F.md5(F.concat(text, F.lit(" [v2]"))), "fp"
+        )
+    ).orderBy("doc_id")
 
 
 def _snapshot_changes(v1: DataFrame, v2: DataFrame) -> DataFrame:
-    """The snapshot-diff change CASE over fingerprint frames ``v1 (id1,
-    fp_v1)`` and ``v2 (id2, fp_v2)``: one full-outer join on the key,
+    """The snapshot-diff change CASE over fingerprint frames ``v1`` and
+    ``v2`` (each ``(doc_id, fp)``): one full-outer join on the key,
     delta rows only — ``(doc_id, change, fp_v1, fp_v2)`` for docs added,
     removed or changed. Shared by ``corpus_snapshot_diff`` and
     ``corpus_cdc_profile``."""
+    v1 = v1.select(F.col("doc_id").alias("id1"), F.col("fp").alias("fp_v1"))
+    v2 = v2.select(F.col("doc_id").alias("id2"), F.col("fp").alias("fp_v2"))
     j = v1.join(v2, v1["id1"] == v2["id2"], "full_outer")
     change = (
         F.when(F.col("id1").isNull(), F.lit("added"))
@@ -1432,15 +1452,14 @@ ORDER BY doc_id
 
 
 def corpus_cdc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CDC WRITE-SIDE audit in one frame — r14 consolidation of the
-    former ``corpus_merge_upsert`` + ``corpus_snapshot_diff``
-    registrations (the pre-agreed merge shape: same doc_id grain over the
-    same documents scan, every operator shape of both preserved under one
-    oracle; funds the ``bloom_pruned_join`` addition at the 150-query
-    registry cap). The ``merge`` frame carries the per-document MERGE
-    action + resulting content fingerprint; the ``diff`` frame the
-    delta-only v1→v2 snapshot changes. ``corpus_read_asof`` remains the
-    separately-registered READ half (physical write_snapshot round trip).
+    """The CDC WRITE-SIDE audit in one frame, consolidating
+    ``corpus_merge_upsert`` and ``corpus_snapshot_diff`` (same doc_id
+    grain over the same documents scan, every operator shape of both
+    preserved under one oracle). The ``merge`` frame carries the
+    per-document MERGE action + resulting content fingerprint; the
+    ``diff`` frame the delta-only v1→v2 snapshot changes.
+    ``corpus_read_asof`` remains the separately-registered READ half
+    (physical write_snapshot round trip).
 
     The merge's whole point at scale: the predecessors each paid a full
     documents scan + per-row md5 before their joins. Here ONE persisted
@@ -1465,17 +1484,9 @@ def corpus_cdc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- merge frame: merge_upsert's accounting over the shared
     # fingerprint pass (value preservation vs the predecessor is pinned
     # row-for-row in test_sinks.py) ---
+    fp = F.col("fp")
     merge = _merge_accounting(
-        fps.filter(F.col("doc_id") % 7 != 6).select(
-            F.col("doc_id").alias("t_id"), F.col("fp").alias("t_fp")
-        ),
-        fps.filter(F.col("doc_id") % 3 == 0).select(
-            F.col("doc_id").alias("s_id"),
-            F.when(F.col("doc_id") % 2 == 0, F.col("fp_rev2"))
-            .otherwise(F.col("fp"))
-            .alias("s_fp"),
-            (F.col("doc_id") % 21 == 0).alias("is_delete"),
-        ),
+        *_merge_split(fps, fp, F.col("fp_rev2"), "fp")
     ).select(
         F.lit("merge").alias("frame"),
         "doc_id",
@@ -1486,15 +1497,7 @@ def corpus_cdc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- diff frame: corpus_snapshot_diff's changes ---
     diff = _snapshot_changes(
-        fps.filter(F.col("doc_id") % 11 != 3).select(
-            F.col("doc_id").alias("id1"), F.col("fp").alias("fp_v1")
-        ),
-        fps.filter(F.col("doc_id") % 11 != 7).select(
-            F.col("doc_id").alias("id2"),
-            F.when(F.col("doc_id") % 13 == 0, F.col("fp_v2rev"))
-            .otherwise(F.col("fp"))
-            .alias("fp_v2"),
-        ),
+        *_snapshot_versions(fps, fp, F.col("fp_v2rev"), "fp")
     ).select(
         F.lit("diff").alias("frame"),
         "doc_id",
@@ -1599,15 +1602,9 @@ def corpus_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    v1 = d.filter(F.col("doc_id") % 11 != 3).select("doc_id", "source", "text")
-    v2 = d.filter(F.col("doc_id") % 11 != 7).select(
-        "doc_id",
-        "source",
-        F.when(
-            F.col("doc_id") % 13 == 0, F.concat(F.col("text"), F.lit(" [v2]"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
+    text = F.col("text")
+    v1, v2 = _snapshot_versions(
+        d, text, F.concat(text, F.lit(" [v2]")), "text", "source"
     )
     store = _snapshot_store(sf_dir)
     shutil.rmtree(store, ignore_errors=True)

@@ -1106,25 +1106,17 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _incremental_verdicts(
-    delta: DataFrame, corpus: DataFrame, persist: bool = True
-) -> DataFrame:
-    """The incremental-dedup core over two (doc_id, text) frames — the
-    batch query (delta = the ``doc_id % 5 == 4`` slice) and the streaming
-    twin (delta = one micro-batch, ``streaming/jobs.py``) run this SAME
-    plan: exact fp probe, corpus-representative LSH probe, Jaccard
-    verify, per-delta best match, three-way verdict. ``persist=False``
-    for streaming micro-batches, whose tiny shingle frames are cheaper to
-    recompute than to cache-manage across triggers.
+def _incremental_verdicts(delta: DataFrame, corpus: DataFrame) -> DataFrame:
+    """The incremental-dedup core over two (doc_id, text) frames: exact
+    fp probe, corpus-representative LSH probe, Jaccard verify, per-delta
+    best match, three-way verdict.
 
-    r14: BOTH hash layers (normalized fp for the exact probe, byte md5
-    for the representative collapse) come from ONE flagged delta∪corpus
-    scan, checkpointed in the batch form — the previous shape hashed the
-    corpus once for the fp probe and AGAIN inside ``_rep_docs``, and the
-    exact probe's two lazy branches re-evaluated their scans
-    independently (the same concurrent-materialization class as
-    ``_components_frame``'s hashes). One text pass now feeds the exact
-    probe, the collapse, and the verdict spine."""
+    Both hash layers (normalized fp for the exact probe, byte md5 for the
+    representative collapse) come from ONE flagged delta∪corpus scan,
+    checkpointed so the exact probe's two branches cannot re-evaluate
+    their scans independently (the concurrent-materialization class of
+    ``_components_frame``'s hashes). One text pass feeds the exact probe,
+    the collapse, and the verdict spine."""
     flagged = delta.select(
         "doc_id", "text", F.lit(True).alias("is_new")
     ).unionByName(corpus.select("doc_id", "text", F.lit(False).alias("is_new")))
@@ -1133,9 +1125,7 @@ def _incremental_verdicts(
         "is_new",
         doc_fingerprint(F.col("text")).alias("fp"),
         F.md5(F.col("text")).alias("bfp"),
-    )
-    if persist:
-        hashes = hashes.localCheckpoint()
+    ).localCheckpoint()
     dfp = hashes.filter(F.col("is_new")).select("doc_id", "fp")
     cfp = hashes.filter(~F.col("is_new")).select("doc_id", "fp")
     exact = (
@@ -1156,11 +1146,8 @@ def _incremental_verdicts(
         .agg(F.min("doc_id").alias("doc_id"))
     )
     rep_docs = corpus.join(breps.select("doc_id"), "doc_id", "left_semi")
-    sh_d = _shingle_frame(delta)
-    sh_c = _shingle_frame(rep_docs)
-    if persist:
-        sh_d = sh_d.persist(StorageLevel.MEMORY_AND_DISK)
-        sh_c = sh_c.persist(StorageLevel.MEMORY_AND_DISK)
+    sh_d = _shingle_frame(delta).persist(StorageLevel.MEMORY_AND_DISK)
+    sh_c = _shingle_frame(rep_docs).persist(StorageLevel.MEMORY_AND_DISK)
     cand = (
         _sig_long(_minhash_sigs(sh_d))
         .select(F.col("doc_id").alias("delta_id"), "band", "sig")

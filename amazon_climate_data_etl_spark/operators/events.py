@@ -2,9 +2,7 @@
 
 The reference is pure batch (§2.9); these operators define the engine's
 time-windowing surface with *batch-checkable* semantics — each has a DuckDB
-oracle — and ``streaming/jobs.py`` runs the same logic as Structured
-Streaming (readStream → window/watermark → writeStream), asserted
-equivalent in tests.
+oracle.
 
 Scale: window aggregation shuffles on (window, key) — bounded keyspace;
 sessionization shuffles on user_id once and sorts within partitions
@@ -85,7 +83,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap) per user:
     lag → new-session flag → running sum = session id; then per-session
     bounds/counts. This is the composable form of
-    ``F.session_window`` (used in streaming/jobs.py) with oracle parity."""
+    ``F.session_window`` with oracle parity."""
     e = load_table(spark, sf_dir, "events")
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w_order)
@@ -132,8 +130,8 @@ ORDER BY user_id, session_id
 
 def event_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the earliest event per (user_id, event_type) — deterministic
-    ``dropDuplicates`` (the streaming twin uses watermarked dropDuplicates;
-    plain dropDuplicates keeps an arbitrary row, so rank explicitly)."""
+    ``dropDuplicates`` (plain dropDuplicates keeps an arbitrary row, so
+    rank explicitly)."""
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
@@ -464,14 +462,6 @@ def daily_volume_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    return anomaly_flags_from_daily(daily)
-
-
-def anomaly_flags_from_daily(daily: DataFrame) -> DataFrame:
-    """The z-score/flag arithmetic of ``daily_volume_anomalies``, factored
-    over any (event_type, day, n) frame — shared by the batch operator and
-    the streaming twin's foreachBatch stage (same expressions, so the
-    stream certifies bit-equality against the batch answer)."""
     moments = daily.groupBy(F.col("event_type").alias("et")).agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("n").alias("s1"),

@@ -1282,12 +1282,7 @@ def _km_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL and empty embeddings are excluded (no position in the space);
     zero vectors are KEPT — unlike the cosine family, L2 distance is
     well-defined at the origin."""
-    return _quantize_vecs(load_table(spark, sf_dir, "embeddings"))
-
-
-def _quantize_vecs(em: DataFrame) -> DataFrame:
-    """Frame form of the quantizer (shared with the streaming semantic
-    probe, which quantizes micro-batch deltas against the same grid)."""
+    em = load_table(spark, sf_dir, "embeddings")
     q = F.transform(
         F.col("embedding"),
         lambda x: F.floor(x.cast("double") * _KM_SCALE + F.lit(0.5)).cast("long"),
@@ -1394,21 +1389,11 @@ def _km_final_assign(
     ``semantic_dedup_keep`` (k = None → the corpus-adaptive ``_sem_k``);
     each caller's oracle replays the identical chain via
     ``_km_chain_sql`` with the matching seed-count expression."""
+    import math
+
     vecs = _km_quantized(spark, sf_dir).persist()
     if k is None:
         k = _sem_k(vecs.count())
-    return _km_assign(vecs, _lloyd_cents(vecs, k))
-
-
-def _lloyd_cents(vecs: DataFrame, k: int) -> list[list[int]]:
-    """The Lloyd trajectory itself, frame-in/centroids-out: _KM_ITERS
-    driver-synced rounds over a quantized (vec_id, q) frame. Shared by
-    the registered k-means/SemDeDup queries (via _km_final_assign) and
-    the streaming semantic probe's static index (_semantic_probe_state),
-    so the stream twin's centroids are the batch trajectory by
-    construction."""
-    import math
-
     cents = [list(r.q) for r in vecs.orderBy("vec_id").limit(k).collect()]
     for _ in range(_KM_ITERS):
         stats = (
@@ -1422,7 +1407,7 @@ def _lloyd_cents(vecs: DataFrame, k: int) -> list[list[int]]:
         for r in stats:
             new[r.cluster_id][r.pos] = math.floor(r.s / r.n + 0.5)
         cents = new
-    return cents
+    return _km_assign(vecs, cents)
 
 
 def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2319,98 +2304,6 @@ SELECT 'component' AS frame, k AS i, -1 AS j,
 FROM v3
 ORDER BY frame, i, j
 """
-
-
-# --------------------------------------------------------------------------
-# Streaming semantic probe: delta embeddings vs a static SemDeDup index
-# --------------------------------------------------------------------------
-
-
-def _semantic_probe_state(corpus: DataFrame):
-    """The STATIC index the streaming semantic probe holds across
-    micro-batches — the embedding analogue of incremental_dedup's corpus
-    fp/signature tables: (a) the corpus Lloyd centroids (k·d driver-held
-    ints, the shared _lloyd_cents trajectory), (b) the normalized corpus
-    rows keyed by their cluster (persisted; the per-batch verify join
-    reads it), (c) the exact-embedding index (raw-array → min vec_id).
-    Built once per stream start; work per trigger is then ∝ |delta|."""
-    vecs = _quantize_vecs(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    cents = _lloyd_cents(vecs, _sem_k(vecs.count()))
-    assign = _km_assign(vecs, cents).select("vec_id", "cluster_id")
-    corpus_n = (
-        _normalized(_nonzero(corpus))
-        .join(assign, "vec_id")
-        .select(
-            F.col("vec_id").alias("corpus_id"),
-            "cluster_id",
-            F.col("en").alias("en_c"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    exact = corpus.filter(F.size("embedding") > 0).groupBy("embedding").agg(
-        F.min("vec_id").alias("exact_of")
-    )
-    return cents, corpus_n, exact
-
-
-def _semantic_verdicts(delta: DataFrame, state) -> DataFrame:
-    """The semantic three-way verdict core over a delta (vec_id,
-    embedding) frame — the embedding analogue of
-    dedup._incremental_verdicts, shared by the batch-equivalence test and
-    the foreachBatch streaming twin (streaming/jobs.py):
-
-    - ``exact_dup``: a corpus vector with the identical raw embedding
-      (min corpus id);
-    - ``near_dup``: best corpus vector in the delta vector's ASSIGNED
-      cluster with cosine ≥ NEARDUP_COS (max cosine, ties → min corpus
-      id) — the SemDeDup probe shape: the coarse quantizer confines the
-      verify to one cluster, work per delta row is |cluster|, never
-      |corpus|;
-    - ``new``: neither (including delta rows with empty or zero
-      embeddings — no direction ⇒ never a semantic duplicate, the same
-      contract split as the batch cosine family)."""
-    cents, corpus_n, exact = state
-    dassign = _km_assign(_quantize_vecs(delta), cents).select(
-        "vec_id", "cluster_id"
-    )
-    dn = _normalized(_nonzero(delta)).join(dassign, "vec_id")
-    dot = F.aggregate(
-        F.zip_with("en", "en_c", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    verified = (
-        dn.join(corpus_n, "cluster_id")
-        .withColumn("cosine", stable_round(dot, 6))
-        .filter(F.col("cosine") >= NEARDUP_COS)
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id")
-    )
-    best = (
-        verified.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("vec_id").alias("near_id"),
-            F.col("corpus_id").alias("near_of"),
-            "cosine",
-        )
-    )
-    ex = delta.join(exact, "embedding").select("vec_id", "exact_of")
-    dd = delta.select("vec_id")
-    return (
-        dd.join(ex, "vec_id", "left")
-        .join(best, dd["vec_id"] == best["near_id"], "left")
-        .select(
-            "vec_id",
-            F.when(F.col("exact_of").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("near_of").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.coalesce(F.col("exact_of"), F.col("near_of")).alias("dup_of"),
-            F.when(F.col("exact_of").isNull(), F.col("cosine")).alias("cosine"),
-        )
-    )
 
 
 QUERIES = {

@@ -1410,9 +1410,8 @@ ORDER BY doc_id
 # aggregate over a customer-derived ticket corpus, unordered rule pair);
 # this one is the scrub itself: per-doc grain over documents, an ORDERED
 # three-rule chain with staged counts, and the redacted text's md5 as the
-# bit-exact certificate — the form the streaming hop
-# (streaming.jobs.crawl_extract_stream) consumes. Different scan, grain,
-# and contract; the shared name fragment is the domain, not the shape.
+# bit-exact certificate. Different scan, grain, and contract; the shared
+# name fragment is the domain, not the shape.
 # The corpus carries no real PII, so the
 # query plants deterministic doc_id-derived PII spans first (same
 # portable-synthesis pattern as html_boilerplate_extract), then runs the
@@ -1745,10 +1744,9 @@ N_CRAWL_FILES = 16
 CRAWL_RECORDS_PER_FILE = 2048
 
 # URL identity shared by every crawl-family writer/reader (crawl_e2e,
-# wat_metadata_profile, wet_text_e2e, and the streaming WAT twin): pages
-# live at http://{source}.example.com/doc/{doc_id}, and this capture
-# recovers the source. ONE constant so the batch and stream twins cannot
-# silently desync (r13 ADVICE).
+# wat_metadata_profile, wet_text_e2e): pages live at
+# http://{source}.example.com/doc/{doc_id}, and this capture recovers the
+# source. ONE constant so the writers and readers cannot silently desync.
 CRAWL_URL_SOURCE_RE = r"^http://(.*)\.example\.com/doc/[0-9]+$"
 
 

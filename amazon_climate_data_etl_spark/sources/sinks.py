@@ -41,114 +41,6 @@ def write_single_csv(df: DataFrame, path: str, bom: bool = True) -> None:
     shutil.rmtree(tmp)
 
 
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("year",)
-) -> None:
-    """Standard analytical sink: Parquet partitioned by pruning columns."""
-    df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-
-
-def write_sorted_parquet(
-    df: DataFrame, path: str, sort_cols: tuple[str, ...], n_files: int = 4
-) -> None:
-    """Layout-optimized Parquet: range-repartition on the sort keys, then
-    sort within each partition before writing.
-
-    This is the 1-D form of Z-ordering: every file (and every row group
-    inside it) covers a narrow, near-disjoint key range, so parquet
-    min/max footer stats let a pushed-down predicate skip whole row groups
-    — at 100 TB the difference between scanning one file and scanning the
-    table. ``repartitionByRange`` gives files disjoint key ranges;
-    ``sortWithinPartitions`` makes row-group stats tight within each file.
-    (True multi-column Z-order interleaving needs a lakehouse layer; for a
-    single dominant predicate column this achieves the same skipping.)"""
-    (
-        df.repartitionByRange(n_files, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark, path: str, out_path: str, target_file_bytes: int = 128 << 20
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into files of
-    ~``target_file_bytes``. Returns the output file count.
-
-    The operational counterpart of every streaming/partitioned sink here:
-    a watermark-triggered writer or an over-parallel job leaves thousands
-    of KB-sized files, and at 100 TB the NameNode/listing cost plus
-    per-file open overhead dominates scan time long before the bytes do.
-    Target size comes from the REAL on-disk byte total (Hadoop
-    ``ContentSummary``, so it works on HDFS/S3A/local alike), not a row
-    heuristic; the rewrite is one shuffle to exactly the file count that
-    matches ``spark.sql.files.maxPartitionBytes``-sized scans afterwards.
-    Output goes to a new directory — an atomic-rename/catalog-swap layer
-    (or a table format) owns the in-place swap at production scale."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # flat layout: size only the data files (checksum/_SUCCESS markers would
-    # skew small-file math); partitioned layouts fall back to the recursive
-    # ContentSummary, where marker overhead is negligible
-    statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path, "*.parquet"))
-    if statuses:
-        total_bytes = sum(s.getLen() for s in statuses)
-    else:
-        total_bytes = fs.getContentSummary(hpath).getLength()
-    n_files = max(1, -(-int(total_bytes) // int(target_file_bytes)))
-    df = spark.read.parquet(path)
-    df.repartition(n_files).write.mode("overwrite").parquet(out_path)
-    return n_files
-
-
-def upsert_partitioned(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...] = ("year",)
-) -> None:
-    """Idempotent partition-level upsert: rewrite ONLY the partitions the
-    incoming frame touches, leave every other partition's files untouched
-    — Spark's dynamic partition-overwrite mode
-    (``spark.sql.sources.partitionOverwriteMode=dynamic``).
-
-    This is the MERGE-lite every nightly batch pipeline needs without a
-    lakehouse layer: re-running a day's load replaces exactly that day's
-    partitions (idempotent under retry), and the write cost is
-    ∝ |delta partitions|, never |table| — the static overwrite mode would
-    silently DELETE every partition not present in the delta, which at
-    100 TB is the difference between a correct incremental load and
-    truncating the table. The conf is set for this write and restored."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    try:
-        spark.conf.set(key, "dynamic")
-        df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    """JSON-Lines sink — the interchange format of most LLM training-data
-    tooling (one JSON object per line, splittable, append-friendly). Spark's
-    json writer IS jsonl: one object per line, one file per task."""
-    df.write.mode("overwrite").json(path)
-
-
-def read_jsonl(spark, path: str, schema=None) -> DataFrame:
-    """JSON-Lines scan. Always pass an explicit schema in production: with
-    ``schema=None`` Spark runs a full inference pass over the data first —
-    at 100 TB that is an extra read of the entire corpus before the real
-    scan (schema-on-read is a convenience for exploration only)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def write_snapshot(df: DataFrame, path: str, note: str = "") -> int:
     """Versioned dataset snapshot: each call writes an immutable
     ``v=<N>`` directory plus a tiny JSON manifest recording row count,
@@ -198,8 +90,6 @@ def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
     data directories without a committed manifest are invisible). The
     returned scan is pinned to that version's directory, so downstream
     jobs are reproducible regardless of later snapshot writes."""
-    import json as _json
-
     manifests = sorted(
         int(os.path.basename(p)[len("_manifest_v") : -len(".json")])
         for p in glob.glob(os.path.join(path, "_manifest_v*.json"))

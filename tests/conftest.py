@@ -7,43 +7,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _shim_protobuf() -> None:
-    """Test-environment protobuf pin (round-5 review item #6): the
-    container has no pip-installed google.protobuf (which gates the
-    Spark-4 transformWithStateInPandas state protocol), but the machine's
-    gcloud SDK bundles the full OSS protobuf runtime. Expose ONLY its
-    ``google`` namespace through a symlink dir (never the whole appengine
-    platform dir, which would shadow unrelated packages), on both
-    sys.path and PYTHONPATH so Python workers inherit it. The runtime is
-    one minor version behind pyspark's gencode (6.32 vs 6.33) — wire
-    format is stable, and protobuf's own documented escape hatch
-    acknowledges the check is advisory. The ENGINE keeps its import-gate:
-    this shim is test-environment-only, which is exactly where the
-    review asked for the pin."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    gae = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-    if not os.path.isdir(os.path.join(gae, "google", "protobuf")):
-        return
-    shim = "/tmp/spark_graft_protobuf_shim"
-    os.makedirs(shim, exist_ok=True)
-    link = os.path.join(shim, "google")
-    if not os.path.islink(link):
-        os.symlink(os.path.join(gae, "google"), link)
-    sys.path.append(shim)
-    os.environ["PYTHONPATH"] = (
-        os.environ.get("PYTHONPATH", "").rstrip(os.pathsep) + os.pathsep + shim
-    ).lstrip(os.pathsep)
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-
-
-_shim_protobuf()
-
 from amazon_climate_data_etl_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"

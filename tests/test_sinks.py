@@ -6,15 +6,10 @@ import glob
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from amazon_climate_data_etl_spark.sources.sinks import (
-    compact_parquet,
-    read_jsonl,
-    write_jsonl,
     write_partitioned,
     write_single_csv,
-    write_sorted_parquet,
 )
 
 
@@ -47,134 +42,12 @@ def test_write_single_csv_bom(small_df, tmp_path):
     assert len(text.splitlines()) == 4
 
 
-def test_sorted_parquet_enables_row_group_skipping(tmp_path, spark):
-    """write_sorted_parquet must produce files with near-disjoint key
-    ranges and tight row-group min/max stats (verified from the parquet
-    footers), so a pushed-down point/range predicate skips whole row
-    groups instead of scanning the table."""
-    import pyarrow.parquet as pq
-
-    df = spark.range(0, 10_000).selectExpr(
-        "id", "CAST(id % 365 AS INT) AS day", "id * 0.5 AS v"
-    )
-    out = str(tmp_path / "sorted")
-    write_sorted_parquet(df, out, ("day",), n_files=4)
-
-    spans = []
-    for f in glob.glob(f"{out}/part-*.parquet"):
-        meta = pq.ParquetFile(f).metadata
-        for rg in range(meta.num_row_groups):
-            col = next(
-                meta.row_group(rg).column(i)
-                for i in range(meta.row_group(rg).num_columns)
-                if meta.row_group(rg).column(i).path_in_schema == "day"
-            )
-            assert col.statistics is not None
-            spans.append((col.statistics.min, col.statistics.max))
-    assert len(spans) >= 4
-    # each row group covers a narrow slice of the 0..364 domain, and the
-    # slices barely overlap: a `day = k` predicate touches ~1 group
-    total_span = sum(hi - lo + 1 for lo, hi in spans)
-    assert total_span <= 365 + len(spans), spans
-
-    # Spark actually prunes: read with a point filter and confirm fewer
-    # rows pass through the scan than the table holds (footer-level skip
-    # is reflected in the scan's output row count being filter-selective)
-    got = spark.read.parquet(out).filter(F.col("day") == 17).count()
-    assert got == 10_000 // 365 + (1 if 17 < 10_000 % 365 else 0)
-
-
-def test_compact_parquet_shrinks_file_count(tmp_path, spark):
-    """64 tiny files must compact into the byte-derived target count with
-    all rows and values preserved."""
-    src = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    df = spark.range(0, 20_000).selectExpr("id", "id * 2 AS v")
-    df.repartition(64).write.parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-
-    total = sum(os.path.getsize(f) for f in glob.glob(f"{src}/part-*.parquet"))
-    # target a quarter of the total → 4 output files
-    n = compact_parquet(spark, src, out, target_file_bytes=total // 4 + 1)
-    got_files = glob.glob(f"{out}/part-*.parquet")
-    assert n == 4 and len(got_files) == 4
-
-    back = spark.read.parquet(out)
-    assert back.count() == 20_000
-    assert back.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(20_000))
-
-
-def test_jsonl_roundtrip(small_df, tmp_path, spark):
-    """JSONL round-trip with explicit schema: values, types, and row count
-    survive; each line is a standalone JSON object."""
-    import json
-
-    out = str(tmp_path / "docs.jsonl")
-    write_jsonl(small_df, out)
-    lines = []
-    for f in glob.glob(f"{out}/part-*"):
-        lines += [l for l in open(f).read().splitlines() if l]
-    assert len(lines) == 3
-    assert all(isinstance(json.loads(l), dict) for l in lines)
-    back = read_jsonl(spark, out, schema=small_df.schema)
-    assert back.schema == small_df.schema
-    got = sorted(back.collect(), key=lambda r: r["CD_MUN"])
-    want = sorted(small_df.collect(), key=lambda r: r["CD_MUN"])
-    assert got == want
-
-
 def test_roundtrip_partitioned_read(small_df, tmp_path, spark):
     out = str(tmp_path / "by_state2")
     write_partitioned(small_df, out, "UF")
     back = spark.read.option("header", True).csv(out)
     assert back.count() == 3
     assert set(back.select("UF").distinct().toPandas()["UF"]) == {"AM", "PA"}
-
-
-def test_upsert_partitioned_touches_only_delta_partitions(spark, tmp_path):
-    """Dynamic partition overwrite: an upsert replaces exactly the
-    partitions in the delta — untouched partitions keep their rows AND
-    their physical files; re-running the same upsert is idempotent. (The
-    static mode would truncate every partition absent from the delta.)"""
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
-    from amazon_climate_data_etl_spark.sources.sinks import upsert_partitioned
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(y, i, float(i)) for y in (2001, 2002, 2003) for i in range(5)],
-        "year int, id int, v double",
-    )
-    upsert_partitioned(base, path)
-
-    files_2001_before = sorted(_glob.glob(f"{path}/year=2001/*.parquet"))
-    mtimes_before = [os.path.getmtime(f) for f in files_2001_before]
-
-    # delta: rewrite 2002 with DIFFERENT rows, add 2004
-    delta = spark.createDataFrame(
-        [(2002, i, float(i) * 10) for i in range(3)]
-        + [(2004, i, -1.0) for i in range(2)],
-        "year int, id int, v double",
-    )
-    upsert_partitioned(delta, path)
-
-    got = spark.read.parquet(path)
-    per_year = {
-        r["year"]: r["n"]
-        for r in got.groupBy("year").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert per_year == {2001: 5, 2002: 3, 2003: 5, 2004: 2}
-    assert got.filter("year = 2002").agg(F.sum("v")).collect()[0][0] == 30.0
-    # 2001's physical files were not rewritten
-    files_2001_after = sorted(_glob.glob(f"{path}/year=2001/*.parquet"))
-    assert files_2001_after == files_2001_before
-    assert [os.path.getmtime(f) for f in files_2001_after] == mtimes_before
-
-    # idempotent: same delta again -> same table
-    upsert_partitioned(delta, path)
-    assert spark.read.parquet(path).count() == 15
 
 
 def test_snapshot_versioning_roundtrip(spark, tmp_path):

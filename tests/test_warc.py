@@ -1,7 +1,7 @@
 """WARC ingest boundary: round trip, gzip member layouts, fail-loud
 malformed input, and the crawl → extract e2e (read_warc feeding
 html_boilerplate_extract's generic stage) — the source-boundary test
-pattern of test_arrow_ipc/test_zarr."""
+pattern of test_zarr."""
 
 from __future__ import annotations
 
