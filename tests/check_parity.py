@@ -1,11 +1,13 @@
 import sys, os, json, time
-sys.path.insert(0,'/root/repo'); os.chdir('/root/repo')
+# the checkout this script lives in, wherever it is copied to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT); os.chdir(ROOT)
 import importlib.util
-spec = importlib.util.spec_from_file_location('__spark_entry__','/root/repo/__spark_entry__.py')
+spec = importlib.util.spec_from_file_location('__spark_entry__', os.path.join(ROOT, '__spark_entry__.py'))
 m = importlib.util.module_from_spec(spec); spec.loader.exec_module(m)
 from tests.oracle_harness import duckdb_conn, compare_frames, exact_float_mismatches
 from amazon_climate_data_etl_spark.session import get_spark
-spark = get_spark(master='local[8]')
+spark = get_spark()
 sf = sys.argv[1] if len(sys.argv)>1 else '/root/testdata/sf0.01'
 only = [n for a in sys.argv[2:] for n in a.split(',')] or None
 Q, O = m.queries(), m.oracle_sql()

@@ -37,6 +37,20 @@ def jobs_started(spark, fn) -> int:
     return len(job_ids_started(spark, fn))
 
 
+def tasks_per_year(raw, years_of) -> dict[str, int]:
+    """``{"year=Y": n}``: how many tasks of the binaryFile scan ``raw`` hold
+    a file with rows of year Y, where ``years_of(path)`` names the years a
+    file decodes to — the number of Parquet files an ingest of ``raw``
+    writes into ``year=Y``."""
+    from pyspark.sql import functions as F
+
+    tasks: dict[str, set] = {}
+    for r in raw.select("path", F.spark_partition_id().alias("task")).collect():
+        for y in years_of(r.path):
+            tasks.setdefault(f"year={y}", set()).add(r.task)
+    return {k: len(v) for k, v in tasks.items()}
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -9,8 +9,10 @@ from datetime import date, timedelta
 
 import pandas as pd
 import pytest
-from conftest import jobs_started
+from conftest import jobs_started, tasks_per_year
 from pyspark.errors import PySparkException
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from amazon_climate_data_etl_spark.sources.ingest import (
     GRID_DAILY_SCHEMA,
@@ -22,43 +24,87 @@ from amazon_climate_data_etl_spark.sources.ingest import (
 )
 
 
-def test_binaryfile_mapinpandas_plumbing(spark, tmp_path):
-    """``_ingest_files``, the writer every grid ingest goes through, on a
-    fake decode: one decode per binaryFile row, the grid schema plus the
-    year partition column, and with ``shuffle=True`` one parquet file per
-    year although every task holds rows of both years."""
+def _fake_decode(start: date, fail_on: str | None = None):
+    """A decode that derives deterministic rows from the file size instead
+    of NetCDF bytes: one day per byte from ``start``, and a NaN in the
+    first row's ``value``. A file whose name ends in ``fail_on`` raises.
+    Nested so cloudpickle ships it by value (test modules aren't
+    importable from Python workers)."""
 
-    # nested so cloudpickle ships it by value (test modules aren't
-    # importable from Python workers)
-    def fake_decode(row) -> pd.DataFrame:
-        """Deterministic rows derived from the file size instead of
-        NetCDF bytes; the days run across a year end."""
+    def decode(row) -> pd.DataFrame:
+        if fail_on is not None and str(row.path).endswith(fail_on):
+            raise ValueError(f"undecodable {fail_on}")
         n = int(row.length)
         return pd.DataFrame(
             {
-                "date": [date(2001, 12, 28) + timedelta(days=i) for i in range(n)],
+                "date": [start + timedelta(days=i) for i in range(n)],
                 "lat": [-10.0 + 0.25 * (i % 4) for i in range(n)],
                 "lon": [-65.0 + 0.25 * (i % 4) for i in range(n)],
                 "var": ["Tmax"] * n,
-                "value": [28.0 + (i % 10) for i in range(n)],
+                "value": [float("nan")] + [28.0 + (i % 10) for i in range(1, n)],
             }
         )
 
-    src = tmp_path / "in"
-    src.mkdir()
-    for i in range(3):
-        (src / f"f{i}.nc").write_bytes(b"x" * (8 + i))
-    raw = spark.read.format("binaryFile").load(str(src / "*.nc"))
+    return decode
+
+
+def _binary_inputs(spark, d, sizes):
+    d.mkdir()
+    for i, n in enumerate(sizes):
+        (d / f"f{i}.nc").write_bytes(b"x" * n)
+    return spark.read.format("binaryFile").load(str(d / "*.nc"))
+
+
+def test_binaryfile_mapinpandas_plumbing(spark, tmp_path):
+    """``_ingest_files``, the writer every grid ingest goes through, on a
+    fake decode: one decode per binaryFile row, the grid schema plus an
+    int year partition column, a NaN ``value`` read back as null, and in
+    each year one parquet file per task that decoded rows of that year.
+    Every file's days run across a year end."""
+    raw = _binary_inputs(spark, tmp_path / "in", (8, 9, 10))
     out = tmp_path / "grid"
-    _ingest_files(spark, raw, fake_decode, str(out), shuffle=True)
+    written = _ingest_files(spark, raw, _fake_decode(date(2001, 12, 28)), str(out))
     grid = spark.read.parquet(str(out))
-    assert [f.name for f in grid.schema.fields] == [
-        "date", "lat", "lon", "var", "value", "year",
+    assert grid.schema == T.StructType(
+        [*GRID_DAILY_SCHEMA.fields, T.StructField("year", T.IntegerType())]
+    )
+    assert grid.count() == 8 + 9 + 10 == sum(n for _, n in written)
+    assert grid.filter(F.col("value").isNull()).count() == 3
+    assert grid.filter(F.isnan("value")).count() == 0
+    files = {d.name: len(list(d.glob("*.parquet"))) for d in out.glob("year=*")}
+    assert files == tasks_per_year(raw, lambda path: (2001, 2002))
+    assert sum(files.values()) == len(written)
+    assert sorted(p.name for p in out.iterdir()) == ["_SUCCESS", "year=2001", "year=2002"]
+
+
+def test_ingest_failure_keeps_output_and_overwrite_replaces(spark, tmp_path):
+    """A decode that raises on one of three files fails the call, leaves
+    no parquet of that call and no staging directory; the next ingest into
+    the same ``out_path`` replaces what is there, leaving only its own rows
+    and ``_SUCCESS``. The failing call decodes its files in one task, in
+    size order, so the two good files are staged before the third raises,
+    and no task of the failed job is still writing when its staging
+    directory is removed."""
+    out = tmp_path / "grid"
+    first = _binary_inputs(spark, tmp_path / "a", (3, 4))
+    _ingest_files(spark, first, _fake_decode(date(2001, 1, 1)), str(out))
+    kept = sorted(out.rglob("*.parquet"))
+    assert kept
+
+    raw = _binary_inputs(spark, tmp_path / "b", (5, 6, 7))
+    raw = raw.repartition(1).sortWithinPartitions("length")
+    with pytest.raises(PySparkException, match="undecodable f2.nc"):
+        _ingest_files(spark, raw, _fake_decode(date(2001, 1, 1), "f2.nc"), str(out))
+    assert sorted(out.rglob("*.parquet")) == kept
+    assert not (out / "_temporary").exists()
+
+    again = _binary_inputs(spark, tmp_path / "c", (2,))
+    _ingest_files(spark, again, _fake_decode(date(2005, 6, 1)), str(out))
+    assert sorted(p.name for p in out.iterdir()) == ["_SUCCESS", "year=2005"]
+    back = spark.read.parquet(str(out)).orderBy("date").collect()
+    assert [(str(r.date), r.year) for r in back] == [
+        ("2005-06-01", 2005), ("2005-06-02", 2005),
     ]
-    assert grid.count() == 8 + 9 + 10
-    files = {d.name: list(d.glob("*.parquet")) for d in out.glob("year=*")}
-    assert sorted(files) == ["year=2001", "year=2002"]
-    assert all(len(f) == 1 for f in files.values()), files
 
 
 def test_probe_coord_dims_variants():

@@ -15,6 +15,7 @@ import datetime as dt
 
 import numpy as np
 import pytest
+from conftest import tasks_per_year
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -400,8 +401,8 @@ def test_ingest_zarr_matches_netcdf_twin(spark, tmp_path):
     classic-NetCDF and the GeoTIFF (one raster per day) boundaries must
     produce identical relational frames — three independent decode stacks
     agreeing end-to-end. The days run across a year end, and the two
-    ingests that run one task per chunk or per day still write one
-    parquet file per year."""
+    ingests that run one task per chunk or per day write, in each year,
+    one parquet file per task that decoded rows of that year."""
     from amazon_climate_data_etl_spark.sources.geotiff_min import write_geotiff
     from amazon_climate_data_etl_spark.sources.ingest import (
         ingest_geotiff_to_parquet,
@@ -447,10 +448,29 @@ def test_ingest_zarr_matches_netcdf_twin(spark, tmp_path):
     assert len(zarr_rows) == cube.size
     assert zarr_rows == _ingested_rows(spark, str(out_n))
     assert zarr_rows == _ingested_rows(spark, str(out_g))
-    for out in (out_z, out_g):
-        files = {d.name: list(d.glob("*.parquet")) for d in out.glob("year=*")}
+
+    def chunk_years(path):
+        # a chunk key's first index is its time chunk, of 4 days
+        t = int(path.rsplit("/", 1)[-1].split(".")[0])
+        return {d.year for d in dates[4 * t : 4 * t + 4]}
+
+    def tif_years(path):
+        return {int(path.rsplit("tmax_", 1)[1][:4])}
+
+    chunks = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "{c.*,[0-9]*}")
+        .option("recursiveFileLookup", "true")
+        .load(str(store / "tmax"))
+    )
+    tif_files = spark.read.format("binaryFile").load(str(tifs / "*.tif"))
+    for out, raw, years_of in (
+        (out_z, chunks, chunk_years),
+        (out_g, tif_files, tif_years),
+    ):
+        files = {d.name: len(list(d.glob("*.parquet"))) for d in out.glob("year=*")}
         assert sorted(files) == ["year=2001", "year=2002"]
-        assert all(len(f) == 1 for f in files.values()), files
+        assert files == tasks_per_year(raw, years_of), files
 
 
 # --- Zarr v3 ----------------------------------------------------------------
